@@ -4,17 +4,19 @@ Why this exists (round-10 review): writing ZERO rows through
 ``partitionBy(...)`` produces a directory holding ``_SUCCESS`` but no
 parquet data files — every later read of it fails with
 UNABLE_TO_INFER_SCHEMA, wedging the store behind its own
-completed-build marker. Six store paths (ER index, IVF / near-dup ANN
-indexes, the SCD2 log fold, streaming ER, staging overwrite) each grew
-a bespoke guard for this; routing every partitioned store write
+completed-build marker. The store paths (ER index, IVF / near-dup ANN
+indexes, the SCD2 log fold, streaming ER) each grew a bespoke guard
+for this; routing every partitioned store write
 through :func:`write_partitioned` fixes the CLASS once, so the next
 partitioned write added to the codebase can't silently re-introduce
 the wedge.
 
 Division of labor: the empty POLICY stays at the call site — a
 one-shot index build fails loud before writing anything, a streaming
-fold skips the batch, the staging truncate removes the table — because
-those gates must fire BEFORE the write destroys or commits state. This
+fold skips the batch — because those gates must fire BEFORE the write
+destroys or commits state. (The staging store needs no gate: it stages
+every write under a temp dir with ``on_empty="skip"`` and only then
+commits, so a zero-row stage simply empties what it replaces.) This
 helper is the backstop underneath them: it detects a write that landed
 zero data files WITHOUT an extra Spark job (an O(partitions) local
 directory walk, vs ``isEmpty()``'s extra action per write — the wrong

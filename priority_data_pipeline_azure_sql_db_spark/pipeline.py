@@ -16,25 +16,29 @@ is a driver-side choice, not an engine limit.
 Staging store: parquet directories (local stand-in for the Azure SQL
 staging schema). A real deployment swaps ``StagingStore`` for
 ``df.write.jdbc(url, f"stg_{name}", mode=...)`` with
-``ddl.jdbc_column_types`` — same call shape. Writes are atomic via
-write-to-temp + rename, so a failed write never corrupts the table
-(to_sql append had no such story).
+``ddl.jdbc_column_types`` — same call shape. Every store write —
+overwrite, both MERGE forms, compaction — takes one commit path: stage
+the complete replacement under ``<table>.__tmp__``, then write an
+intent marker and swap it in. A write that fails while staging leaves
+the live table and its stats untouched; a crash after the intent rolls
+forward on the next access (to_sql append had no such story).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import primary_key
 from .config import EntityConfig, ExtractionConfig
-from .operators.store_io import _has_data_files, write_partitioned
+from .operators.store_io import write_partitioned
 from .operators.flatten import flatten_expand
 from .operators.merge import merge_upsert
 from .operators.normalize import (
@@ -68,6 +72,16 @@ class StagingStore:
     incremental run moves O(delta + matched partitions), never the whole
     table. Tables without audit columns fall back to the unpartitioned
     whole-table form.
+
+    ONE commit protocol for every write (:meth:`_stage` then
+    :meth:`_commit`): the complete replacement of some subs — touched
+    partition dirs, or ``""`` for the whole table — is written under
+    the sibling ``<table>.__tmp__`` (its row count observed on that same
+    write), then an intent marker naming the subs and the post-write
+    stats sidecar is written, the subs are swapped in idempotently, the
+    sidecar is set and the marker cleared. Before the marker nothing
+    live has changed; after it, :meth:`_recover` rolls the swap forward
+    on the next read or write.
     """
 
     root: str
@@ -77,6 +91,31 @@ class StagingStore:
 
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.path(table))
+
+    def _tmp_path(self, table: str) -> str:
+        return self.path(table) + ".__tmp__"
+
+    @staticmethod
+    def _load_json(path: str):
+        try:
+            with open(path) as fh:
+                return json.load(fh)
+        except (OSError, ValueError):
+            return None
+
+    @staticmethod
+    def _dump_json(path: str, obj) -> None:
+        """Atomically replace ``path`` with ``obj`` (never a torn
+        file); ``None`` removes it."""
+        if obj is None:
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+            return
+        with open(path + ".part", "w") as fh:
+            json.dump(obj, fh)
+        os.replace(path + ".part", path)
 
     # -- partition-stats sidecar (round 13, VERDICT r12 ask #2) ----------
     # Per-partition pk min/max + row counts in `<table>.__meta__.json`:
@@ -91,7 +130,7 @@ class StagingStore:
     # merge already paid every time), and every later merge recomputes
     # the touched partitions' entries from the data it just wrote. Row
     # counts make the merge's return value an O(touched) sum instead of
-    # a store-wide count. Crash-safe: the post-merge meta rides inside
+    # a store-wide count. Crash-safe: the post-write meta rides inside
     # the intent marker, so _recover's roll-forward lands the stats with
     # the swap — stale stats would silently mis-prune (the mirror of the
     # SCD2 store's n_log_buckets guard).
@@ -103,27 +142,10 @@ class StagingStore:
         return self.path(table) + ".__meta__.json"
 
     def _read_meta(self, table: str) -> dict | None:
-        import json
+        return self._load_json(self._meta_path(table))
 
-        try:
-            with open(self._meta_path(table)) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
-
-    def _write_meta(self, table: str, meta: dict) -> None:
-        import json
-
-        p = self._meta_path(table)
-        with open(p + ".part", "w") as fh:
-            json.dump(meta, fh)
-        os.replace(p + ".part", p)
-
-    def _clear_meta(self, table: str) -> None:
-        try:
-            os.remove(self._meta_path(table))
-        except FileNotFoundError:
-            pass
+    def _write_meta(self, table: str, meta: dict | None) -> None:
+        self._dump_json(self._meta_path(table), meta)
 
     @classmethod
     def _part_sub(cls, v) -> str:
@@ -389,7 +411,7 @@ class StagingStore:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Read a staging table. The partition column is an internal layout
         detail and is dropped — readers see exactly what was staged."""
-        # roll forward any crashed merge swap before reading — a reader
+        # roll forward any crashed commit before reading — a reader
         # must never see the mid-swap state (partition deleted, its
         # replacement still in tmp)
         self._recover(table)
@@ -401,36 +423,24 @@ class StagingStore:
 
     def overwrite(self, df: DataFrame, table: str,
                   pk: list[str] | None = None) -> int:
-        """Full replace. With ``pk`` given, the partition-stats sidecar
-        is built in the same pass (one extra pk-column scan of what was
-        just written), so the FIRST incremental merge already prunes;
-        without it, the first merge bootstraps the stats lazily."""
-        self._recover(table)  # settle any crashed merge before replacing
-        self._clear_meta(table)  # stale stats must not survive a replace
+        """Full replace, staged and committed like every other write: a
+        source that fails mid-write leaves the old table and sidecar in
+        place. With ``pk`` given, the partition-stats sidecar is built
+        from the staged files (one pk-column scan), so the FIRST
+        incremental merge already prunes; without it, the first merge
+        bootstraps the stats lazily. A zero-row audit-stamped replace
+        removes the table (``exists()`` False is the staging "empty"
+        signal): a partitioned dir with no parquet files would wedge
+        every later read with UNABLE_TO_INFER_SCHEMA."""
+        self._recover(table)
         part = self._with_partition(df)
-        if part is not None:
-            if df.isEmpty():
-                # a partitionBy write of zero rows leaves a table dir
-                # with _SUCCESS but NO parquet files — the immediate
-                # _count and every later read/merge fails with
-                # UNABLE_TO_INFER_SCHEMA, wedging the table (round-10
-                # review finding, same class as the SCD2/ER stores).
-                # Truncate semantics without the wedge: remove the
-                # table; exists()=False is the staging "empty" signal,
-                # and the next non-empty load creates it cleanly.
-                shutil.rmtree(self.path(table), ignore_errors=True)
-                return 0
-            write_partitioned(part, self.path(table), [PARTITION_COL],
-                              what=f"staging table {table}")
-            if pk:
-                spark = df.sparkSession
-                back = spark.read.parquet(self.path(table))
-                parts = self._partition_stats(back, pk)
-                self._write_meta(table, {"pk": pk, "parts": parts})
-                return sum(st["rows"] for st in parts.values())
-        else:
-            df.write.mode("overwrite").parquet(self.path(table))
-        return self._count(df.sparkSession, table)
+        n = self._stage(df if part is None else part, table)
+        meta = None
+        if pk and part is not None and os.path.isdir(self._tmp_path(table)):
+            meta = {"pk": pk, "parts": self._partition_stats(
+                df.sparkSession.read.parquet(self._tmp_path(table)), pk)}
+        self._commit(table, [""], meta)
+        return n
 
     def merge(self, spark: SparkSession, delta: DataFrame, table: str, pk: list[str]) -> int:
         """MERGE-upsert delta into the staging table (O13 incremental path,
@@ -438,10 +448,11 @@ class StagingStore:
 
         Touched = partitions the delta writes into ∪ partitions still
         holding an old version of a delta PK (found with a column-pruned
-        PK semi-join — a cheap scan, not a rewrite). Each touched partition
-        is replaced via write-to-temp + directory swap, so readers never
-        see a half-written partition; untouched partitions' files are never
-        opened, let alone rewritten. The driver-side ``collect`` holds
+        PK semi-join — a cheap scan, not a rewrite — in the same collect
+        as the delta's own partition values). The merged touched
+        partitions are staged and committed together, so readers never
+        see a half-written partition; untouched partitions' files are
+        never opened, let alone rewritten. The ``collect`` returns
         partition VALUES (load dates) — partition metadata, not data.
 
         MERGE SEMANTICS — GROUP-replace, not row-replace (round-11
@@ -468,61 +479,34 @@ class StagingStore:
         )
         dpart = self._with_partition(delta)
         if not partitioned or dpart is None:
-            raw = spark.read.option("mergeSchema", "true") \
-                .parquet(self.path(table))
-            self._clear_meta(table)  # whole-table path invalidates stats
-            # legacy unpartitioned table: whole-table merge + swap.
-            # rename-aside, NEVER rmtree-before-replace: a crash between
-            # delete and replace would leave the only copy of the table
-            # in a tmp dir the next merge's overwrite clobbers — rows
-            # never re-sent by a later delta would be lost for good.
-            # The intent marker makes every crash window roll FORWARD
-            # (_recover): tmp is complete before the marker exists.
-            target = raw.drop(PARTITION_COL) if PARTITION_COL in raw.columns else raw
-            target, delta = align_schemas(target, delta)  # schema evolution
-            merged = merge_upsert(target, delta, pk)
-            tmp = self.path(table) + ".__tmp__"
-            merged.write.mode("overwrite").parquet(tmp)
-            final, old = self.path(table), self.path(table) + ".__old__"
-            self._write_intent(table, {"kind": "table"})
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(final):
-                os.replace(final, old)
-            os.replace(tmp, final)
-            shutil.rmtree(old, ignore_errors=True)
-            self._clear_intent(table)
-            return self._count(spark, table)
+            # whole-table form: the merged table is the staged
+            # replacement of sub "" (schema evolution: align to the union)
+            target, delta = align_schemas(self.read(spark, table), delta)
+            n = self._stage(merge_upsert(target, delta, pk), table)
+            self._commit(table, [""], None)  # whole-table path drops stats
+            return n
 
-        delta_keys = dpart.select(*pk).distinct()
         meta = self._read_meta(table)
-        if meta is not None and meta.get("pk") != pk:
-            # merge key changed under the stats: the zone maps are keyed
-            # to the OLD pk[0] — rebuild below rather than mis-prune
-            meta = None
-        if meta is None:
-            # stats bootstrap: the one full pk-column scan, folded into
-            # the merge that already paid it before round 13; every
-            # later merge prunes with the sidecar this pass writes
-            raw = spark.read.option("mergeSchema", "true") \
+        if meta is None or meta.get("pk") != pk:
+            # stats bootstrap (or the merge key changed under the stats,
+            # whose zone maps are keyed to the OLD pk): the one full
+            # pk-column scan; every later merge prunes with the sidecar
+            # this pass writes
+            probe = spark.read.option("mergeSchema", "true") \
                 .parquet(self.path(table))
-            boot_parts = self._partition_stats(raw, pk)
-            old_vals = {
-                r[0] for r in raw.join(delta_keys, on=pk, how="left_semi")
-                .select(PARTITION_COL).distinct().collect()
-            }
+            parts = self._partition_stats(probe, pk)
         else:
-            boot_parts = dict(meta["parts"])
-            cand = self._prune_candidates(
-                boot_parts, self._delta_profile(delta, pk))
-            cand_df = self._read_subs(spark, table, cand)
-            old_vals = set() if cand_df is None else {
-                r[0] for r in
-                cand_df.join(delta_keys, on=pk, how="left_semi")
-                .select(PARTITION_COL).distinct().collect()
-            }
-        new_vals = {r[0] for r in dpart.select(PARTITION_COL).distinct().collect()}
-        touched = old_vals | new_vals
-        subs = [self._part_sub(v) for v in touched]
+            parts = meta["parts"]
+            probe = self._read_subs(spark, table, self._prune_candidates(
+                parts, self._delta_profile(delta, pk)))
+        touched = dpart.select(PARTITION_COL)
+        if probe is not None:
+            # cast: partition inference may type an all-null column as
+            # string; the delta side is always a date
+            touched = probe.join(dpart.select(*pk).distinct(), on=pk,
+                                 how="left_semi") \
+                .select(F.col(PARTITION_COL).cast("date")).unionByName(touched)
+        subs = [self._part_sub(r[0]) for r in touched.distinct().collect()]
         # merge target: direct-path read of ONLY the touched partitions
         # (subs absent on disk hold nothing to merge against)
         target_df = self._read_subs(spark, table, subs)
@@ -531,73 +515,70 @@ class StagingStore:
         # schema evolution: widen both sides to the column union (new
         # source fields survive; dropped fields read back as nulls)
         target, delta = align_schemas(target, delta)
-        merged = merge_upsert(target, delta, pk)
-        tmp = self.path(table) + ".__tmp__"
-        self._with_partition(merged).write.mode("overwrite") \
-            .partitionBy(PARTITION_COL).parquet(tmp)
+        self._stage(self._with_partition(merge_upsert(target, delta, pk)), table)
         # recompute the touched partitions' zone maps from the bytes
-        # just written (O(touched)); untouched entries carry over. An
-        # EMPTY merged frame (empty delta / every touched partition
-        # emptied) leaves tmp with _SUCCESS but no parquet files —
-        # reading it back would raise UNABLE_TO_INFER_SCHEMA; there is
-        # nothing to restat, the touched entries simply drop out.
-        new_parts = {s: st for s, st in boot_parts.items() if s not in set(subs)}
-        if _has_data_files(tmp):
+        # just staged (O(touched)); untouched entries carry over. An
+        # empty merged frame stages nothing: the touched entries drop out.
+        new_parts = {s: st for s, st in parts.items() if s not in subs}
+        if os.path.isdir(self._tmp_path(table)):
             new_parts.update(self._partition_stats(
-                spark.read.parquet(tmp), pk))
-        new_meta = {"pk": pk, "parts": new_parts}
-        # intent AFTER tmp is complete, swaps after the intent: any
-        # crash from here rolls FORWARD in _recover (the partition swap
-        # is re-applied idempotently from tmp), so no window leaves a
-        # live partition deleted with its replacement stranded in tmp —
-        # the data-loss class compact() was already hardened against.
-        # The post-merge stats ride in the intent: _recover lands them
-        # WITH the swap, so a crash can never leave stats that mis-prune
-        # a later merge.
-        # record WHICH subs tmp holds data for: on a replay, a data sub
-        # with no tmp source was already swapped (skip it) while an
-        # empty sub is re-deleted (idempotent) — without the split, a
-        # mid-swap crash replay would mistake a swapped sub for an
-        # emptied one and delete the just-committed new data
-        subs_data = [s for s in subs if os.path.isdir(os.path.join(tmp, s))]
-        subs_empty = [s for s in subs if s not in set(subs_data)]
-        self._write_intent(
-            table, {"kind": "parts", "data": subs_data, "empty": subs_empty,
-                    "meta": new_meta},
-        )
-        self._apply_part_swap(table, subs_data, subs_empty)
-        self._write_meta(table, new_meta)
-        self._clear_intent(table)
+                spark.read.parquet(self._tmp_path(table)), pk))
+        self._commit(table, subs, {"pk": pk, "parts": new_parts})
         # O(touched) total: per-partition row counts summed from the
         # sidecar instead of a store-wide count per merge
         return sum(st["rows"] for st in new_parts.values())
 
+    def _stage(self, df: DataFrame, table: str, cluster: bool = False) -> int:
+        """Write ``df`` — the complete replacement of every sub it holds
+        — under ``<table>.__tmp__``, hive-partitioned when it carries
+        PARTITION_COL. Returns its row count, observed on the write
+        itself (no second Spark job). A zero-row partitioned write
+        leaves no tmp dir (every sub it covers is then emptied)."""
+        rows = Observation()
+        df = df.observe(rows, F.count(F.lit(1)).alias("n"))
+        tmp = self._tmp_path(table)
+        # an earlier failed stage's debris must not ride along (a
+        # dynamic-partition-overwrite session would keep its subs)
+        shutil.rmtree(tmp, ignore_errors=True)
+        if PARTITION_COL in df.columns:
+            write_partitioned(df, tmp, [PARTITION_COL], on_empty="skip",
+                              cluster=cluster)
+        else:
+            df.write.mode("overwrite").parquet(tmp)
+        return rows.get["n"]
+
+    def _commit(self, table: str, subs: list[str], meta: dict | None) -> None:
+        """Swap the staged ``subs`` in. The intent records WHICH subs tmp
+        holds data for: on a replay, a data sub with no tmp source was
+        already swapped (skip it) while an empty sub is re-deleted
+        (idempotent) — without the split, a mid-swap crash replay would
+        mistake a swapped sub for an emptied one and delete the
+        just-committed data. ``meta`` (the post-write stats sidecar, or
+        None to drop it) rides in the intent so the stats land WITH the
+        swap and can never mis-prune a later merge."""
+        tmp = self._tmp_path(table)
+        data = [s for s in subs if os.path.isdir(os.path.join(tmp, s))]
+        empty = [s for s in subs if s not in data]
+        self._write_intent(table, {"data": data, "empty": empty, "meta": meta})
+        self._apply_part_swap(table, data, empty)
+        self._write_meta(table, meta)
+        self._write_intent(table, None)
+
     def _intent_path(self, table: str) -> str:
-        # sibling of the table dir: survives whole-table renames
+        # sibling of the table dir: survives whole-table swaps
         return self.path(table) + ".__intent__.json"
 
-    def _write_intent(self, table: str, payload: dict) -> None:
-        import json
-
-        p = self._intent_path(table)
-        with open(p + ".part", "w") as fh:
-            json.dump(payload, fh)
-        os.replace(p + ".part", p)  # atomic: never a torn marker
-
-    def _clear_intent(self, table: str) -> None:
-        try:
-            os.remove(self._intent_path(table))
-        except FileNotFoundError:
-            pass
+    def _write_intent(self, table: str, payload: dict | None) -> None:
+        self._dump_json(self._intent_path(table), payload)
 
     def _apply_part_swap(
         self, table: str, subs_data: list[str], subs_empty: list[str]
     ) -> None:
-        """Idempotently swap touched partitions in from tmp. ``subs_data``
-        have a tmp source (none present on a replay → already swapped,
-        skip); ``subs_empty`` were emptied by the merge (re-deleting is
-        a no-op)."""
-        final, tmp = self.path(table), self.path(table) + ".__tmp__"
+        """Idempotently swap staged subs in from tmp (``""`` = the whole
+        table dir). ``subs_data`` have a tmp source (none present on a
+        replay → already swapped, skip); ``subs_empty`` were emptied by
+        the write (re-deleting is a no-op)."""
+        final, tmp = self.path(table), self._tmp_path(table)
         for sub in subs_data:
             src, dst = os.path.join(tmp, sub), os.path.join(final, sub)
             if os.path.isdir(src):
@@ -608,53 +589,21 @@ class StagingStore:
         shutil.rmtree(tmp, ignore_errors=True)
 
     def _recover(self, table: str) -> None:
-        """Roll a crashed merge forward (idempotent; called before every
-        merge and read). No intent marker → any leftover tmp/old dirs
-        are pre-intent debris from an incomplete merge write: discard
-        them (the merge never committed; the live table is intact)."""
-        import json
-
-        final = self.path(table)
-        tmp, old = final + ".__tmp__", final + ".__old__"
-        marker = self._intent_path(table)
-        if not os.path.exists(marker):
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return
-        try:
-            with open(marker) as fh:
-                intent = json.load(fh)
-        except (OSError, ValueError):
-            intent = None
+        """Roll a crashed commit forward (idempotent; called before every
+        write and read). No intent marker → nothing live changed: a
+        leftover tmp is an unfinished (or in-flight) stage that the next
+        write replaces, never read and never deleted here."""
+        intent = self._load_json(self._intent_path(table))
         if intent is None:
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            self._clear_intent(table)
             return
-        if intent.get("kind") == "table":
-            if os.path.isdir(tmp):
-                # tmp is complete (the intent is written after it) —
-                # finish the swap from wherever the crash left it
-                if os.path.isdir(final):
-                    shutil.rmtree(old, ignore_errors=True)
-                    os.replace(final, old)
-                os.replace(tmp, final)
-            elif not os.path.isdir(final) and os.path.isdir(old):
-                # defensive (unreachable in the protocol: final only
-                # goes missing while tmp still exists): restore the
-                # pre-merge table rather than leave nothing
-                os.replace(old, final)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            self._apply_part_swap(
-                table, intent.get("data", []), intent.get("empty", [])
-            )
-            if intent.get("meta") is not None:
-                # the post-merge partition stats committed with the swap:
-                # rolling the swap forward without them would leave zone
-                # maps that mis-prune the next merge's old-version probe
-                self._write_meta(table, intent["meta"])
-        self._clear_intent(table)
+        # a marker written before the single protocol ({"kind":
+        # "table"}, whole-table rename-aside) names no subs: "" replays
+        # it as the whole-table swap; its aside copy is then debris
+        self._apply_part_swap(
+            table, intent.get("data", [""]), intent.get("empty", []))
+        shutil.rmtree(self.path(table) + ".__old__", ignore_errors=True)
+        self._write_meta(table, intent.get("meta"))
+        self._write_intent(table, None)
 
     def drop_all(self) -> int:
         """O17: drop every staging table."""
@@ -663,9 +612,6 @@ class StagingStore:
         n = len(os.listdir(self.root))
         shutil.rmtree(self.root)
         return n
-
-    def _count(self, spark: SparkSession, table: str) -> int:
-        return self.read(spark, table).count()
 
     def compact(
         self, spark: SparkSession, table: str,
@@ -678,73 +624,38 @@ class StagingStore:
         with the writer's parallelism and a year of daily deltas turns
         the table into thousands of KB-files (open/footer overhead
         dominates scans long before data size does). Data-identical by
-        construction (read → coalesce → rewrite); each partition swaps
-        via write-tmp + two renames, so readers never see a half state;
-        partitions within budget are never opened. Returns partitions
-        rewritten — 0 means the pass was a no-op (idempotent).
-
-        Staging discipline (round-9 fix): both the tmp write and the
-        displaced old copy live under underscore-prefixed CONTAINER
-        dirs (``_compact_tmp/<part>`` / ``_compact_old/<part>``) inside
-        the parent — Spark's hidden-path filter skips ``_``/``.``
-        prefixed names *unless they contain '='*, so the container
-        (whose name has no '=') hides the whole subtree even though the
-        partition dirs inside it keep their ``col=value`` names; a
-        concurrent partition-discovery reader never sees the staged
-        copy as a bogus partition value and never reads duplicated rows
-        (the previous ``<part>.__compact__`` sibling violated exactly
-        that — and a bare ``_<part>.__compact__`` underscore rename
-        would NOT fix it, because the name still contains '=').
-        Crash safety: the swap is rename(src → old) then rename(tmp →
-        src) then delete old — no rmtree-before-replace window where
-        the data exists nowhere; a crash between the renames leaves the
-        full copy under the hidden ``_compact_old/`` container for
-        manual recovery instead of losing the partition."""
-
-        def squash(src_dir: str) -> None:
-            df = spark.read.parquet(src_dir)
-            parent, base = os.path.split(src_dir)
-            tmp_root = os.path.join(parent, "_compact_tmp")
-            old_root = os.path.join(parent, "_compact_old")
-            tmp, old = os.path.join(tmp_root, base), os.path.join(old_root, base)
-            df.coalesce(max_files_per_partition).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            shutil.rmtree(old, ignore_errors=True)  # stale crash leftover
-            os.makedirs(old_root, exist_ok=True)
-            os.replace(src_dir, old)
-            os.replace(tmp, src_dir)
-            shutil.rmtree(old, ignore_errors=True)
-            for d in (tmp_root, old_root):  # drop empty containers
-                try:
-                    os.rmdir(d)
-                except OSError:
-                    pass
+        construction: the over-budget partitions are read and restaged
+        clustered on the partition value (one file each), or coalesced
+        for the unpartitioned form, then committed through the same
+        stage-and-swap as every write — crash-safe, and readers never
+        see a half state or a staged copy (tmp is a sibling of the
+        table dir). The stats sidecar carries over unchanged.
+        Partitions within budget are never opened. Returns partitions
+        rewritten — 0 means the pass was a no-op (idempotent)."""
 
         def n_files(d: str) -> int:
             return sum(1 for f in os.listdir(d) if f.startswith("part-"))
 
+        self._recover(table)
         final = self.path(table)
-        subs = [
-            p for p in os.listdir(final)
-            if p.startswith(f"{PARTITION_COL}=")
-            and os.path.isdir(os.path.join(final, p))
-        ]
-        if not subs:  # unpartitioned fallback form
-            if n_files(final) <= max_files_per_partition:
-                return 0
-            squash(final)
-            return 1
-        done = 0
-        for sub in subs:
-            pdir = os.path.join(final, sub)
-            if n_files(pdir) > max_files_per_partition:
-                squash(pdir)
-                done += 1
-        return done
+        subs = [p for p in os.listdir(final)
+                if p.startswith(f"{PARTITION_COL}=")]
+        if subs:
+            over = [s for s in subs
+                    if n_files(os.path.join(final, s)) > max_files_per_partition]
+        else:  # unpartitioned form
+            over = [""] if n_files(final) > max_files_per_partition else []
+        if not over:
+            return 0
+        staged = (self._read_subs(spark, table, over) if subs else
+                  self.read(spark, table).coalesce(max_files_per_partition))
+        self._stage(staged, table, cluster=True)
+        self._commit(table, over, self._read_meta(table))
+        return len(over)
 
 
 AUDIT_EXCLUDE = (AUDIT_ID_COL, AUDIT_TS_COL)
+CHANGE_TYPES = ("inserted", "updated", "unchanged", "deleted")
 
 
 def cdc_audit_delta(
@@ -952,18 +863,18 @@ class PipelineRunner:
                                 self.spark, table, df, key),
                             df, key,
                         )
+                        # change-type tallies observed on the audit's
+                        # own write, not re-read from it afterwards
+                        tally = Observation()
+                        audit = audit.observe(tally, *[
+                            F.sum((F.col("change_type") == t).cast("int"))
+                            .alias(t) for t in CHANGE_TYPES])
                         # materialize the audit BEFORE the merge swaps
                         # the table's partition dirs out from under it
                         self.store.overwrite(audit, f"{table}__cdc")
                         if result is not None:
                             result.cdc[table] = {
-                                r["change_type"]: r["n"]
-                                for r in self.store.read(
-                                    self.spark, f"{table}__cdc"
-                                ).groupBy("change_type")
-                                .agg(F.count(F.lit(1)).alias("n"))
-                                .collect()
-                            }
+                                t: n for t, n in tally.get.items() if n}
                     except Exception as exc:  # advisory: never block the load
                         if result is not None:
                             # ACCUMULATE per table — a scalar overwrite

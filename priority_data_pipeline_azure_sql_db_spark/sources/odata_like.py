@@ -207,11 +207,14 @@ def odata_filter_string(
     return " and ".join(parts) if parts else None
 
 
+_SUBFORM_SUFFIX = "_subform"
+
+
 def _subform_field(child: str) -> str:
     """Reference naming: $expand param and response key are
     ``<CHILD>_SUBFORM`` (priorityDataSource.py:699-701); the engine
     lowercases identifiers (O9)."""
-    return f"{child.lower()}_subform"
+    return f"{child.lower()}{_SUBFORM_SUFFIX}"
 
 
 class ODataLikeDataSource(DataSource):
@@ -366,9 +369,14 @@ class ODataLikeReader(DataSourceReader):
 
     def pushFilters(self, filters: list[Filter]):
         """Accept simple comparisons (served source-side); yield back the
-        rest for Spark to evaluate."""
+        rest for Spark to evaluate. Filters on an expanded
+        ``<child>_subform`` column always yield back: it is the
+        connector's rendering of ``$expand``, not a property of the
+        entity set, so a strict service answers 400 to ``$filter`` on it
+        (Catalyst infers ``IsNotNull`` on it below every explode)."""
         for f in filters:
-            if isinstance(f, _SUPPORTED) and len(f.attribute) == 1:
+            if (isinstance(f, _SUPPORTED) and len(f.attribute) == 1
+                    and not f.attribute[0].lower().endswith(_SUBFORM_SUFFIX)):
                 op = type(f).__name__
                 value = getattr(f, "value", None)
                 # only accept values we can render as OData literals —

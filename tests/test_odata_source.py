@@ -130,8 +130,9 @@ _NATION_EDMX = """<?xml version="1.0" encoding="utf-8"?>
 class _FakeODataServer:
     """Minimal but protocol-STRICT OData v4 server over the
     nation/supplier fixture rows: $metadata, $count, $skip/$top paging,
-    numeric $filter (ge/gt/le/lt/eq), $select,
-    $expand=SUPPLIER_SUBFORM, Basic-auth check, an optional one-shot
+    numeric $filter (ge/gt/le/lt/eq) that answers 400 on a property the
+    entity set lacks, $select, $expand=SUPPLIER_SUBFORM, Basic-auth
+    check, an optional one-shot
     500 / 429 to exercise retry, and optional SERVER-DRIVEN paging
     (every response truncated to ``server_page`` rows + an
     @odata.nextLink continuation — the round-11 protocol review's
@@ -195,6 +196,8 @@ class _FakeODataServer:
                 if filt:
                     for clause in filt.split(" and "):
                         col, op, val = clause.split(" ", 2)
+                        if col not in rows[0]:
+                            return self._send(400, '{"error": "unknown property"}')
                         if op == "ne" and val == "null":
                             out = [r for r in out if r.get(col) is not None]
                             continue
@@ -460,6 +463,49 @@ def test_odata_push_filters_reject_unrenderable():
     rejected = list(r.pushFilters([EqualTo(("blob",), b"\x00bytes")]))
     assert len(rejected) == 1
     assert r.accepted == []
+
+
+def test_odata_push_filters_yield_back_subform_columns():
+    """An expanded ``<child>_subform`` column is the connector's
+    rendering of $expand, not an entity-set property: every filter on
+    it yields back to Spark instead of rendering into $filter."""
+    from pyspark.sql.datasource import EqualTo, IsNotNull
+
+    from priority_data_pipeline_azure_sql_db_spark.sources.odata_like import ODataLikeReader
+
+    r = ODataLikeReader({"uri": "http://x", "entity": "orders"}, None)
+    rejected = list(r.pushFilters([
+        IsNotNull(("lineitem_subform",)),
+        IsNotNull(("LINEITEM_SUBFORM",)),
+        EqualTo(("o_orderkey",), 7),
+    ]))
+    assert [f.attribute for f in rejected] == [
+        ("lineitem_subform",), ("LINEITEM_SUBFORM",)]
+    assert r.accepted == [("o_orderkey", "EqualTo", 7)]
+
+
+def test_http_explode_subform_filters_name_no_subform(spark):
+    """explode_subform over an HTTP $expand read: Catalyst infers
+    IsNotNull(supplier_subform) below the explode. It must not reach
+    $filter — the strict server answers 400 on it — and the exploded
+    child rows must all arrive."""
+    from priority_data_pipeline_azure_sql_db_spark.operators.flatten import explode_subform
+
+    srv = _FakeODataServer(_NATION_ROWS, _SUPPLIER_ROWS)
+    try:
+        nested = _http_read(spark, srv.uri, expand="supplier") \
+            .filter(F.col("n_nationkey") >= 5)
+        child = explode_subform(nested, ["n_nationkey"], "supplier_subform")
+        got = sorted((r.n_nationkey, r.s_suppkey) for r in child.collect())
+        assert got == sorted(
+            (c["s_nationkey"], c["s_suppkey"]) for c in _SUPPLIER_ROWS
+            if c["s_nationkey"] >= 5)
+        filters = [p[1]["$filter"] for p in srv.requests if "$filter" in p[1]]
+        assert filters and all("n_nationkey ge 5" in f for f in filters)
+        assert not any("_subform" in c.split(" ")[0].lower()
+                       for f in filters for c in f.split(" and "))
+    finally:
+        srv.close()
 
 
 def test_odata_keyless_entity_single_partition():

@@ -775,18 +775,13 @@ def test_staging_compact_small_files(spark, sf_dir, tmp_path):
 
 
 def test_staging_compact_tmp_invisible_to_readers(spark, sf_dir, tmp_path):
-    """Round-9 ADVICE fix: compaction's staging dirs must be invisible
-    to Spark's partition discovery. A reader racing the compactor may
-    see the parent dir with the staged copy present — the
-    underscore-prefixed container dirs (no '=' in their names) make
-    Spark's hidden-path filter skip the whole subtree, so the reader
-    sees each row exactly once (the old `<part>.__compact__` sibling
-    was discovered as a bogus partition VALUE and duplicated rows; note
-    a bare underscore rename would NOT work — names containing '=' are
-    exempt from the hidden filter, which this test's partition column
-    `_load_date` itself relies on). Also pins crash recovery: stale
-    `_compact_tmp`/`_compact_old` leftovers neither break reads nor
-    block the next compact pass."""
+    """Compaction's staged copy must be invisible to readers. A compact
+    pass that dies while staging (before its commit writes an intent)
+    leaves a copy of the partition under ``<table>.__tmp__``; that dir
+    is a sibling of the table dir, so partition discovery never sees it
+    and a reader sees each row exactly once (no bogus partition value,
+    no duplicated rows). The next compact pass replaces the leftover
+    stage, commits, and stays data-identical."""
     import os
     import shutil
 
@@ -806,22 +801,146 @@ def test_staging_compact_tmp_invisible_to_readers(spark, sf_dir, tmp_path):
     store.overwrite(o.repartition(4), "orders")
     root = store.path("orders")
     part = next(p for p in os.listdir(root) if p.startswith(f"{PARTITION_COL}="))
-    pdir = os.path.join(root, part)
 
-    # simulate the mid-compaction state: staged tmp AND displaced old
-    # copy both present alongside the live partition
-    shutil.copytree(pdir, os.path.join(root, "_compact_tmp", part))
-    shutil.copytree(pdir, os.path.join(root, "_compact_old", part))
-    n_live = store.read(spark, "orders").count()
-    assert n_live == 200  # hidden containers ignored: no duplicated rows
+    # simulate the mid-compaction state: the staged copy of the live
+    # partition present, no intent written yet
+    shutil.copytree(os.path.join(root, part),
+                    os.path.join(store._tmp_path("orders"), part))
+    assert not os.path.exists(store._intent_path("orders"))
+    assert store.read(spark, "orders").count() == 200  # no duplicated rows
 
-    # and the next compact pass recovers: clears leftovers, stays
-    # data-identical
     before = sorted(r["o_orderkey"] for r in store.read(spark, "orders").collect())
     assert store.compact(spark, "orders", max_files_per_partition=1) == 1
-    assert not any(p.startswith("_compact_") for p in os.listdir(root))
+    assert not os.path.exists(store._tmp_path("orders"))
+    assert sum(f.startswith("part-")
+               for f in os.listdir(os.path.join(root, part))) == 1
     after = sorted(r["o_orderkey"] for r in store.read(spark, "orders").collect())
     assert after == before
+
+
+def _stamp(df, stamped=True):
+    """Replace ``df``'s ``day`` column with the audit timestamp of
+    2026-01-<day> (its load-date partition); unstamped rows just lose
+    it and stage as the unpartitioned whole-table form."""
+    from pyspark.sql import functions as F
+
+    if stamped:
+        df = df.withColumn("extractiontimestamputc", F.make_timestamp(
+            F.lit(2026), F.lit(1), "day", F.lit(12), F.lit(0), F.lit(0)))
+    return df.drop("day")
+
+
+def _stamped(spark, rows, stamped=True):
+    return _stamp(spark.createDataFrame(rows, "pk bigint, v string, day int"),
+                  stamped)
+
+
+@pytest.mark.parametrize("stamped", [True, False],
+                         ids=["partitioned_pk", "unpartitioned"])
+def test_failed_overwrite_keeps_old_table(spark, tmp_path, stamped):
+    """A source that fails in the middle of an overwrite (say, an HTTP
+    error during the extract; here a raising UDF) leaves the old rows
+    readable and the old stats sidecar in place: the replacement is
+    staged, never delete-then-write. A later overwrite still lands."""
+    from pyspark.sql import functions as F
+
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
+
+    store = StagingStore(str(tmp_path / "stg"))
+    pk = ["pk"] if stamped else None
+    old = [(i, f"old{i}", 1 + i % 2) for i in range(20)]
+    store.overwrite(_stamped(spark, old, stamped), "t", pk=pk)
+    meta = store._read_meta("t")
+    assert (meta is not None) == stamped
+
+    @F.udf("string")
+    def source_fails_at_row_15(pk):
+        if pk == 15:
+            raise RuntimeError("source failed mid-write")
+        return f"new{pk}"
+
+    new = _stamp(spark.range(20).repartition(4).select(
+        F.col("id").alias("pk"), source_fails_at_row_15("id").alias("v"),
+        (1 + F.col("id") % 2).cast("int").alias("day")), stamped)
+    with pytest.raises(Exception, match="source failed mid-write"):
+        store.overwrite(new, "t", pk=pk)
+    got = sorted((r.pk, r.v) for r in store.read(spark, "t").collect())
+    assert got == [(pk_, v) for pk_, v, _ in old]
+    assert store._read_meta("t") == meta
+
+    assert store.overwrite(_stamped(spark, [(1, "x", 2)], stamped), "t",
+                           pk=pk) == 1
+    assert [(r.pk, r.v) for r in store.read(spark, "t").collect()] == [(1, "x")]
+
+
+@pytest.mark.parametrize(
+    "writer", ["overwrite", "merge_partitioned", "merge_whole_table", "compact"])
+def test_commit_crash_rolls_forward(spark, tmp_path, monkeypatch, writer):
+    """Every StagingStore writer commits through one stage-and-swap. A
+    crash inside that commit after the intent and the first rename out
+    of ``<table>.__tmp__`` leaves a half-swapped table; the next read
+    rolls it forward to the new content, each row exactly once, with
+    the new stats sidecar. The staged copy is a sibling of the table
+    dir, so partition discovery never sees it (no bogus partition
+    value, no duplicated rows)."""
+    import os
+
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import (
+        PARTITION_COL,
+        StagingStore,
+    )
+
+    store = StagingStore(str(tmp_path / "stg"))
+    stamped = writer != "merge_whole_table"
+    old = [(i, f"old{i}", 1 + i % 2) for i in range(12)]
+    store.overwrite(_stamped(spark, old, stamped).repartition(3), "t",
+                    pk=["pk"])
+    if writer == "overwrite":
+        new = [(i, f"new{i}", 1 + i % 2) for i in range(5, 15)]
+        want = {(pk, v) for pk, v, _ in new}
+        op = lambda: store.overwrite(  # noqa: E731
+            _stamped(spark, new, stamped), "t", pk=["pk"])
+    elif writer == "compact":
+        want = {(pk, v) for pk, v, _ in old}
+        op = lambda: store.compact(spark, "t", 1)  # noqa: E731
+    else:
+        # updates in both standing partitions, an insert into a third
+        delta = [(2, "upd2", 3), (3, "upd3", 3), (20, "ins20", 3)]
+        want = {(pk, v) for pk, v, _ in old if pk not in (2, 3, 20)} \
+            | {(pk, v) for pk, v, _ in delta}
+        op = lambda: store.merge(  # noqa: E731
+            spark, _stamped(spark, delta, stamped), "t", ["pk"])
+
+    class Crash(Exception):
+        pass
+
+    real_replace = os.replace
+
+    def replace_then_crash(src, dst):
+        real_replace(src, dst)
+        if ".__tmp__" in os.fspath(src):
+            raise Crash
+
+    monkeypatch.setattr(os, "replace", replace_then_crash)
+    with pytest.raises(Crash):
+        op()
+    monkeypatch.undo()
+    assert os.path.exists(store._intent_path("t"))  # crashed mid-commit
+
+    rows = [(r.pk, r.v) for r in store.read(spark, "t").collect()]
+    assert len(rows) == len(set(rows)) and set(rows) == want
+    assert not os.path.exists(store._intent_path("t"))
+    assert not os.path.exists(store._tmp_path("t"))
+    meta = store._read_meta("t")
+    if stamped:
+        assert sum(st["rows"] for st in meta["parts"].values()) == len(want)
+        if writer == "compact":
+            root = store.path("t")
+            assert all(
+                sum(f.startswith("part-") for f in os.listdir(os.path.join(root, p))) == 1
+                for p in os.listdir(root) if p.startswith(f"{PARTITION_COL}="))
+    else:
+        assert meta is None  # the whole-table merge drops the stats
 
 
 def _cdc_v1_source(spark, sf_dir, out_dir):
