@@ -384,24 +384,25 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
 
 def test_delta_profile_single_action_and_semantics(
         spark, tmp_path, monkeypatch):
-    """Round 18 (VERDICT r17 ask #4): ``_delta_profile`` pays exactly
-    ONE Spark action regardless of pk width — the stats row and every
-    column's capped-distinct one-hot branch collect through a single
-    union — and keeps the round-17 per-column semantics: complete
-    value set at <= cap distinct non-null values (NaN excluded), range
-    fallback above the cap, None bounds for driver-uncomparable types,
-    has-null flags from the stats row."""
+    """``_delta_profile`` collects the delta's distinct pk tuples once,
+    capped at CAP+1, and builds each column's profile on the driver. At
+    most CAP tuples: ONE action whatever the pk width, complete value
+    lists (nulls and NaN out) and has-null flags. More than CAP tuples:
+    exactly two actions (that collect, then one agg) and the range
+    fallback, with None ranges for driver-uncomparable types (NaN
+    maxima, timestamps)."""
     import math
     from datetime import datetime
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
 
-    monkeypatch.setattr(StagingStore, "_DELTA_VALS_CAP", 3)
     store = StagingStore(root=str(tmp_path / "stg"))
     ts = datetime(2026, 1, 1, 12, 0, 0)
+    pk = ["a", "b", "c", "d"]
+    # 5 distinct tuples (the repeated first row collapses)
     delta = spark.createDataFrame(
         [(1, 10, 1.0, ts), (2, 20, float("nan"), ts), (None, 30, 2.0, ts),
-         (1, 40, 2.0, ts), (2, 50, 1.0, ts)],
+         (1, 40, 2.0, ts), (2, 50, 1.0, ts), (1, 10, 1.0, ts)],
         "a bigint, b bigint, c double, d timestamp",
     )
 
@@ -416,24 +417,37 @@ def test_delta_profile_single_action_and_semantics(
         return orig(self)
 
     monkeypatch.setattr(df_cls, "collect", counted)
-    prof = store._delta_profile(delta, ["a", "b", "c", "d"])
-    assert len(calls) == 1, f"{len(calls)} actions for a 4-column pk"
 
-    prof_by_col = {c: (dvals, drange, dn) for c, dvals, drange, dn in prof}
-    # a: 2 distinct non-null (<= cap) + a null -> complete value set
-    dvals, drange, dn = prof_by_col["a"]
-    assert sorted(dvals) == [1, 2] and drange is None and dn is True
-    # b: 5 distinct (> cap) -> range fallback
-    dvals, drange, dn = prof_by_col["b"]
-    assert dvals is None and drange == (10, 50) and dn is False
-    # c: {1.0, 2.0, NaN} -> value set with NaN excluded
-    dvals, drange, dn = prof_by_col["c"]
-    assert sorted(dvals) == [1.0, 2.0] and dn is False
+    def profile(cap, cols):
+        monkeypatch.setattr(StagingStore, "_DELTA_VALS_CAP", cap)
+        calls.clear()
+        prof = store._delta_profile(delta, cols)
+        return len(calls), {c: (dv, dr, dn) for c, dv, dr, dn in prof}
+
+    # at the cap: one action for a 1-column and for a 4-column pk
+    assert profile(5, ["a"])[0] == 1
+    n, prof = profile(5, pk)
+    assert n == 1, f"{n} actions for a 4-column pk under the cap"
+    dvals, drange, dn = prof["a"]
+    assert set(dvals) == {1, 2} and None not in dvals
+    assert drange is None and dn is True
+    dvals, drange, dn = prof["b"]
+    assert sorted(dvals) == [10, 20, 30, 40, 50] and dn is False
+    dvals, drange, dn = prof["c"]  # NaN out of the value list
+    assert set(dvals) == {1.0, 2.0} and dn is False
     assert not any(math.isnan(v) for v in dvals)
-    # d: timestamp is driver-uncomparable (_stat_val -> None bounds);
-    # its single distinct value still lands in the (harmless) value set
-    dvals, drange, dn = prof_by_col["d"]
-    assert dvals == [ts] and drange is None and dn is False
+    # timestamps are driver-uncomparable against the (None) partition
+    # bounds, so their value list is harmless
+    dvals, drange, dn = prof["d"]
+    assert set(dvals) == {ts} and drange is None and dn is False
+
+    # over the cap: the capped collect, then one agg for the ranges
+    n, prof = profile(4, pk)
+    assert n == 2, f"{n} actions over the cap"
+    assert prof["a"] == (None, (1, 2), True)
+    assert prof["b"] == (None, (10, 50), False)
+    assert prof["c"] == (None, None, False)  # max is NaN: no range
+    assert prof["d"] == (None, None, False)  # timestamp: no range
 
 
 def test_merge_group_replace_semantics(spark, tmp_path):
@@ -648,7 +662,8 @@ def test_reset_data_platform(spark, sf_dir, tmp_path):
     runner.initial_data_load()
     assert store.exists("stg_nation")
     out = runner.reset_data_platform()
-    assert out["tablesDropped"] >= 1
+    # the table dir only: not its stats sidecar
+    assert out["tablesDropped"] == 1
     assert store.exists("stg_nation")
     assert all(r.error is None for r in out["load"])
 
@@ -718,6 +733,28 @@ def test_merge_schema_evolution(spark, tmp_path):
     got = {r.id: (r.val, r.extra) for r in store.read(spark, "stg_t").collect()}
     assert got[3] == ("c3", None)
     assert got[2] == ("b2", "fresh")
+
+    # a merge key that takes in the evolved column: the sidecar is keyed
+    # to another pk, so the zone maps are folded from the live footers,
+    # where the day-1 file (written before the column existed) reads it
+    # as null
+    def rows(data, schema):
+        return spark.createDataFrame(data, schema).withColumn(
+            "extractiontimestamputc",
+            F.col("extractiontimestamputc").cast("timestamp"))
+
+    store.overwrite(rows(
+        [(1, "a", "2024-01-01 00:00:00"), (2, "b", "2024-01-02 00:00:00")],
+        "id bigint, val string, extractiontimestamputc string"),
+        "stg_k", pk=["id"])
+    new = "id bigint, val string, extra string, extractiontimestamputc string"
+    store.merge(spark, rows([(2, "b2", "fresh", "2024-01-03 00:00:00")], new),
+                "stg_k", ["id"])
+    assert store.merge(
+        spark, rows([(2, "b3", "fresh", "2024-01-03 00:00:00")], new),
+        "stg_k", ["id", "extra"]) == 2
+    got = {(r.id, r.val, r.extra) for r in store.read(spark, "stg_k").collect()}
+    assert got == {(1, "a", None), (2, "b3", "fresh")}
 
 
 def test_staging_compact_small_files(spark, sf_dir, tmp_path):
@@ -1169,10 +1206,13 @@ def test_merge_crash_rolls_forward_partitioned(spark, sf_dir, tmp_path):
 
 
 def test_merge_crash_rolls_forward_whole_table(spark, sf_dir, tmp_path):
-    """Legacy unpartitioned swap: a crash after final->old rename (tmp
-    complete, final missing) promotes tmp on the next access instead of
-    losing the table."""
+    """Unpartitioned swap (sub ``""``): a crash after the live table dir
+    was removed and before the staged copy moved in (tmp complete,
+    final missing, intent on disk) promotes tmp on the next access
+    instead of losing the table."""
     import json
+    import os
+    import shutil
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
     from priority_data_pipeline_azure_sql_db_spark.sources.parquet import load_table
@@ -1182,18 +1222,14 @@ def test_merge_crash_rolls_forward_whole_table(spark, sf_dir, tmp_path):
     store.overwrite(n, "stg_nation")  # no audit ts -> unpartitioned
     before = store.read(spark, "stg_nation").count()
     final = store.path("stg_nation")
-    import os
-    # crash state: table renamed aside, new copy still in tmp
-    os.replace(final, final + ".__old__")
-    os.makedirs(final + ".__tmp__", exist_ok=True)
-    import shutil
-    shutil.rmtree(final + ".__tmp__")
-    shutil.copytree(final + ".__old__", final + ".__tmp__")
+    # crash state between rmtree(dst) and os.replace(src, dst)
+    shutil.copytree(final, final + ".__tmp__")
+    shutil.rmtree(final)
     with open(final + ".__intent__.json", "w") as fh:
-        json.dump({"kind": "table"}, fh)
+        json.dump({"data": [""], "empty": [], "meta": None}, fh)
     assert store.read(spark, "stg_nation").count() == before
-    assert not os.path.isdir(final + ".__old__")
     assert not os.path.isdir(final + ".__tmp__")
+    assert not os.path.exists(final + ".__intent__.json")
 
 
 def test_runner_fresh_identity_per_refresh(spark, sf_dir, tmp_path):

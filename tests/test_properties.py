@@ -931,6 +931,65 @@ def test_staging_merge_composite_zone_map_property(
     assert got == want
 
 
+footer_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=-3, max_value=3)),
+        st.one_of(st.none(), st.sampled_from(
+            [float("nan"), -0.0, 0.0, 1.5, -2.25])),
+        st.one_of(st.none(), st.text(alphabet="aZé日😀", max_size=3)),
+        st.one_of(st.none(), st.integers(min_value=1, max_value=3)),  # day
+    ),
+    max_size=12,
+)
+
+
+@SETTINGS
+@given(rows=footer_rows,
+       order=st.permutations(["ki", "kf", "ks"]),
+       width=st.integers(min_value=1, max_value=3))
+def test_stage_footer_zone_map_property(
+        spark, rows, order, width, tmp_path_factory):
+    """``_stage`` folds the zone map of what it wrote from the parquet
+    footers. On random partitioned frames spread over several files per
+    partition (pk values that are null or NaN, non-ASCII strings,
+    composite keys of mixed types, null load dates landing in the
+    ``__HIVE_DEFAULT_PARTITION__`` sub) it must equal Spark's own
+    per-partition min/max/has-null mapped through ``_stat_val``, with
+    exact row counts."""
+    from pyspark.sql import functions as F2
+
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import (
+        PARTITION_COL,
+        StagingStore,
+    )
+
+    pk = list(order[:width])
+    store = StagingStore(str(tmp_path_factory.mktemp("fstg")))
+    df = spark.createDataFrame(
+        [(ki, kf, ks, f"2026-01-0{d} 12:00:00" if d else None)
+         for ki, kf, ks, d in rows],
+        "ki bigint, kf double, ks string, extractiontimestamputc string",
+    ).withColumn("extractiontimestamputc",
+                 F2.col("extractiontimestamputc").cast("timestamp"))
+    part = store._with_partition(df.repartition(3))
+    got = store._stage(part, "t", pk)
+
+    aggs = [F2.count(F2.lit(1)).alias("_n")]
+    for c in pk:
+        aggs += [F2.min(c).alias(f"lo_{c}"), F2.max(c).alias(f"hi_{c}"),
+                 F2.max(F2.col(c).isNull()).alias(f"null_{c}")]
+    want = {}
+    for r in part.groupBy(PARTITION_COL).agg(*aggs).collect():
+        stats = {c: {"min": StagingStore._stat_val(r[f"lo_{c}"]),
+                     "max": StagingStore._stat_val(r[f"hi_{c}"]),
+                     "null": bool(r[f"null_{c}"])} for c in pk}
+        entry = {"rows": r["_n"], **stats[pk[0]]}
+        if len(pk) > 1:
+            entry["cols"] = {c: stats[c] for c in pk[1:]}
+        want[StagingStore._part_sub(r[PARTITION_COL])] = entry
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # ADPCM codec properties (round 14) — pure-Python kernels, no Spark, so
 # these can afford real example counts.
