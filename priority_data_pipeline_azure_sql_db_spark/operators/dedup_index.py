@@ -17,9 +17,14 @@ exactly like the persisted IVF index (operators/ann_index.py):
   read the store and run ONLY the capped inverted-index pair join — the
   cheap, cap-tunable half.
 
-``ensure_dedup_index`` is the build-if-absent gate (checks the parquet
-``_SUCCESS`` marker, so a crashed partial build rebuilds rather than
-serving torn files).
+``ensure_dedup_index`` is the build-if-absent gate (checks the params
+manifest, the build's last artifact, so a crashed partial build
+rebuilds rather than serving torn files). Appends add committed delta
+generations; :func:`compact_dedup_index` folds them into the base
+through ``operators.store_io``'s one commit (stage the merged ``fps`` /
+``sizes`` / ``docs`` under ``.compact_stage``, write the
+``COMPACT_MANIFEST.json`` intent naming the consumed generations, roll
+forward; the extra step deletes those generations).
 
 Scale shape: the store is written ``repartition(fp)`` so fingerprint
 rows for one print are co-located per file — at 100 TB the serve join
@@ -37,9 +42,12 @@ build→persist→read→join cycle.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store_io import load_json, roll_forward, write_intent
 
 FPS_DIR = "fps"
 SIZES_DIR = "sizes"
@@ -253,23 +261,19 @@ def _committed_deltas(path: str) -> list[int]:
 
 def _store_state(path: str, sub: str) -> tuple[str, list[int]]:
     """(base dir to read for ``sub``, delta generations to include) —
-    consistent at EVERY crash point of a compaction: with a committed
-    compaction manifest present, the staged merged base (or the
-    already-swapped live base) is the truth and the consumed
-    generations are EXCLUDED even if their dirs still exist (a partial
-    roll-forward that swapped the base but not yet removed the deltas
-    must not double-count); without a manifest, stage debris is an
-    uncommitted compaction and is ignored."""
-    import json
-
+    consistent at EVERY crash point of a compaction: with a compaction
+    intent present, the staged merged base (or the already-swapped live
+    base) is the truth and the generations the intent consumes are
+    EXCLUDED even if their dirs still exist (a partial roll-forward that
+    swapped the base but not yet removed the deltas must not
+    double-count); without one, stage debris is an uncommitted
+    compaction and is ignored."""
     gens = _committed_deltas(path)
     # constants defined below in the compaction section — module-level
     # names resolve at call time
-    mpath = os.path.join(path, _COMPACT_MANIFEST)
+    m = load_json(os.path.join(path, _COMPACT_MANIFEST))
     base = os.path.join(path, sub)
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            m = json.load(fh)
+    if m is not None:
         staged = os.path.join(path, _COMPACT_STAGE, sub)
         if os.path.isdir(staged):
             base = staged
@@ -398,41 +402,20 @@ _COMPACT_STAGE = ".compact_stage"
 
 
 def _compact_roll_forward(path: str) -> None:
-    """Complete a committed-but-unfinished compaction (single-writer,
-    same discipline as the SCD2 hist manifest): the manifest names the
-    consumed generations and commits the staged base; every step below
-    is idempotent, so a crash at any point re-rolls here. Without a
-    manifest, any stage debris is an UNcommitted compaction a later
+    """The compaction's one roll-forward entry (single-writer): finish
+    a committed compaction's swap of the staged base subs, then its
+    extra step deletes the generations the intent consumed. Without an
+    intent, stage debris is an UNcommitted compaction that a later
     attempt overwrites — never data."""
-    import json
-    import shutil
 
-    mpath = os.path.join(path, _COMPACT_MANIFEST)
-    if not os.path.exists(mpath):
-        return
-    with open(mpath) as fh:
-        m = json.load(fh)
-    stage = os.path.join(path, _COMPACT_STAGE)
-    for sub in m["dirs"]:  # FPS_DIR, DOCS_DIR (+ SIZES_DIR for shingle)
-        staged = os.path.join(stage, sub)
-        live = os.path.join(path, sub)
-        if os.path.isdir(staged):
-            shutil.rmtree(live, ignore_errors=True)
-            os.rename(staged, live)
-    if DOCS_DIR not in m["dirs"]:
-        # pre-r15 manifest: the consumed generations' docs tables are
-        # removed below WITHOUT being folded into a staged base docs —
-        # invalidate the base membership table so the next append
-        # re-derives it from the merged fps (one-time legacy cost)
-        # instead of silently forgetting the folded docs and
-        # re-appending their fingerprints as duplicates
-        shutil.rmtree(os.path.join(path, DOCS_DIR), ignore_errors=True)
-    for n in m["gens"]:
-        for pre in (_DELTA_FPS, _DELTA_SIZES, _DELTA_DOCS):
-            shutil.rmtree(os.path.join(path, f"{pre}{n}"),
-                          ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.remove(mpath)
+    def drop_gens(intent) -> None:
+        for n in intent["gens"]:
+            for pre in (_DELTA_FPS, _DELTA_SIZES, _DELTA_DOCS):
+                shutil.rmtree(os.path.join(path, f"{pre}{n}"),
+                              ignore_errors=True)
+
+    roll_forward(os.path.join(path, _COMPACT_MANIFEST), path,
+                 os.path.join(path, _COMPACT_STAGE), drop_gens)
 
 
 def compact_dedup_index(spark: SparkSession, path: str) -> int:
@@ -442,26 +425,22 @@ def compact_dedup_index(spark: SparkSession, path: str) -> int:
     number of generations folded (0 = nothing to do).
 
     Crash safety: the merged base stages under ``.compact_stage`` first,
-    then ``COMPACT_MANIFEST.json`` (naming the staged dirs AND the
-    consumed generations) is the commit point; the roll-forward —
-    invoked here and at every append entry — swaps staged dirs over the
-    base and removes consumed generations idempotently. Value
+    then the ``COMPACT_MANIFEST.json`` intent (naming the staged subs
+    AND the consumed generations) is the commit point; the roll-forward
+    — invoked here and at every append entry — swaps staged subs over
+    the base and removes consumed generations idempotently. Value
     invisibility (compacted store ≡ grown store ≡ fresh full build) is
     driver-graded through dedup_index_append_serve's oracle hash."""
-    import json
-
     _compact_roll_forward(path)
     gens = _committed_deltas(path)
     if not gens:
         return 0
-    with open(os.path.join(path, PARAMS_FILE)) as fh:
-        p = json.load(fh)
+    p = load_json(os.path.join(path, PARAMS_FILE))
     stage = os.path.join(path, _COMPACT_STAGE)
-    dirs = [FPS_DIR]
+    shutil.rmtree(stage, ignore_errors=True)  # an uncommitted compaction
     _read_fps(spark, path).repartition("fp").write.mode(
         "overwrite").parquet(os.path.join(stage, FPS_DIR))
     if p["kind"] == "shingle":
-        dirs.append(SIZES_DIR)
         _read_sizes(spark, path).write.mode("overwrite").parquet(
             os.path.join(stage, SIZES_DIR)
         )
@@ -470,7 +449,6 @@ def compact_dedup_index(spark: SparkSession, path: str) -> int:
     # so appended zero-fingerprint docs STAY tracked across compactions
     # and the post-compact membership read never falls back to an fps
     # scan
-    dirs.append(DOCS_DIR)
     base_docs = os.path.join(path, DOCS_DIR)
     if os.path.exists(os.path.join(base_docs, "_SUCCESS")):
         docs = spark.read.parquet(base_docs)
@@ -484,9 +462,8 @@ def compact_dedup_index(spark: SparkSession, path: str) -> int:
     docs.distinct().write.mode("overwrite").parquet(
         os.path.join(stage, DOCS_DIR)
     )
-    tmp = os.path.join(path, _COMPACT_MANIFEST + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"gens": gens, "dirs": dirs}, fh)
-    os.replace(tmp, os.path.join(path, _COMPACT_MANIFEST))  # commit
+    # commit point (a winnow store stages no sizes: none to replace)
+    write_intent(os.path.join(path, _COMPACT_MANIFEST), stage,
+                 [FPS_DIR, SIZES_DIR, DOCS_DIR], gens=gens)
     _compact_roll_forward(path)
     return len(gens)

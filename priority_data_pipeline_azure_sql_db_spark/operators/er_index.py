@@ -27,33 +27,26 @@ Store layout (all parquet under one root):
 - ``META.json``  — column names / max_edit / n_buckets, written at
   build so serve and append cannot be called with mismatched
   parameters.
-- ``MANIFEST``   — transient intent log for bucket swaps (below).
+- ``MANIFEST``   — an append's intent marker while it commits (below).
 
-Crash discipline (the append_to_near_dup_index standard — a retried or
-crashed append must converge to the rebuild, never serve torn state):
-
-1. Appends first stage every rewritten cluster bucket to
-   ``clusters/.stage_<b>`` AND the fresh base rows to
-   ``.base_append_stage`` (full writes, no live data touched).
-2. Then a ``MANIFEST`` file listing the pending bucket swaps (and the
-   base-append flag) is created — the atomic commit point for BOTH
-   legs.
-3. Then roll-forward swaps each bucket (old dir aside, stage dir in,
-   old dir removed), moves the staged base part-files into ``base/``,
-   and deletes the MANIFEST.
-
-Every entry point (serve/append/ensure) first ROLLS FORWARD a leftover
-MANIFEST, so a crash after step 2 completes BOTH legs on the next
-touch — the cluster map and ``base/`` commit together, so no crash
-point lets a serve observe clusters referencing ids ``base/`` doesn't
-have (round-10 review fix; the earlier layout appended base/ after the
-swaps, leaving a window where golden_name silently mis-resolved). A
-crash before step 2 leaves junk stage dirs and an untouched store, and
-the retry recomputes from the consistent pre-append state. After the
-commit, a retry's id anti-join sees the (rolled-forward) base rows and
-is a no-op — deterministic, idempotent either way.
-Serialize appends with each other and with serves, the same
-single-writer discipline as the staging MERGE and the ANN radii.
+Crash discipline (a retried or crashed append must converge to the
+rebuild, never serve torn state): an append commits through
+``store_io``'s one commit. It stages every rewritten cluster bucket as
+a ``_cb=<b>`` sub of ``.clusters_stage`` (laid out like ``clusters/``)
+and the fresh base rows in ``.base_append_stage``, then writes the
+``MANIFEST`` intent — the commit point for BOTH legs — and rolls
+forward through :func:`_roll_forward`: the buckets swap in, and the
+store's extra step moves the staged base part-files into ``base/``.
+Every entry point (serve/append/ensure) rolls a leftover MANIFEST
+forward first, so a crash after the commit point completes BOTH legs on
+the next touch — no crash point lets a serve observe clusters
+referencing ids ``base/`` doesn't have (which would silently
+mis-resolve golden_name). A crash before it leaves junk stages and an
+untouched store, and the retry recomputes from the consistent
+pre-append state. After the commit, a retry's id anti-join sees the
+(rolled-forward) base rows and is a no-op — deterministic, idempotent
+either way. Serialize appends with each other and with serves, the
+same single-writer discipline as the staging MERGE and the ANN radii.
 
 Scale shape: serve is the bounded-block delta×base join + O(matches)
 window + two cluster-map joins (O(delta) for the bounded blocks the
@@ -75,12 +68,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store_io import swap_staged_buckets, write_partitioned
+from .store_io import roll_forward, write_intent, write_json, write_partitioned
 
 BASE_DIR = "base"
 CLUSTERS_DIR = "clusters"
 META_FILE = "META.json"
 MANIFEST_FILE = "MANIFEST"
+CLUSTERS_STAGE_DIR = ".clusters_stage"
 APPEND_STAGE_DIR = ".base_append_stage"
 
 
@@ -89,33 +83,24 @@ def _bucket_col(node_col: str, n_buckets: int):
 
 
 def _roll_forward(path: str) -> None:
-    """Complete a crashed append's pending bucket swaps (MANIFEST
-    present ⇒ every listed stage dir was fully written before the
-    MANIFEST was created — roll forward is pure renames)."""
-    mpath = os.path.join(path, MANIFEST_FILE)
-    if not os.path.exists(mpath):
-        return
-    with open(mpath) as fh:
-        pending = json.load(fh)
-    cl_root = os.path.join(path, CLUSTERS_DIR)
-    swap_staged_buckets(cl_root, pending["buckets"], key="_cb")
-    if pending.get("base_append"):
-        # second leg of the append transaction (round-10 review fix):
-        # the fresh base rows move into base/ HERE, under the same
-        # MANIFEST, so a crash after the bucket swaps can never leave
-        # clusters/ referencing ids that base/ doesn't have — the serve
-        # would silently fall back to the arrival's own name as
-        # golden_name. os.replace per part file is idempotent across
-        # retries (moved files are simply gone from the stage dir).
+    """The store's one roll-forward entry: finish a committed append's
+    bucket swaps, then its extra step — the fresh base rows move into
+    ``base/`` under the same MANIFEST, so no crash can leave clusters
+    referencing ids that ``base/`` lacks. Moving part files one by one
+    is idempotent across retries (moved files are gone from the stage)."""
+
+    def base_append(_intent) -> None:
         stage = os.path.join(path, APPEND_STAGE_DIR)
         if os.path.isdir(stage):
-            base_dir = os.path.join(path, BASE_DIR)
             for f in os.listdir(stage):
                 if f.startswith("part-"):
                     os.replace(os.path.join(stage, f),
-                               os.path.join(base_dir, f))
+                               os.path.join(path, BASE_DIR, f))
             shutil.rmtree(stage, ignore_errors=True)
-    os.remove(mpath)
+
+    roll_forward(os.path.join(path, MANIFEST_FILE),
+                 os.path.join(path, CLUSTERS_DIR),
+                 os.path.join(path, CLUSTERS_STAGE_DIR), base_append)
 
 
 def _read_meta(path: str) -> dict:
@@ -231,13 +216,11 @@ def build_er_index(
     # serve one clustering; later passes' joins still block-bound)
     (base.repartition(*[F.col(c) for c in passes[0]])
         .write.mode("overwrite").parquet(os.path.join(path, BASE_DIR)))
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, META_FILE), "w") as fh:
-        json.dump({
-            "key_col": key_col, "id_col": id_col,
-            "block_passes": passes, "max_edit": max_edit,
-            "n_buckets": n_buckets,
-        }, fh)
+    write_json(os.path.join(path, META_FILE), {
+        "key_col": key_col, "id_col": id_col,
+        "block_passes": passes, "max_edit": max_edit,
+        "n_buckets": n_buckets,
+    })
     cmap = _cluster_map(base, id_col, key_col, passes, max_edit)
     write_partitioned(
         # one file per bucket (repartition ON the bucket key): the map
@@ -410,8 +393,8 @@ def append_to_er_index(
        in as star edges node→cluster_id, which preserve each cluster's
        connectivity and its min-id label) plus the fresh records;
     4. rewrite ONLY the cluster-map buckets containing relabeled nodes
-       (stage → MANIFEST → swap, the crash discipline in the module
-       docstring);
+       (stage → MANIFEST → roll forward, the crash discipline in the
+       module docstring);
     5. the ``base/`` growth is staged too and committed by the SAME
        manifest — bucket swaps and base append roll forward as one
        transaction, so no crash point lets a serve observe clusters
@@ -523,21 +506,11 @@ def append_to_er_index(
         # accumulated 492 cluster / 190 base part files, and the
         # standing-base read dominated the append's fixed cost)
         staged = staged.repartition(max(len(touched_b), 1), "_cb")
-        # stage every bucket fully BEFORE the commit point — ONE job
-        # writing a partitioned staging root, then split into the
-        # per-bucket .stage_<b> dirs the swap/roll-forward works in
-        stage_root = os.path.join(cl_root, ".stage_root")
-        shutil.rmtree(stage_root, ignore_errors=True)
-        for b in touched_b:
-            shutil.rmtree(os.path.join(cl_root, f".stage_{b}"),
-                          ignore_errors=True)
-        write_partitioned(staged, stage_root, ["_cb"], what="ER stage")
-        for b in touched_b:
-            src = os.path.join(stage_root, f"_cb={b}")
-            if not os.path.isdir(src):
-                os.makedirs(src)  # bucket emptied entirely: swap in empty
-            os.rename(src, os.path.join(cl_root, f".stage_{b}"))
-        shutil.rmtree(stage_root, ignore_errors=True)
+        # stage every touched bucket fully BEFORE the commit point, in
+        # ONE job writing a tmp root laid out like clusters/
+        stage = os.path.join(path, CLUSTERS_STAGE_DIR)
+        shutil.rmtree(stage, ignore_errors=True)
+        write_partitioned(staged, stage, ["_cb"], what="ER stage")
         # stage the base/ growth too: the cluster-map swaps and the
         # base append commit as ONE manifest transaction, rolled
         # forward together — a crash between them previously let a
@@ -550,11 +523,9 @@ def append_to_er_index(
         # per shuffle partition per append and every later append's
         # standing-base read pays footer overhead per file
         fresh.coalesce(1).write.mode("overwrite").parquet(append_stage)
-        mpath = os.path.join(path, MANIFEST_FILE)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"buckets": touched_b, "base_append": True}, fh)
-        os.replace(tmp, mpath)  # commit point — both legs now roll forward
+        # commit point — both legs now roll forward
+        write_intent(os.path.join(path, MANIFEST_FILE), stage,
+                     [f"_cb={b}" for b in touched_b])
         _roll_forward(path)
         return n_fresh
     finally:

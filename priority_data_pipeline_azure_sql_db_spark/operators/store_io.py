@@ -1,32 +1,45 @@
-"""Guarded hive-partitioned writes for store artifacts.
+"""Store I/O shared by every persisted store: the one multi-directory
+commit, atomic small-file writes, and guarded hive-partitioned writes.
 
-Why this exists (round-10 review): writing ZERO rows through
+The commit (:func:`write_intent` then :func:`roll_forward`) is the only
+way a store replaces directories. The staging store, the ER cluster
+store, the SCD2 history and dedup-index compaction all use it:
+
+1. stage the complete replacement of some subs under a tmp root laid
+   out like the live root (nothing live changes; a crash here leaves a
+   stage that the next write replaces);
+2. write one intent marker ``{"data": [...], "empty": [...], <payload>}``
+   atomically — the commit point;
+3. roll forward: swap each staged sub in, remove each emptied sub,
+   remove tmp, run the store's own extra step (``finish``), delete the
+   marker. Every step is idempotent, and each store's readers and
+   writers roll a leftover marker forward first, so a crash after the
+   marker completes on the next touch.
+
+Small files (intent markers, stats sidecars, ``CURRENT`` pointers,
+schema sidecars) go through :func:`write_atomic`: tmp file plus
+``os.replace``, never a torn file.
+
+:func:`write_partitioned` exists because writing ZERO rows through
 ``partitionBy(...)`` produces a directory holding ``_SUCCESS`` but no
 parquet data files — every later read of it fails with
 UNABLE_TO_INFER_SCHEMA, wedging the store behind its own
-completed-build marker. The store paths (ER index, IVF / near-dup ANN
-indexes, the SCD2 log fold, streaming ER) each grew a bespoke guard
-for this; routing every partitioned store write
-through :func:`write_partitioned` fixes the CLASS once, so the next
-partitioned write added to the codebase can't silently re-introduce
-the wedge.
-
-Division of labor: the empty POLICY stays at the call site — a
+completed-build marker. Routing every partitioned store write through
+it fixes the class once. The empty POLICY stays at the call site — a
 one-shot index build fails loud before writing anything, a streaming
 fold skips the batch — because those gates must fire BEFORE the write
-destroys or commits state. (The staging store needs no gate: it stages
-every write under a temp dir with ``on_empty="skip"`` and only then
-commits, so a zero-row stage simply empties what it replaces.) This
-helper is the backstop underneath them: it detects a write that landed
-zero data files WITHOUT an extra Spark job (an O(partitions) local
-directory walk, vs ``isEmpty()``'s extra action per write — the wrong
-cost on the append/fold hot paths) and removes the unreadable
-directory instead of leaving the wedge, then raises or skips per
-``on_empty``.
+destroys or commits state (a staged write needs no gate: it stages
+with ``on_empty="skip"``, and a sub with no staged data is emptied by
+the commit). This helper is the backstop underneath them: it detects a
+write that landed zero data files WITHOUT an extra Spark job (an
+O(partitions) local directory walk, vs ``isEmpty()``'s extra action per
+write) and removes the unreadable directory instead of leaving the
+wedge, then raises or skips per ``on_empty``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -45,29 +58,81 @@ def _has_data_files(path: str) -> bool:
     return False
 
 
-def swap_staged_buckets(root: str, buckets, key: str = "_kb") -> None:
-    """The crash-safe per-bucket swap shared by the ER cluster store
-    and the SCD2 history store (round-12 review: two hand-rolled copies
-    of this rename dance is exactly the crash-critical code that must
-    not drift). For each bucket b: ``<root>/.stage_<b>`` (fully written
-    BEFORE the caller's manifest commit) replaces ``<root>/<key>=<b>``
-    via rename-aside — live → .old_<b>, stage → live, .old removed.
-    Idempotent across crashes at any point: a consumed stage dir means
-    live already is the new version; a leftover .old dir is removed.
-    Callers drive this from their manifest roll-forward ONLY."""
-    for b in buckets:
-        stage = os.path.join(root, f".stage_{b}")
-        live = os.path.join(root, f"{key}={b}")
-        old = os.path.join(root, f".old_{b}")
-        if os.path.exists(stage):
-            if os.path.exists(live):
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                os.rename(live, old)
-            os.rename(stage, live)
-        # stage already consumed (crash mid-swap): live is the new dir
-        if os.path.exists(old):
-            shutil.rmtree(old)
+def load_json(path: str):
+    """The JSON document at ``path``, or None when there is none."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def write_atomic(path: str, text: str | None) -> None:
+    """Replace the file ``path`` with ``text`` atomically: write a
+    sibling ``.part`` file, then ``os.replace`` it over ``path``, so a
+    reader sees the old content or the new, never a torn file. ``None``
+    removes ``path``. Every store pointer, sidecar and intent marker
+    is written through here."""
+    if text is None:
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass
+        return
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(path + ".part", "w") as fh:
+        fh.write(text)
+    os.replace(path + ".part", path)
+
+
+def write_json(path: str, obj) -> None:
+    """:func:`write_atomic` of ``obj`` as JSON; ``None`` removes."""
+    write_atomic(path, None if obj is None else json.dumps(obj))
+
+
+def write_intent(marker: str, tmp: str, subs, **payload) -> None:
+    """The commit point of a staged multi-directory write. ``tmp`` is
+    laid out like the live root and holds the complete replacement of
+    each sub it has a dir for; ``subs`` names every sub the write
+    replaces. The marker records which subs have staged data and which
+    the write empties — without that split, a replay after a mid-swap
+    crash could not tell a sub already swapped in (no tmp source left)
+    from one to delete. ``payload`` rides along for the store's own
+    finishing step."""
+    data = [s for s in subs if os.path.isdir(os.path.join(tmp, s))]
+    write_json(marker, {"data": data,
+                        "empty": [s for s in subs if s not in data],
+                        **payload})
+
+
+def roll_forward(marker: str, live: str, tmp: str, finish=None) -> None:
+    """Finish the commit that ``marker`` records; a no-op without one.
+    Every step is idempotent, so a crash anywhere in here is finished by
+    the next call: each ``data`` sub still in ``tmp`` replaces its live
+    dir (a sub ``""`` is the whole ``live`` dir), each ``empty`` sub is
+    removed, ``tmp`` is removed, ``finish(intent)`` runs the store's own
+    extra step, and the marker goes last. Without a marker nothing live
+    has changed, and a leftover ``tmp`` is an unfinished stage that the
+    store's next write replaces. Writers call :func:`write_intent` and
+    then their store's one roll-forward entry, which binds these paths
+    and ``finish``; readers call that entry first. Single writer per
+    store: serialize writes, and reads with writes."""
+    intent = load_json(marker)
+    if intent is None:
+        return
+    for sub in intent["data"]:
+        src = os.path.normpath(os.path.join(tmp, sub))
+        if os.path.isdir(src):
+            dst = os.path.normpath(os.path.join(live, sub))
+            shutil.rmtree(dst, ignore_errors=True)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+    for sub in intent["empty"]:
+        shutil.rmtree(os.path.join(live, sub), ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
+    if finish is not None:
+        finish(intent)
+    write_json(marker, None)
 
 
 def write_partitioned(

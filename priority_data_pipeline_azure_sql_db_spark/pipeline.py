@@ -17,11 +17,12 @@ Staging store: parquet directories (local stand-in for the Azure SQL
 staging schema). A real deployment swaps ``StagingStore`` for
 ``df.write.jdbc(url, f"stg_{name}", mode=...)`` with
 ``ddl.jdbc_column_types`` — same call shape. Every store write —
-overwrite, both MERGE forms, compaction — takes one commit path: stage
-the complete replacement under ``<table>.__tmp__``, then write an
-intent marker and swap it in. A write that fails while staging leaves
-the live table and its stats untouched; a crash after the intent rolls
-forward on the next access (to_sql append had no such story).
+overwrite, both MERGE forms, compaction — commits through the one
+``operators.store_io`` commit: stage the complete replacement under
+``<table>.__tmp__``, write the intent marker ``<table>.__intent__.json``,
+roll forward. A write that fails while staging leaves the live table and
+its stats untouched; a crash after the intent rolls forward on the next
+access (to_sql append had no such story).
 
 Store metadata costs no Spark job: row counts and the per-partition pk
 zone maps that let a MERGE open only candidate partitions are folded on
@@ -32,7 +33,6 @@ distinct pk tuples.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -44,7 +44,13 @@ from pyspark.sql import functions as F
 
 from .catalog import primary_key
 from .config import EntityConfig, ExtractionConfig
-from .operators.store_io import write_partitioned
+from .operators.store_io import (
+    load_json,
+    roll_forward,
+    write_intent,
+    write_json,
+    write_partitioned,
+)
 from .operators.flatten import flatten_expand
 from .operators.merge import merge_upsert
 from .operators.normalize import (
@@ -79,15 +85,16 @@ class StagingStore:
     table. Tables without audit columns fall back to the unpartitioned
     whole-table form.
 
-    ONE commit protocol for every write (:meth:`_stage` then
-    :meth:`_commit`): the complete replacement of some subs — touched
-    partition dirs, or ``""`` for the whole table — is written under
-    the sibling ``<table>.__tmp__`` (its row count and zone maps read
-    from the footers of the files just written), then an intent marker
-    naming the subs and the post-write stats sidecar is written, the
-    subs are swapped in idempotently, the sidecar is set and the marker
-    cleared. Before the marker nothing live has changed; after it,
-    :meth:`_recover` rolls the swap forward on the next read or write.
+    Every write commits the same way (:meth:`_stage` then
+    :meth:`_commit`), through ``store_io``'s one commit: the complete
+    replacement of some subs — touched partition dirs, or ``""`` for
+    the whole table — is written under the sibling ``<table>.__tmp__``
+    (its row count and zone maps read from the footers of the files
+    just written), then the intent marker ``<table>.__intent__.json``
+    carries the subs and the post-write stats sidecar, and
+    :meth:`_recover` rolls it forward; its extra step sets the sidecar.
+    Before the marker nothing live has changed; after it, the next read
+    or write finishes the commit.
     """
 
     root: str
@@ -100,28 +107,6 @@ class StagingStore:
 
     def _tmp_path(self, table: str) -> str:
         return self.path(table) + ".__tmp__"
-
-    @staticmethod
-    def _load_json(path: str):
-        try:
-            with open(path) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
-
-    @staticmethod
-    def _dump_json(path: str, obj) -> None:
-        """Atomically replace ``path`` with ``obj`` (never a torn
-        file); ``None`` removes it."""
-        if obj is None:
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass
-            return
-        with open(path + ".part", "w") as fh:
-            json.dump(obj, fh)
-        os.replace(path + ".part", path)
 
     # -- partition-stats sidecar (round 13, VERDICT r12 ask #2) ----------
     # Per-partition pk min/max + row counts in `<table>.__meta__.json`:
@@ -149,10 +134,10 @@ class StagingStore:
         return self.path(table) + ".__meta__.json"
 
     def _read_meta(self, table: str) -> dict | None:
-        return self._load_json(self._meta_path(table))
+        return load_json(self._meta_path(table))
 
     def _write_meta(self, table: str, meta: dict | None) -> None:
-        self._dump_json(self._meta_path(table), meta)
+        write_json(self._meta_path(table), meta)
 
     @classmethod
     def _part_sub(cls, v) -> str:
@@ -182,10 +167,9 @@ class StagingStore:
         ``num_rows`` and per-column min/max/null_count — no Spark job):
         {sub: {rows, min, max, null[, cols]}}, sub ``""`` for files at
         the root; {sub: {rows}} without ``pk``. The map covers the FULL
-        composite key: pk[0] keeps the legacy min/max/null fields
-        (sidecars written before round 17 remain readable — they prune
-        on the first key only), and pk[1:] land under ``cols`` as
-        independent per-column ranges: a partition can hold key (a, b)
+        composite key: pk[0]'s min/max/null sit in the entry itself,
+        and pk[1:] land under ``cols`` as independent per-column
+        ranges: a partition can hold key (a, b)
         only if a fits pk[0]'s range AND b fits pk[1]'s — a superset of
         the true candidates (conservative, never wrong) that still
         prunes stores whose first key is uninformative ((tenant, seq)).
@@ -257,10 +241,13 @@ class StagingStore:
 
     def _zone_map(self, table: str, pk: list[str]) -> dict:
         """The table's zone map for ``pk``: its sidecar, or — with no
-        sidecar, or one keyed to another pk — the live files' footer
-        fold (a driver-side bootstrap, no Spark job)."""
+        sidecar, one keyed to another pk, or a composite-pk one written
+        before round 17 (entries without ``cols``) — the live files'
+        footer fold (a driver-side bootstrap, no Spark job)."""
         meta = self._read_meta(table)
-        if meta is not None and meta.get("pk") == pk:
+        if meta is not None and meta.get("pk") == pk and (
+                len(pk) == 1
+                or all("cols" in st for st in meta["parts"].values())):
             return meta["parts"]
         return self._footer_zone_map(self.path(table), pk)
 
@@ -289,27 +276,16 @@ class StagingStore:
     def _prune_candidates(cls, parts: dict, profiles: list) -> list[str]:
         """Partitions whose zone map can hold a delta key — candidate
         iff EVERY profiled pk column can match (round 17: composite
-        keys prune on all columns). Conservative throughout: a column
-        missing from a legacy (pre-round-17) sidecar passes, unknown
+        keys prune on all columns). Conservative throughout: unknown
         bounds pass, uncomparable types pass."""
         prof_sorted = [
             (c, sorted(dvals) if dvals is not None else None, drange, dn)
             for (c, dvals, drange, dn) in profiles
         ]
-        out = []
-        for sub, st in parts.items():
-            cols_meta = st.get("cols") or {}
-            ok = True
-            for j, (c, svals, drange, dhasnull) in enumerate(prof_sorted):
-                entry = st if j == 0 else cols_meta.get(c)
-                if entry is None:
-                    continue  # legacy sidecar: no stats for this column
-                if not cls._col_can_match(entry, svals, drange, dhasnull):
-                    ok = False
-                    break
-            if ok:
-                out.append(sub)
-        return out
+        return [sub for sub, st in parts.items() if all(
+            cls._col_can_match(st if j == 0 else st["cols"][c],
+                               svals, drange, dhasnull)
+            for j, (c, svals, drange, dhasnull) in enumerate(prof_sorted))]
 
     def _delta_profile(self, delta: DataFrame, pk: list[str]) -> list:
         """Per-pk-column delta key profile for zone-map pruning:
@@ -360,7 +336,8 @@ class StagingStore:
         prunes; an unpartitioned table is the one sub ``""``, read
         whole or not at all. O(candidate partitions) instead of
         O(store) — the same pruning the MERGE's old-version probe
-        uses."""
+        uses. A key column the read partitions lack is added as typed
+        nulls (:meth:`_with_keys`)."""
         self._recover(table)
         cand = self._prune_candidates(
             self._zone_map(table, pk), self._delta_profile(keys, pk))
@@ -368,8 +345,19 @@ class StagingStore:
         if df is None:
             # no candidate partition exists on disk: typed-empty via a
             # zero-row slice of the full table (metadata-only read)
-            return self.read(spark, table).limit(0)
-        return df.drop(PARTITION_COL)
+            return self._with_keys(self.read(spark, table).limit(0), pk, keys)
+        return self._with_keys(df.drop(PARTITION_COL), pk, keys)
+
+    @staticmethod
+    def _with_keys(df: DataFrame, pk: list[str], like: DataFrame) -> DataFrame:
+        """``df`` with each pk column it lacks added as a null of
+        ``like``'s type. Partitions written before a schema-evolving
+        merge added a key column hold only nulls in it; a null key
+        never matches, so their rows stay and the delta's are new."""
+        for c in pk:
+            if c not in df.columns:
+                df = df.withColumn(c, F.lit(None).cast(like.schema[c].dataType))
+        return df
 
     def _read_subs(self, spark: SparkSession, table: str,
                    subs: list[str]) -> DataFrame | None:
@@ -432,11 +420,13 @@ class StagingStore:
         Touched = partitions the delta writes into ∪ partitions still
         holding an old version of a delta PK (found with a column-pruned
         PK semi-join — a cheap scan, not a rewrite — in the same collect
-        as the delta's own partition values). The merged touched
-        partitions are staged and committed together, so readers never
-        see a half-written partition; untouched partitions' files are
-        never opened, let alone rewritten. The ``collect`` returns
-        partition VALUES (load dates) — partition metadata, not data.
+        as the delta's own partition values; a key column older
+        partitions lack probes as nulls, :meth:`_with_keys`). The merged
+        touched partitions are staged and committed together, so
+        readers never see a half-written partition; untouched
+        partitions' files are never opened, let alone rewritten. The
+        ``collect`` returns partition VALUES (load dates) — partition
+        metadata, not data.
 
         MERGE SEMANTICS — GROUP-replace, not row-replace (round-11
         review, resolved the other way after its blanket-PK-dedup
@@ -476,8 +466,8 @@ class StagingStore:
         if probe is not None:
             # cast: partition inference may type an all-null column as
             # string; the delta side is always a date
-            touched = probe.join(dpart.select(*pk).distinct(), on=pk,
-                                 how="left_semi") \
+            touched = self._with_keys(probe, pk, delta) \
+                .join(dpart.select(*pk).distinct(), on=pk, how="left_semi") \
                 .select(F.col(PARTITION_COL).cast("date")).unionByName(touched)
         subs = [self._part_sub(r[0]) for r in touched.distinct().collect()]
         # merge target: direct-path read of ONLY the touched partitions
@@ -521,57 +511,27 @@ class StagingStore:
         return self._footer_zone_map(tmp, pk)
 
     def _commit(self, table: str, subs: list[str], meta: dict | None) -> None:
-        """Swap the staged ``subs`` in. The intent records WHICH subs tmp
-        holds data for: on a replay, a data sub with no tmp source was
-        already swapped (skip it) while an empty sub is re-deleted
-        (idempotent) — without the split, a mid-swap crash replay would
-        mistake a swapped sub for an emptied one and delete the
-        just-committed data. ``meta`` (the post-write stats sidecar, or
-        None to drop it) rides in the intent so the stats land WITH the
-        swap and can never mis-prune a later merge."""
-        tmp = self._tmp_path(table)
-        data = [s for s in subs if os.path.isdir(os.path.join(tmp, s))]
-        empty = [s for s in subs if s not in data]
-        self._write_intent(table, {"data": data, "empty": empty, "meta": meta})
-        self._apply_part_swap(table, data, empty)
-        self._write_meta(table, meta)
-        self._write_intent(table, None)
+        """Commit the staged ``subs``. ``meta`` (the post-write stats
+        sidecar, or None to drop it) rides in the intent, so the stats
+        land WITH the swap and can never mis-prune a later merge."""
+        write_intent(self._intent_path(table), self._tmp_path(table), subs,
+                     meta=meta)
+        self._recover(table)
 
     def _intent_path(self, table: str) -> str:
         # sibling of the table dir: survives whole-table swaps
         return self.path(table) + ".__intent__.json"
 
-    def _write_intent(self, table: str, payload: dict | None) -> None:
-        self._dump_json(self._intent_path(table), payload)
-
-    def _apply_part_swap(
-        self, table: str, subs_data: list[str], subs_empty: list[str]
-    ) -> None:
-        """Idempotently swap staged subs in from tmp (``""`` = the whole
-        table dir). ``subs_data`` have a tmp source (none present on a
-        replay → already swapped, skip); ``subs_empty`` were emptied by
-        the write (re-deleting is a no-op)."""
-        final, tmp = self.path(table), self._tmp_path(table)
-        for sub in subs_data:
-            src, dst = os.path.join(tmp, sub), os.path.join(final, sub)
-            if os.path.isdir(src):
-                shutil.rmtree(dst, ignore_errors=True)
-                os.replace(src, dst)
-        for sub in subs_empty:
-            shutil.rmtree(os.path.join(final, sub), ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-
     def _recover(self, table: str) -> None:
-        """Roll a crashed commit forward (idempotent; called before every
-        write and read). No intent marker → nothing live changed: a
-        leftover tmp is an unfinished (or in-flight) stage that the next
-        write replaces, never read and never deleted here."""
-        intent = self._load_json(self._intent_path(table))
-        if intent is None:
-            return
-        self._apply_part_swap(table, intent["data"], intent["empty"])
-        self._write_meta(table, intent.get("meta"))
-        self._write_intent(table, None)
+        """The table's one roll-forward entry (called before every read
+        and write, and by :meth:`_commit`): finish a pending commit,
+        then set the sidecar from the intent. No intent marker → nothing
+        live changed: a leftover tmp is an unfinished (or in-flight)
+        stage that the next write replaces, never read and never
+        deleted here."""
+        roll_forward(self._intent_path(table), self.path(table),
+                     self._tmp_path(table),
+                     lambda intent: self._write_meta(table, intent.get("meta")))
 
     def drop_all(self) -> int:
         """O17: drop every staging table; returns how many tables (the

@@ -1,10 +1,10 @@
 """SparkSession factory.
 
 Scale stance: every knob here is chosen for a 1000-executor cluster first
-and local[32] second. AQE handles runtime coalescing / skew-join splitting
-so static ``spark.sql.shuffle.partitions`` only needs to be a sane upper
-bound; on a real cluster it would be ~2-3x total cores and AQE coalesces
-down. Session timezone is pinned to UTC so timestamp semantics are stable
+and a local session sized to its host second (:func:`host_resources`).
+AQE handles runtime coalescing / skew-join splitting so static
+``spark.sql.shuffle.partitions`` only needs to be a sane upper bound; on
+a real cluster it would be ~2-3x total cores and AQE coalesces down. Session timezone is pinned to UTC so timestamp semantics are stable
 across engines (the reference localizes bookmarks to a config timezone —
 we keep that at the *config* layer, never in the session; cf.
 resources/priorityDataSource.py:68,676-679 in the reference).
@@ -16,7 +16,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_resources(meminfo: str = "/proc/meminfo") -> tuple[int, str]:
+    """(cores, driver heap) for a local session: ``SPARK_GRAFT_CPUS``,
+    else the cores this process may run on; ``SPARK_GRAFT_DRIVER_MEM``,
+    else half of the host's ``MemTotal`` (at least 1g) — so a session
+    neither over-subscribes a small host nor asks a strict-overcommit
+    or cgroup-limited one for a heap it cannot back."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        with open(meminfo) as fh:
+            kib = next(int(ln.split()[1]) for ln in fh
+                       if ln.startswith("MemTotal:"))
+        mem = f"{max(1024, kib // 2048)}m"
+    return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
 
 
 def get_spark(
@@ -31,13 +45,13 @@ def get_spark(
     at 100 TB this is what keeps a static partition count from being
     wrong in both directions. Arrow is on for the Pandas-UDF paths.
     """
-    cpus = cpus or DEFAULT_CPUS
+    host_cpus, mem = host_resources()
+    cpus = cpus or host_cpus
     shuffle = shuffle_partitions or max(cpus, 32)
     # Driver memory MUST be set before the JVM launches — builder.config
     # is too late in local mode (the heap silently stays at the ~1g
     # default and 32-thread aggregations spill+thrash; measured 25x
     # slowdowns). PYSPARK_SUBMIT_ARGS reaches the launcher.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     # Bigger code cache: each query generates fresh codegen classes and a
     # flushed cache forces re-interpretation (measured multi-minute stalls
     # of single interpreted tasks before OSR compilation).

@@ -30,8 +30,9 @@ Two interchangeable backends, selected by option:
   header) and bounded exponential-backoff retry on 5xx/connection
   errors. Schema comes from ``<uri>/$metadata`` EDMX (same discovery
   order as the reference: metadata before any data pull). Page count
-  comes from OData ``<uri>/<entity>/$count`` with a single-page
-  fallback.
+  comes from OData ``<uri>/<entity>/$count``; only a service without
+  that endpoint (HTTP 404/501, or a body that is not an integer) falls
+  back, with a logged warning, to one unbounded pull.
 - ``path`` — parquet fixture backend (the driver default): the entity's
   parquet file read via pyarrow, serving the same slice contract.
 
@@ -41,6 +42,7 @@ object conversion on the engine side.
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass
 
@@ -65,7 +67,8 @@ FORMAT_NAME = "odata_like"
 class RowRangeSlice(InputPartition):
     """One parallel pull: ``$skip``/``$top`` paging over HTTP, a
     contiguous row range over the parquet backend. ``length=None`` means
-    an unbounded tail pull (single-page fallback when $count fails)."""
+    an unbounded tail pull (single-page fallback when $count is
+    unsupported)."""
 
     offset: int
     length: int | None
@@ -401,22 +404,37 @@ class ODataLikeReader(DataSourceReader):
             # never wrong.
             if not self.options.get("orderby"):
                 return [RowRangeSlice(0, None)]
-            # OData $count endpoint; single unbounded page when unsupported.
-            # The pushed $filter applies to the count too — otherwise a
-            # filtered scan plans pages from the unfiltered row count
-            # (harmless empty tail pulls, but wasted round-trips).
+            # OData $count endpoint. The pushed $filter applies to the
+            # count too — otherwise a filtered scan plans pages from the
+            # unfiltered row count (harmless empty tail pulls, but
+            # wasted round-trips). Only a service WITHOUT the endpoint
+            # (404/501, or a non-integer body) falls back to one
+            # unbounded pull; any other error — auth, a 400 for a bad
+            # $filter, an exhausted retry — is a real failure and raises.
+            import urllib.error
+
+            url = f"{self.uri.rstrip('/')}/{self.entity}/$count"
+            filt = odata_filter_string(
+                self.accepted, namemap=self.options.get("_namemap")
+            )
+            why = None
             try:
-                filt = odata_filter_string(
-                    self.accepted, namemap=self.options.get("_namemap")
-                )
-                n_rows = int(http_get(
-                    f"{self.uri.rstrip('/')}/{self.entity}/$count",
-                    params={"$filter": filt} if filt else None,
+                body = http_get(
+                    url, params={"$filter": filt} if filt else None,
                     headers=ODataLikeDataSource._auth(self.options),
                     max_retries=self.max_retries,
-                ).decode().strip())
-            except Exception:
+                ).strip()
+                if not body.isdigit():
+                    why = f"non-integer body {body[:80]!r}"
+            except urllib.error.HTTPError as e:
+                if e.code not in (404, 501):
+                    raise
+                why = f"HTTP {e.code}"
+            if why is not None:
+                logging.getLogger(__name__).warning(
+                    "%s unusable (%s): planning one unbounded pull", url, why)
                 return [RowRangeSlice(0, None)]
+            n_rows = int(body)
             per = self.page_size
             return [
                 RowRangeSlice(off, min(per, n_rows - off))

@@ -19,13 +19,32 @@ prunes untouched partitions (pipeline.py:97) — so steady-state cost
 tracks the stream rate, not the table size. One staging table accepts
 one stream (StagingStore.merge rewrites whole partitions; serialize
 writers per table the same way batch runs are serialized per entity).
+
+Crash safety of the standing stores: the rollup store commits each fold
+with one atomic write of its ``CURRENT`` pointer. The SCD2 history
+commits through ``operators.store_io``'s one commit: a fold stages its
+rewritten ``_kb=<b>`` buckets under ``.hist_stage``, writes the
+``HIST_MANIFEST`` intent with its batch_id, and rolls forward
+(:func:`_hist_roll_forward`), whose extra step advances ``CURRENT``;
+every fold and read rolls a leftover intent forward first. SCD2 log
+compaction commits with one directory rename.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 
-from ..operators.store_io import _has_data_files, write_partitioned
+from ..operators.store_io import (
+    _has_data_files,
+    roll_forward,
+    write_atomic,
+    write_intent,
+    write_json,
+    write_partitioned,
+)
 from ..pipeline import StagingStore
 
 
@@ -80,14 +99,18 @@ def stream_merge_into_staging(
 
 def _read_rollup_pointer(store_path: str) -> tuple[int, str | None]:
     """(last_applied_batch_id, current agg dir) — (-1, None) if empty."""
-    import os
-
     ptr = os.path.join(store_path, "CURRENT")
     if not os.path.exists(ptr):
         return -1, None
     with open(ptr) as fh:
         bid, dirname = fh.read().strip().split("\n")
     return int(bid), os.path.join(store_path, dirname)
+
+
+def _write_current(store_path: str, batch_id: int, dirname: str) -> None:
+    """Point the store's ``CURRENT`` ledger at (last applied batch id,
+    live version dir) — one atomic write."""
+    write_atomic(os.path.join(store_path, "CURRENT"), f"{batch_id}\n{dirname}")
 
 
 def fold_rollup_batch(
@@ -111,9 +134,6 @@ def fold_rollup_batch(
     overwritten in place); the superseded dir is removed best-effort
     after the swap. Returns True if the batch was applied.
     """
-    import os
-    import shutil
-
     from ..operators.merge import combine_rollups
 
     last, cur = _read_rollup_pointer(store_path)
@@ -125,11 +145,7 @@ def fold_rollup_batch(
     merged = combine_rollups(parts, keys, sum_cols)
     new_dir = f"agg_{batch_id}"
     merged.write.mode("overwrite").parquet(os.path.join(store_path, new_dir))
-    tmp = os.path.join(store_path, "CURRENT.tmp")
-    os.makedirs(store_path, exist_ok=True)
-    with open(tmp, "w") as fh:
-        fh.write(f"{batch_id}\n{new_dir}")
-    os.replace(tmp, os.path.join(store_path, "CURRENT"))
+    _write_current(store_path, batch_id, new_dir)
     # GC every superseded version, not just this fold's predecessor
     # (round-13 review): a crash between the pointer swap and the old
     # rmtree stranded ONE full rollup copy per crash forever — the next
@@ -194,8 +210,6 @@ def _scd2_log_state(log_root: str):
     {slice batch_id: dir}). Ignores ``.compact_*.tmp`` junk from a
     crashed compaction — only a fully renamed ``compact_<id>`` dir is
     live, so a mid-compaction crash can never double-count rows."""
-    import os
-
     compacts: list[tuple[int, str]] = []
     slices: dict[int, str] = {}
     if not os.path.isdir(log_root):
@@ -217,73 +231,34 @@ def _scd2_log_state(log_root: str):
 
 
 _HIST_MANIFEST = "HIST_MANIFEST"
+_HIST_STAGE = ".hist_stage"  # tmp root, laid out like hist/
 
 
 def _hist_roll_forward(store_path: str) -> None:
-    """Complete a crashed SCD2 fold's pending history-bucket swaps —
-    the er_index discipline: a MANIFEST present means every listed
-    ``hist/.stage_<b>`` dir was fully written before the commit point,
-    so roll-forward is pure renames, then the CURRENT ledger advances
-    to the manifest's batch_id and the manifest is removed. Idempotent
-    across crashes at any point inside itself."""
-    import json as _json
-    import os
-    import shutil
-
-    mpath = os.path.join(store_path, _HIST_MANIFEST)
-    if not os.path.exists(mpath):
-        return
-    with open(mpath) as fh:
-        pending = _json.load(fh)
-    from ..operators.store_io import swap_staged_buckets
-
-    hist_root = os.path.join(store_path, "hist")
-    swap_staged_buckets(hist_root, pending["buckets"], key="_kb")
-    tmp = os.path.join(store_path, "CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(f"{pending['batch_id']}\nhist")
-    os.replace(tmp, os.path.join(store_path, "CURRENT"))
-    os.remove(mpath)
+    """The SCD2 history's one roll-forward entry: finish a fold's
+    committed bucket swaps (``store_io.roll_forward``), then its extra
+    step advances the CURRENT ledger to the intent's batch_id."""
+    roll_forward(
+        os.path.join(store_path, _HIST_MANIFEST),
+        os.path.join(store_path, "hist"), os.path.join(store_path, _HIST_STAGE),
+        lambda intent: _write_current(store_path, intent["batch_id"], "hist"))
 
 
-def _swap_hist_buckets(store_path: str, staged, touched: list,
-                       batch_id: int) -> None:
-    """Stage the rewritten history buckets, commit via MANIFEST, roll
+def _commit_hist_buckets(store_path: str, staged, touched: list,
+                         batch_id: int) -> None:
+    """Stage the rewritten history buckets, write the intent, roll
     forward. ``staged`` carries the recomputed ``_kb``; only the
-    ``touched`` buckets are swapped — untouched bucket dirs are never
+    ``touched`` buckets are replaced — untouched bucket dirs are never
     opened. A touched bucket with zero staged rows (every entity in it
-    was deleted from the history) swaps to an empty dir."""
-    import json as _json
-    import os
-    import shutil
-
-    hist_root = os.path.join(store_path, "hist")
-    stage_root = os.path.join(hist_root, ".stage_root")
-    shutil.rmtree(stage_root, ignore_errors=True)
-    # sweep ALL leftover stage dirs, not just this fold's touched set
-    # (round-13 review): a crash BEFORE the manifest leaves .stage_<b>
-    # dirs for buckets a later fold may never touch — dead by
-    # construction (roll-forward ran at entry: a manifest would have
-    # consumed them), they only leak disk and listing time
-    if os.path.isdir(hist_root):
-        for d in os.listdir(hist_root):
-            if d.startswith(".stage_") or d.startswith(".old_"):
-                shutil.rmtree(os.path.join(hist_root, d),
-                              ignore_errors=True)
-    write_partitioned(staged, stage_root, ["_kb"], on_empty="skip",
+    was deleted from the history) is removed."""
+    stage = os.path.join(store_path, _HIST_STAGE)
+    shutil.rmtree(stage, ignore_errors=True)  # an uncommitted fold's stage
+    write_partitioned(staged, stage, ["_kb"], on_empty="skip",
                       what="SCD2 history stage")
-    for b in touched:
-        src = os.path.join(stage_root, f"_kb={b}")
-        if not os.path.isdir(src):
-            os.makedirs(src)  # bucket emptied entirely: swap in empty
-        os.rename(src, os.path.join(hist_root, f".stage_{b}"))
-    shutil.rmtree(stage_root, ignore_errors=True)
-    mpath = os.path.join(store_path, _HIST_MANIFEST)
-    tmp = mpath + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"buckets": sorted(touched), "batch_id": batch_id}, fh)
-    os.replace(tmp, mpath)  # commit point
+    write_intent(os.path.join(store_path, _HIST_MANIFEST), stage,
+                 [f"_kb={b}" for b in sorted(touched)], batch_id=batch_id)
     _hist_roll_forward(store_path)
+
 
 _SCD2_META = "SCD2_META.json"
 # Minimum distinct observed _kb ids before the inverse (undercount)
@@ -340,7 +315,6 @@ def _check_scd2_meta(store_path: str, n_log_buckets: int) -> None:
     unresolvable from layout alone and both moduli disagree on ids the
     store has simply never touched."""
     import json as _json
-    import os
     import re as _re
 
     path = os.path.join(store_path, _SCD2_META)
@@ -476,11 +450,7 @@ def _check_scd2_meta(store_path: str, n_log_buckets: int) -> None:
                 f'{{"n_log_buckets": {n_log_buckets}}} to '
                 f"{path} by hand."
             )
-    os.makedirs(store_path, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"n_log_buckets": n_log_buckets}, fh)
-    os.replace(tmp, path)
+    write_json(path, {"n_log_buckets": n_log_buckets})
     # a pinned sidecar supersedes any ambiguous-adoption history
     # (round-17 marker): reaching here means the layout cross-checks
     # cleared the count unambiguously
@@ -498,10 +468,7 @@ def _read_touched_buckets(spark, root: str, touched, key: str = "_kb"):
     attributed (2.54 vs 3.61 s at x32). The touched set is known before
     the read, so list those dirs and nothing else; ``basePath`` keeps
     ``key`` as a partition column. Returns None when no touched bucket
-    has data files under ``root`` (absent dir = no rows in that bucket;
-    a present-but-empty dir is a swapped-in emptied bucket)."""
-    import os
-
+    has data files under ``root`` (an absent bucket holds no rows)."""
     dirs = []
     for b in touched:
         d = os.path.join(root, f"{key}={b}")
@@ -516,18 +483,11 @@ def _write_hist_schema(store_path: str, df) -> None:
     """Schema sidecar: lets a reader of a legally-EMPTY history (a
     tombstone-only bootstrap deleted every entity before any create)
     return a typed empty frame instead of UNABLE_TO_INFER_SCHEMA."""
-    import os
-
-    os.makedirs(store_path, exist_ok=True)
-    tmp = os.path.join(store_path, "HIST_SCHEMA.json.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(df.schema.json())
-    os.replace(tmp, os.path.join(store_path, "HIST_SCHEMA.json"))
+    write_atomic(os.path.join(store_path, "HIST_SCHEMA.json"), df.schema.json())
 
 
 def _read_hist_schema_empty(spark, store_path: str):
     import json as _json
-    import os
 
     from pyspark.sql.types import StructType
 
@@ -543,9 +503,6 @@ def _migrate_flat_hist(spark, store_path: str, cur: str, kb) -> None:
     UNRESOLVED_COLUMN '_kb' inside foreachBatch and wedge the stream
     against its own checkpoint (round-12 review). Cost: one full
     rewrite, the same price every old-layout fold used to pay."""
-    import os
-    import shutil
-
     hist_root = os.path.join(store_path, "hist")
     if os.path.normpath(cur) == os.path.normpath(hist_root):
         return  # already bucketed
@@ -554,10 +511,7 @@ def _migrate_flat_hist(spark, store_path: str, cur: str, kb) -> None:
     write_partitioned(old_df.withColumn("_kb", kb), hist_root, ["_kb"],
                       what="SCD2 history migration")
     last, _ = _read_rollup_pointer(store_path)
-    tmp = os.path.join(store_path, "CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(f"{last}\nhist")
-    os.replace(tmp, os.path.join(store_path, "CURRENT"))
+    _write_current(store_path, last, "hist")
     shutil.rmtree(cur, ignore_errors=True)
 
 
@@ -587,19 +541,19 @@ def fold_scd2_batch(
     ``hist_<id>`` versioning rewrote the ENTIRE history every fold, an
     O(store) term that read slope ~1 on the per-batch-cost-vs-store-
     size probe). A fold now rewrites ONLY the buckets holding touched
-    entities, through the ER-store crash discipline: stage every
-    rewritten bucket to ``hist/.stage_<b>``, then write a MANIFEST
-    recording (buckets, batch_id) — the atomic commit point — then
-    roll forward: swap each bucket, update the CURRENT ledger from the
-    manifest, delete the manifest. Every entry point rolls a leftover
-    MANIFEST forward first, so a crash after the commit completes on
-    the next touch and a crash before it leaves junk stage dirs and an
-    untouched store for the retry to overwrite. The CURRENT pointer
-    file still records (last_applied_batch_id, "hist") — the SCD2 fold
-    is not idempotent (re-folding a batch would rebuild touched
-    entities against a log that already contains it), so at-least-once
-    delivery composes with the ledger into exactly-once history
-    maintenance.
+    entities, through ``store_io``'s one commit: stage every rewritten
+    bucket as a ``_kb=<b>`` sub of ``.hist_stage``, write the
+    ``HIST_MANIFEST`` intent carrying the batch_id — the atomic commit
+    point — then roll forward: swap the buckets in, remove emptied
+    ones, advance the CURRENT ledger, delete the intent. Every entry
+    point rolls a leftover intent forward first, so a crash after the
+    commit completes on the next touch and a crash before it leaves a
+    junk stage and an untouched store for the retry to overwrite. The
+    CURRENT pointer file still records (last_applied_batch_id, "hist")
+    — the SCD2 fold is not idempotent (re-folding a batch would rebuild
+    touched entities against a log that already contains it), so
+    at-least-once delivery composes with the ledger into exactly-once
+    history maintenance.
 
     Scale shape: the fold is :func:`operators.merge.scd2_apply_delta` —
     O(touched entities) rebuild, untouched history rows unread past an
@@ -618,8 +572,6 @@ def fold_scd2_batch(
     O(touched buckets × bounded slice count), independent of total
     stream history.
     """
-    import os
-    import shutil
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -698,10 +650,7 @@ def fold_scd2_batch(
         write_partitioned(new_hist.withColumn("_kb", kb),
                           os.path.join(store_path, "hist"), ["_kb"],
                           on_empty="skip", what="SCD2 history")
-        tmp = os.path.join(store_path, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"{batch_id}\nhist")
-        os.replace(tmp, os.path.join(store_path, "CURRENT"))
+        _write_current(store_path, batch_id, "hist")
     else:
         # direct-path reads of only the touched _kb= dirs (round 13):
         # partition discovery over a `.where(isin)` read would still
@@ -737,8 +686,8 @@ def fold_scd2_batch(
             op_col=op_col,
         )
         _write_hist_schema(store_path, new_hist)
-        _swap_hist_buckets(store_path, new_hist.withColumn("_kb", kb),
-                           touched, batch_id)
+        _commit_hist_buckets(store_path, new_hist.withColumn("_kb", kb),
+                             touched, batch_id)
     # crash-safe log compaction, AFTER the pointer swap (the fold above
     # already consumed the slices; compaction only bounds future reads)
     live = [(b, p) for b, p in slices.items() if floor < b <= batch_id]
@@ -815,15 +764,13 @@ def read_scd2_store(spark, store_path: str) -> DataFrame:
     the same single-writer discipline as the ER store's
     read_er_clusters: roll-forward renames are not safe under
     concurrent callers."""
-    import os as _os
-
     _hist_roll_forward(store_path)
     _, cur = _read_rollup_pointer(store_path)
     if cur is None:
         raise FileNotFoundError(
             f"SCD2 store at {store_path} has no applied batches yet"
         )
-    if not _os.path.isdir(cur) or not _has_data_files(cur):
+    if not os.path.isdir(cur) or not _has_data_files(cur):
         return _read_hist_schema_empty(spark, store_path)
     df = spark.read.parquet(cur)
     return df.drop("_kb") if "_kb" in df.columns else df
@@ -862,8 +809,6 @@ def stream_er_into_store(
     map is provably independent of micro-batch boundaries — which is
     what makes the standing store hash-checkable against the one-pass
     batch build over all records."""
-    import os
-
     from ..operators.er_index import (
         CLUSTERS_DIR,
         append_to_er_index,

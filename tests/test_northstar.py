@@ -798,10 +798,11 @@ def test_dedup_index_append_equals_rebuild_and_crash_safe(spark, sf_dir, tmp_pat
 
     # (5) COMPACTION (round 14, LSM rebuild leg): folding generations
     # into the base is value-invisible at every crash point
-    import json
-
     from priority_data_pipeline_azure_sql_db_spark.operators.dedup_index import (
         compact_dedup_index,
+    )
+    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import (
+        write_intent,
     )
 
     serve = lambda: {tuple(r) for r in winnow_pairs_from_index(  # noqa: E731
@@ -813,26 +814,28 @@ def test_dedup_index_append_equals_rebuild_and_crash_safe(spark, sf_dir, tmp_pat
     assert serve() == want
     assert compact_dedup_index(spark, grown) == 0  # generation-free no-op
 
-    # committed-manifest crash window: stage + manifest present, swap
-    # not yet done — serves read the staged truth and EXCLUDE the
-    # consumed generation even though its dir still exists (the
-    # double-count window), and the next append rolls forward
+    # committed-intent crash window: stage + intent present, swap not
+    # yet done — serves read the staged truth and EXCLUDE the consumed
+    # generation even though its dir still exists (the double-count
+    # window), and the next append rolls forward
     part_d = spark.createDataFrame(
         [(900002, "another compaction window doc with words " * 4)],
         "doc_id bigint, text string",
     )
     assert append_to_dedup_index(spark, grown, part_d) == 1
     want2 = serve()
-    stage = os.path.join(grown, ".compact_stage", "fps")
-    winnow_src = spark.read.parquet(os.path.join(grown, "fps_delta_0"))
-    spark.read.parquet(os.path.join(grown, "fps")).unionByName(
-        winnow_src).repartition("fp").write.mode("overwrite").parquet(stage)
-    with open(os.path.join(grown, "COMPACT_MANIFEST.json"), "w") as fh:
-        json.dump({"gens": [0], "dirs": ["fps"]}, fh)
+    stage = os.path.join(grown, ".compact_stage")
+    for sub in ("fps", "docs"):
+        spark.read.parquet(os.path.join(grown, sub)).unionByName(
+            spark.read.parquet(os.path.join(grown, f"{sub}_delta_0"))
+        ).write.mode("overwrite").parquet(os.path.join(stage, sub))
+    write_intent(os.path.join(grown, "COMPACT_MANIFEST.json"), stage,
+                 ["fps", "sizes", "docs"], gens=[0])
     assert serve() == want2  # staged truth, no double count
     assert append_to_dedup_index(spark, grown, part_d) == 0  # rolls fwd
     assert not os.path.exists(os.path.join(grown, "COMPACT_MANIFEST.json"))
     assert not os.path.isdir(os.path.join(grown, "fps_delta_0"))
+    assert not os.path.isdir(stage)
     assert serve() == want2
 
 

@@ -133,7 +133,8 @@ class _FakeODataServer:
     numeric $filter (ge/gt/le/lt/eq) that answers 400 on a property the
     entity set lacks, $select, $expand=SUPPLIER_SUBFORM, Basic-auth
     check, an optional one-shot
-    500 / 429 to exercise retry, and optional SERVER-DRIVEN paging
+    500 / 429 to exercise retry, an optional status for every $count
+    request (``count_status``), and optional SERVER-DRIVEN paging
     (every response truncated to ``server_page`` rows + an
     @odata.nextLink continuation — the round-11 protocol review's
     silent-data-loss class). Strict per RFC 3986 (which the OData URL
@@ -143,7 +144,8 @@ class _FakeODataServer:
     applied (the exact misunderstanding the connector used to share)."""
 
     def __init__(self, rows, child_rows, expect_auth=None, fail_first_n=0,
-                 throttle_first_n=0, server_page=None, relative_links=False):
+                 throttle_first_n=0, server_page=None, relative_links=False,
+                 count_status=None):
         import http.server
         import json
         import threading
@@ -190,6 +192,8 @@ class _FakeODataServer:
                 if parsed.path.endswith("/$metadata"):
                     return self._send(200, _NATION_EDMX, "application/xml")
                 if parsed.path.endswith("/$count"):
+                    if count_status is not None:
+                        return self._send(count_status, '{"error": "count"}')
                     return self._send(200, str(len(rows)), "text/plain")
                 out = list(rows)
                 filt = params.get("$filter")
@@ -518,6 +522,52 @@ def test_odata_keyless_entity_single_partition():
     parts = r.partitions()
     assert len(parts) == 1
     assert (parts[0].offset, parts[0].length) == (0, None)
+
+
+def test_http_count_unsupported_falls_back_with_warning(spark, caplog):
+    """A service without ``$count`` (404) plans ONE unbounded pull and
+    says so in a logged warning; every row still arrives."""
+    import logging
+
+    from priority_data_pipeline_azure_sql_db_spark.sources.odata_like import ODataLikeReader
+
+    srv = _FakeODataServer(_NATION_ROWS, [], count_status=404)
+    try:
+        r = ODataLikeReader({"uri": srv.uri, "entity": "nation",
+                             "orderby": "n_nationkey"}, None)
+        with caplog.at_level(logging.WARNING):
+            parts = r.partitions()
+        assert [(p.offset, p.length) for p in parts] == [(0, None)]
+        assert any("$count" in m and "HTTP 404" in m for m in caplog.messages)
+
+        df = _http_read(spark, srv.uri)
+        assert df.count() == len(_NATION_ROWS)
+        data_reqs = [p for p in srv.requests if p[0].endswith("/nation")]
+        assert len(data_reqs) == 1 and "$top" not in data_reqs[0][1]
+    finally:
+        srv.close()
+
+
+def test_http_count_client_error_raises(spark):
+    """A 400 on ``$count`` is a caller bug (``http_get`` raises 4xx
+    without retrying) and must fail the read, not plan a silent
+    unbounded pull."""
+    import urllib.error
+
+    import pytest
+
+    from priority_data_pipeline_azure_sql_db_spark.sources.odata_like import ODataLikeReader
+
+    srv = _FakeODataServer(_NATION_ROWS, [], count_status=400)
+    try:
+        r = ODataLikeReader({"uri": srv.uri, "entity": "nation",
+                             "orderby": "n_nationkey"}, None)
+        with pytest.raises(urllib.error.HTTPError, match="400"):
+            r.partitions()
+        with pytest.raises(Exception, match="400"):
+            _http_read(spark, srv.uri).collect()
+    finally:
+        srv.close()
 
 
 def test_http_server_driven_paging_next_link(spark):

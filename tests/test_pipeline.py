@@ -206,6 +206,7 @@ def test_merge_partition_stats_prune_and_crash_safety(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import write_json
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
 
     def batch(rows, day):
@@ -268,7 +269,7 @@ def test_merge_partition_stats_prune_and_crash_safety(spark, tmp_path):
     stale = {"pk": ["pk"], "parts": {}}
     store._write_meta("t", stale)
     intent = {"kind": "parts", "data": [], "empty": [], "meta": meta}
-    store._write_intent("t", intent)
+    write_json(store._intent_path("t"), intent)
     store._recover("t")
     assert json.load(open(store._meta_path("t"))) == meta
 
@@ -308,9 +309,10 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     cannot touch — every partition holds the same tenant range
     (uninformative pk[0]) while seq (pk[1]) is partition-aligned — so
     the measured win is direct: a composite sidecar reads 1 of 3
-    partitions where a legacy (first-key-only) sidecar reads all 3.
-    Legacy sidecars stay readable (conservative first-key pruning),
-    and the composite checks stay conservative on every column."""
+    partitions where first-key-only pruning reads all 3. A legacy
+    (pre-round-17) sidecar without ``cols`` is refolded from the live
+    footers, so it prunes on every column too, and the composite
+    checks stay conservative on every column."""
     import json
 
     from pyspark.sql import functions as F
@@ -355,8 +357,9 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     assert {(r.tenant, r.seq) for r in
             got.join(keys, on=pk, how="left_semi").collect()} == {(2, 150)}
 
-    # legacy (pre-round-17) sidecar — "cols" absent: first-key-only
-    # pruning keeps every partition (conservative), never wrong rows
+    # legacy (pre-round-17) sidecar — "cols" absent: treated as
+    # missing, so the zone map is refolded from the live footers and
+    # prunes on every column again
     legacy = {"pk": pk, "parts": {
         s: {k: v for k, v in st.items() if k != "cols"}
         for s, st in meta["parts"].items()}}
@@ -364,7 +367,7 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     got_legacy = store.read_for_keys(spark, "t", keys, pk)
     legacy_parts = {f.split("_load_date=")[1].split("/")[0]
                     for f in got_legacy.inputFiles()}
-    assert legacy_parts == {"2026-01-01", "2026-01-02", "2026-01-03"}
+    assert legacy_parts == {"2026-01-02"}, legacy_parts
 
     # restore composite stats; a second-column UPDATE must still find
     # its old version through the pruned probe (merge correctness)
@@ -706,7 +709,10 @@ def test_merge_schema_evolution(spark, tmp_path):
     MISSING a stored column leaves old values intact."""
     from pyspark.sql import functions as F
 
-    from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import (
+        StagingStore,
+        cdc_audit_delta,
+    )
 
     store = StagingStore(str(tmp_path / "stg"))
     v1 = spark.createDataFrame(
@@ -755,6 +761,24 @@ def test_merge_schema_evolution(spark, tmp_path):
         "stg_k", ["id", "extra"]) == 2
     got = {(r.id, r.val, r.extra) for r in store.read(spark, "stg_k").collect()}
     assert got == {(1, "a", None), (2, "b3", "fresh")}
+
+    # a key on the evolved column where EVERY candidate partition
+    # predates it: the probe and read_for_keys see the column as typed
+    # nulls, a null key matches nothing, so the old row stays and the
+    # delta row is inserted
+    store.overwrite(rows(
+        [(1, "a", "2024-01-01 00:00:00"), (2, "b", "2024-01-01 00:00:00")],
+        "id bigint, val string, extractiontimestamputc string"),
+        "stg_e", pk=["id"])
+    delta = rows([(2, "b2", "fresh", "2024-01-02 00:00:00")], new)
+    key = ["id", "extra"]
+    audit = cdc_audit_delta(
+        store.read_for_keys(spark, "stg_e", delta, key), delta, key)
+    assert {(r.id, r.change_type) for r in audit.collect()} == {
+        (2, "inserted")}
+    assert store.merge(spark, delta, "stg_e", key) == 3
+    got = {(r.id, r.val, r.extra) for r in store.read(spark, "stg_e").collect()}
+    assert got == {(1, "a", None), (2, "b", None), (2, "b2", "fresh")}
 
 
 def test_staging_compact_small_files(spark, sf_dir, tmp_path):

@@ -1143,21 +1143,24 @@ def test_stream_scd2_maintenance(spark, sf_dir, tmp_path):
 
 def test_scd2_hist_bucket_swap_crash_window(spark, tmp_path):
     """Round 12: the SCD2 history is hive-bucketed by the log's _kb and
-    a fold swaps ONLY touched buckets through stage → MANIFEST → swap
-    (the er_index discipline, replacing the flat full-rewrite
+    a fold replaces ONLY touched buckets through store_io's stage →
+    intent → roll-forward commit (replacing the flat full-rewrite
     hist_<id> versioning whose O(store) cost the maintenance probe
-    exposed). Crash cases: (a) stage dirs + MANIFEST written, swap not
-    performed — the next READ rolls forward (swapped bucket visible,
-    ledger advanced, manifest gone); (b) a replay of the committed
-    batch is a ledger no-op; (c) stage junk WITHOUT a manifest is
-    ignored and overwritten by the next fold."""
-    import json
+    exposed). Crash cases: (a) a bucket staged under the tmp root and
+    the intent written, swap not performed — the next READ rolls
+    forward (swapped bucket visible, ledger advanced, intent and stage
+    gone); (b) a replay of the committed batch is a ledger no-op; (c) a
+    stage WITHOUT an intent is ignored and replaced by the next fold."""
     import os
 
     from pyspark.sql import functions as F
 
+    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import (
+        write_intent,
+    )
     from priority_data_pipeline_azure_sql_db_spark.streaming.sink import (
         _HIST_MANIFEST,
+        _HIST_STAGE,
         fold_scd2_batch,
         read_scd2_store,
     )
@@ -1182,20 +1185,21 @@ def test_scd2_hist_bucket_swap_crash_window(spark, tmp_path):
         os.path.join(store, "hist")))
 
     # (a) simulate the crash: hand-stage a relabeled bucket for user 1
-    # and write the MANIFEST, but don't swap. user 1's bucket:
+    # and write the intent, but don't swap. user 1's bucket:
     b1 = spark.createDataFrame([(1,)], "u bigint").select(
         F.pmod(F.xxhash64("u"), F.lit(4)).cast("int").alias("b")
     ).collect()[0].b
     hist_root = os.path.join(store, "hist")
+    stage = os.path.join(store, _HIST_STAGE)
     staged = spark.read.parquet(os.path.join(hist_root, f"_kb={b1}")) \
         .withColumn("state", F.lit("CRASHED_SWAP_STATE"))
-    staged.write.mode("overwrite").parquet(
-        os.path.join(hist_root, f".stage_{b1}"))
-    with open(os.path.join(store, _HIST_MANIFEST), "w") as fh:
-        json.dump({"buckets": [b1], "batch_id": 7}, fh)
+    staged.write.mode("overwrite").parquet(os.path.join(stage, f"_kb={b1}"))
+    write_intent(os.path.join(store, _HIST_MANIFEST), stage, [f"_kb={b1}"],
+                 batch_id=7)
     got = canon(read_scd2_store(spark, store))  # read rolls forward
     assert ("CRASHED_SWAP_STATE" in {r[1] for r in got})
     assert not os.path.exists(os.path.join(store, _HIST_MANIFEST))
+    assert not os.path.exists(stage)
     with open(os.path.join(store, "CURRENT")) as fh:
         assert fh.read().startswith("7\n")
 
@@ -1206,13 +1210,16 @@ def test_scd2_hist_bucket_swap_crash_window(spark, tmp_path):
     ) is False
     assert canon(read_scd2_store(spark, store)) == got
 
-    # (c) orphan stage dir without a manifest: next fold overwrites it
-    os.makedirs(os.path.join(hist_root, ".stage_0"), exist_ok=True)
+    # (c) orphan stage without an intent: reads ignore it, the next
+    # fold replaces it
+    os.makedirs(os.path.join(stage, "_kb=0"), exist_ok=True)
+    assert canon(read_scd2_store(spark, store)) == got
     assert fold_scd2_batch(
         spark, store, mk([(2, "y", "2026-03-01 00:00:00", 30)]), 8,
         ["user_id"], ["state"], "ts", ["seq"], n_log_buckets=4,
     ) is True
     after = canon(read_scd2_store(spark, store))
+    assert not os.path.exists(stage)
     assert (2, "y", "2026-03-01 00:00:00", "None", True) in after
     # untouched entity 1's rows unchanged by entity 2's fold
     assert {r for r in after if r[0] == 1} == {r for r in got if r[0] == 1}
@@ -1491,14 +1498,16 @@ def test_er_index_store_rebuild_equality(spark, tmp_path):
     after appending, the standing cluster map matches a fresh build on
     the grown base, including cluster MERGES bridged by an appended
     record; a retried append is a no-op; serving from the store equals
-    serving from the rebuilt store; a crashed bucket swap (MANIFEST
-    present, stage dirs written) rolls forward on the next touch."""
-    import json
+    serving from the rebuilt store; a crashed bucket swap (intent
+    present, bucket staged) rolls forward on the next touch."""
     import os
 
     from pyspark.sql import functions as F
 
     from priority_data_pipeline_azure_sql_db_spark.operators import er_index as EI
+    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import (
+        write_intent,
+    )
 
     def mk(rows):
         return spark.createDataFrame(rows, "id bigint, name string, grp int")
@@ -1551,9 +1560,9 @@ def test_er_index_store_rebuild_equality(spark, tmp_path):
     assert by_id[100][1] == 1 and by_id[100][4] is True   # joined merged cluster
     assert by_id[101] == (101, 101, "zzzz", None, False)  # singleton seed
 
-    # crash window: stage dirs + MANIFEST written, swap not performed —
+    # crash window: bucket staged + intent written, swap not performed —
     # simulate by staging a relabel of node 9 into its bucket and
-    # writing the MANIFEST by hand; the next read must roll it forward
+    # writing the intent by hand; the next read must roll it forward
     b9 = spark.createDataFrame([(9,)], "n bigint").select(
         F.pmod(F.xxhash64("n"), F.lit(4)).cast("int").alias("b")
     ).collect()[0].b
@@ -1565,16 +1574,18 @@ def test_er_index_store_rebuild_equality(spark, tmp_path):
             F.pmod(F.xxhash64("n"), F.lit(4)).cast("int").alias("b")
         ).collect()[0].b == b9
     ]
+    stage = os.path.join(p1, EI.CLUSTERS_STAGE_DIR)
     spark.createDataFrame(
         bucket_rows, "node bigint, cluster_id bigint"
     ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(cl_root, f".stage_{b9}")
+        os.path.join(stage, f"_cb={b9}")
     )
-    with open(os.path.join(p1, EI.MANIFEST_FILE), "w") as fh:
-        json.dump({"buckets": [b9]}, fh)
+    write_intent(os.path.join(p1, EI.MANIFEST_FILE), stage, [f"_cb={b9}"])
     rolled = dict(cmap(p1))  # read_er_clusters rolls forward
     assert rolled[9] == 424242
+    assert os.path.isdir(os.path.join(cl_root, f"_cb={b9}"))
     assert not os.path.exists(os.path.join(p1, EI.MANIFEST_FILE))
+    assert not os.path.exists(stage)
 
 
 def test_first_token_blocking_recall(spark):
@@ -2830,3 +2841,27 @@ def test_curation_dsir_capstone_narrow_plan(spark, sf_dir):
         )
     finally:
         spark.catalog.clearCache()
+
+
+def test_host_resources_sizes_session_to_host(tmp_path, monkeypatch):
+    """``get_spark()`` defaults come from the host: the cores this
+    process may run on and half of ``MemTotal`` (at least 1g), with
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` as overrides."""
+    import os
+
+    from priority_data_pipeline_azure_sql_db_spark.session import host_resources
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemFree:         1000 kB\n"
+                       "MemTotal:       16384000 kB\n")
+    cores = len(os.sched_getaffinity(0))
+    assert host_resources(str(meminfo)) == (cores, "8000m")
+    meminfo.write_text("MemTotal:         500000 kB\n")
+    assert host_resources(str(meminfo)) == (cores, "1024m")  # 1g floor
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    # both overridden: meminfo is not read at all
+    assert host_resources(str(tmp_path / "absent")) == (3, "2g")
