@@ -7,11 +7,16 @@ reference's blind append) → bookmark advance ONLY after every output
 table committed (the reference advanced lastRun even on partial failure,
 reference resources/priorityDataSource.py:185-195,229).
 
-The per-entity loop is fail-soft exactly like the reference's O22: an
-entity's error is recorded in the results and the loop continues. Entities
-are independent Spark jobs; on a cluster they can be submitted from a
-thread pool and the scheduler interleaves them — the sequential loop here
-is a driver-side choice, not an engine limit.
+Loads run concurrently on one session: a refresh submits its entities
+to a thread pool, and each entity loads its output tables on a pool of
+its own, so the scheduler interleaves their small jobs instead of the
+driver waiting on one job at a time. Every worker inherits the caller's
+job group and local properties. One writer per table: entities that
+name a common output table run one after another in config order on one
+worker, so a table's writes stay serial. Entities are fail-soft exactly
+like the reference's O22: an entity's error is recorded in the results
+and the others continue; a table's error leaves its sibling tables
+committed and only the entity's bookmark unadvanced.
 
 Staging store: parquet directories (local stand-in for the Azure SQL
 staging schema). A real deployment swaps ``StagingStore`` for
@@ -36,9 +41,11 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -730,13 +737,19 @@ class PipelineRunner:
         genuinely nested sources and are verified equivalent in tests.
         """
         pk = primary_key(ent.entity_id)
-        out: dict[str, DataFrame] = {f"stg_{ent.entity_id.lower()}": self._finish(parent)}
-        for sub in ent.expand:
+        names = self._output_tables(ent)
+        out: dict[str, DataFrame] = {names[0]: self._finish(parent)}
+        for table, sub in zip(names[1:], ent.expand):
             child = load_table(self.spark, self.source_dir, sub)
             child_keys = [self._child_key(child, k, ent.expand_keys) for k in pk]
-            flat = flatten_expand(parent, child, pk, child_keys)
-            out[f"stg_{sub.lower()}"] = self._finish(flat)
+            out[table] = self._finish(flatten_expand(parent, child, pk, child_keys))
         return out
+
+    @staticmethod
+    def _output_tables(ent: EntityConfig) -> list[str]:
+        """The staging tables ``ent`` writes: ``stg_<entity>``, then one
+        ``stg_<subform>`` per $expand entry."""
+        return [f"stg_{n.lower()}" for n in [ent.entity_id, *ent.expand]]
 
     def _finish(self, df: DataFrame) -> DataFrame:
         return add_audit_columns(lowercase_columns(df), self.extraction_id, self.extraction_ts)
@@ -748,6 +761,14 @@ class PipelineRunner:
                     cdc_audit: bool = False,
                     result: RunResult | None = None) -> dict[str, int]:
         """O13: overwrite on full load, MERGE-upsert on incremental.
+
+        Each output table loads on its own worker (:meth:`_load_table`).
+        After the join, the per-table row counts, CDC tallies and CDC
+        errors are set on ``result`` in output-table order. A table's
+        failure does not stop its siblings: they commit, then this
+        raises one error naming every failed table, so the caller leaves
+        the entity's bookmark where it was (the group-replace merge
+        makes the re-run idempotent).
 
         Child (sub-form) tables carry the parent PK in place of their own
         FK columns after explosion, so the merge key is parent_pk + the
@@ -763,24 +784,53 @@ class PipelineRunner:
         is recorded on ``result.cdc_error`` and the merge proceeds —
         an observability feature must never block the load it observes.
         """
-        written: dict[str, int] = {}
-        for table, df in outputs.items():
-            src = table.removeprefix("stg_")
+        done = dict(zip(outputs, self._concurrently(
+            lambda item: self._load_table(ent, *item, incremental, cdc_audit),
+            list(outputs.items()))))
+        written = {t: rows for t, (rows, _, _, exc) in done.items() if exc is None}
+        if result is not None:
+            result.tables = written
+            result.cdc = {t: cdc for t, (_, cdc, _, _) in done.items() if cdc}
+            result.cdc_error = "; ".join(
+                f"{t}: {err}" for t, (_, _, err, _) in done.items() if err) or None
+        failed = [f"{t}: {type(exc).__name__}: {exc}"
+                  for t, (_, _, _, exc) in done.items() if exc is not None]
+        if failed:
+            raise RuntimeError("; ".join(failed))
+        return written
 
-            def _key() -> list[str]:
-                if src == ent.entity_id.lower():
-                    return primary_key(src)
-                return primary_key(ent.entity_id) + [  # sub-form child
-                    k for k in primary_key(src) if k in df.columns
-                ]
+    def _load_table(self, ent: EntityConfig, table: str, df: DataFrame,
+                    incremental: bool, cdc_audit: bool) -> tuple:
+        """One output table's load: ``(rows, cdc tally, cdc error, error)``.
+        Never raises, so a failing table cannot stop its siblings."""
+        src = table.removeprefix("stg_")
 
-            if incremental and self.store.exists(table):
-                # the delta plan (scan → watermark filter → flatten →
-                # audit columns) is executed by the CDC audit write AND
-                # 2-3 times inside merge (touched-partition probes + the
-                # tmp write) — cache it once instead of re-running the
-                # full extract per action
-                df = df.cache()
+        def _key() -> list[str]:
+            if src == ent.entity_id.lower():
+                return primary_key(src)
+            return primary_key(ent.entity_id) + [  # sub-form child
+                k for k in primary_key(src) if k in df.columns
+            ]
+
+        cdc = cdc_err = None
+        try:
+            if not (incremental and self.store.exists(table)):
+                # pk at full-load time seeds the partition-stats sidecar,
+                # so the FIRST incremental merge already prunes. An
+                # uncataloged entity (no PK registered) still full-loads —
+                # its first merge folds the live footers instead.
+                try:
+                    key = _key()
+                except KeyError:
+                    key = None
+                return self.store.overwrite(df, table, pk=key), None, None, None
+            # the delta plan (scan → watermark filter → flatten → audit
+            # columns) feeds read_for_keys's _delta_profile, the audit
+            # write, merge's own _delta_profile, its touched-partition
+            # collect and its stage write — cache it once instead of
+            # re-running the full extract per action
+            df = df.cache()
+            try:
                 key = _key()
                 if cdc_audit:
                     try:
@@ -803,62 +853,80 @@ class PipelineRunner:
                         # materialize the audit BEFORE the merge swaps
                         # the table's partition dirs out from under it
                         self.store.overwrite(audit, f"{table}__cdc")
-                        if result is not None:
-                            result.cdc[table] = {
-                                t: n for t, n in tally.get.items() if n}
+                        cdc = {t: n for t, n in tally.get.items() if n}
                     except Exception as exc:  # advisory: never block the load
-                        if result is not None:
-                            # ACCUMULATE per table — a scalar overwrite
-                            # would keep only the last failing table's
-                            # error in a multi-table entity
-                            msg = f"{table}: {type(exc).__name__}: {exc}"
-                            result.cdc_error = (
-                                f"{result.cdc_error}; {msg}"
-                                if result.cdc_error else msg
-                            )
-                try:
-                    written[table] = self.store.merge(self.spark, df, table, key)
-                finally:
-                    df.unpersist()
-            else:
-                # pk at full-load time seeds the partition-stats sidecar,
-                # so the FIRST incremental merge already prunes. An
-                # uncataloged entity (no PK registered) still full-loads —
-                # its first merge folds the live footers instead.
-                try:
-                    key = _key()
-                except KeyError:
-                    key = None
-                written[table] = self.store.overwrite(df, table, pk=key)
-        return written
+                        cdc_err = f"{type(exc).__name__}: {exc}"
+                return self.store.merge(self.spark, df, table, key), cdc, cdc_err, None
+            finally:
+                df.unpersist()
+        except Exception as exc:
+            return None, cdc, cdc_err, exc
+
+    def _concurrently(self, fn, items: list) -> list:
+        """``fn`` over ``items`` on min(len(items), defaultParallelism)
+        threads; results in ``items`` order. Each call inherits the
+        caller's job group and local properties (a fresh copy per call:
+        a shared copy would leak one thread's SQL execution id into
+        another's jobs)."""
+        n = min(len(items), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max(n, 1)) as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(fn), x)
+                       for x in items]
+            return [f.result() for f in futures]
 
     # -- orchestration (EP1/EP2) ---------------------------------------------
 
     def refresh_data(self, incremental: bool = True,
                      cdc_audit: bool = False) -> list[RunResult]:
-        """EP1: per-entity extract→parse→load→bookmark, fail-soft (O22).
-        ``cdc_audit`` opts each incremental merge into the persisted
-        per-row change audit (see :meth:`load_entity`)."""
+        """EP1: per-entity extract→parse→load→bookmark, fail-soft (O22),
+        entities concurrently (:meth:`_writer_chains`); results in config
+        order. ``cdc_audit`` opts each incremental merge into the
+        persisted per-row change audit (see :meth:`load_entity`)."""
         self._new_run_identity()  # one fresh (id, ts) per run, not per runner
-        results: list[RunResult] = []
-        for ent in self.config.entities:
-            res = RunResult(entity=ent.entity_id)
-            try:
-                nested = self.extract_entity(ent, incremental)
-                outputs = self.parse_entity(ent, nested)
-                res.tables = self.load_entity(
-                    ent, outputs, incremental,
-                    cdc_audit=cdc_audit, result=res,
-                )
-                # Bookmark advances only after EVERY table for this entity
-                # committed (fixes reference at-most-once defect).
-                ent.last_run = self.config.format_bookmark(
-                    self.extraction_ts.replace(tzinfo=timezone.utc)
-                )
-            except Exception as exc:  # fail-soft: record, continue (O22)
-                res.error = f"{type(exc).__name__}: {exc}"
-            results.append(res)
-        return results
+        ents = self.config.entities
+
+        def run_chain(chain: list[int]) -> list[tuple[int, RunResult]]:
+            return [(i, self._refresh_entity(ents[i], incremental, cdc_audit))
+                    for i in chain]
+
+        done = dict(p for ps in self._concurrently(
+            run_chain, self._writer_chains(ents)) for p in ps)
+        return [done[i] for i in range(len(ents))]
+
+    def _refresh_entity(self, ent: EntityConfig, incremental: bool,
+                        cdc_audit: bool) -> RunResult:
+        res = RunResult(entity=ent.entity_id)
+        try:
+            nested = self.extract_entity(ent, incremental)
+            outputs = self.parse_entity(ent, nested)
+            self.load_entity(ent, outputs, incremental,
+                             cdc_audit=cdc_audit, result=res)
+            # Bookmark advances only after EVERY table for this entity
+            # committed (fixes reference at-most-once defect).
+            ent.last_run = self.config.format_bookmark(
+                self.extraction_ts.replace(tzinfo=timezone.utc)
+            )
+        except Exception as exc:  # fail-soft: record, continue (O22)
+            res.error = f"{type(exc).__name__}: {exc}"
+        return res
+
+    @classmethod
+    def _writer_chains(cls, ents: list[EntityConfig]) -> list[list[int]]:
+        """Entity indices in chains that run one after another in config
+        order: entities sharing an output table (an entity ``lineitem``
+        and ``orders`` with ``expand: [lineitem]``) join one chain, so
+        each table has one writer at a time and its writes land in
+        config order. The store's commit assumes a single writer per
+        table, and an overwrite's last writer wins."""
+        chains: list[tuple[set[str], list[int]]] = []
+        for i, ent in enumerate(ents):
+            tables, chain = set(cls._output_tables(ent)), [i]
+            for c in [c for c in chains if c[0] & tables]:
+                chains.remove(c)
+                tables |= c[0]
+                chain = c[1] + chain
+            chains.append((tables, sorted(chain)))
+        return sorted(c for _, c in chains)
 
     def initial_data_load(self) -> list[RunResult]:
         """EP2: full load (dataStartDate lower bound, overwrite mode)."""

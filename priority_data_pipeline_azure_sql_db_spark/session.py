@@ -95,6 +95,10 @@ def get_spark(
         # residual risk. Measured at sf0.1 (AQE-off bench session,
         # interleaved): q21 0.94->0.78, er_fuzzy 1.01->0.89,
         # curation_v3 1.87->1.68, winnow_capped 1.90->1.72, dsir/q2 flat.
+        # Rollback: get_spark(extra_conf={"spark.sql.join.preferSortMergeJoin":
+        # "true"}). An SHJ build side is an in-memory hash map that cannot
+        # spill, so a skewed or underestimated partition (AQE off, or a
+        # bad size estimate) can OOM a task that sort-merge would spill.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

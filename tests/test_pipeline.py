@@ -1301,3 +1301,160 @@ def test_ddl_boolean_and_pk_order():
                            dialect="azuresql", with_audit=False)
     assert "returned BIT" in ddl
     assert "PRIMARY KEY (l_orderkey, l_linenumber)" in ddl
+
+
+# -- concurrent loads --------------------------------------------------------
+
+_AUDIT_COLS = ("extractionid", "extractiontimestamputc")
+
+
+def _ent(entity, expand=(), last_run=None, filter_field=""):
+    return {"EntityID": entity, "filterFlag": bool(filter_field),
+            "filterField": filter_field, "expand": list(expand),
+            "lastRun": last_run, "dataStartDate": "1990-01-01 00:00:00"}
+
+
+def _cfg(*ents):
+    from priority_data_pipeline_azure_sql_db_spark.config import ExtractionConfig
+
+    return ExtractionConfig.from_dict(
+        {"datasourceName": "cc", "systemTimezone": "UTC", "entities": list(ents)})
+
+
+def _orders(last_run=None):
+    return _ent("orders", ["lineitem"], last_run, "o_orderdate")
+
+
+def _v1_dir(spark, sf_dir, out_dir):
+    """The ``_cdc_v1_source`` orders beside the true lineitem and customer."""
+    import os
+
+    _cdc_v1_source(spark, sf_dir, out_dir)
+    for t in ("lineitem", "customer"):
+        os.symlink(os.path.join(sf_dir, f"{t}.parquet"),
+                   os.path.join(out_dir, f"{t}.parquet"))
+    return out_dir
+
+
+def _store_tables(store):
+    import os
+
+    return sorted(e for e in os.listdir(store.root)
+                  if os.path.isdir(os.path.join(store.root, e))
+                  and not e.endswith(".__tmp__"))
+
+
+def _assert_same_store(spark, a, b):
+    """Both stores hold the same tables with the same rows (audit
+    columns aside: every run stamps its own extraction id)."""
+    assert _store_tables(a) == _store_tables(b)
+    for t in _store_tables(a):
+        x = a.read(spark, t).drop(*_AUDIT_COLS)
+        y = b.read(spark, t).drop(*_AUDIT_COLS)
+        assert sorted(x.columns) == sorted(y.columns), t
+        y = y.select(*x.columns)
+        assert x.count() == y.count() and x.exceptAll(y).count() == 0, t
+
+
+def test_concurrent_refresh_equals_serial(spark, sf_dir, tmp_path):
+    """A two-entity refresh (entities and tables loaded concurrently)
+    leaves the same store and the same per-table RunResult counts as the
+    same entities run as one-entity configs back to back."""
+    v1 = _v1_dir(spark, sf_dir, str(tmp_path / "v1"))
+    ents = [_orders("1998-01-01 00:00:00"), _ent("customer")]
+    conc = StagingStore(str(tmp_path / "conc"))
+    ser = StagingStore(str(tmp_path / "ser"))
+    PipelineRunner(spark, _cfg(*ents), conc, v1).initial_data_load()
+    for e in ents:
+        PipelineRunner(spark, _cfg(e), ser, v1).initial_data_load()
+
+    got = PipelineRunner(spark, _cfg(*ents), conc, sf_dir).refresh_data(
+        incremental=True, cdc_audit=True)
+    want = [r for e in ents for r in PipelineRunner(spark, _cfg(e), ser, sf_dir)
+            .refresh_data(incremental=True, cdc_audit=True)]
+    assert [r.entity for r in got] == ["orders", "customer"]
+    assert all(r.error is None and r.cdc_error is None for r in got + want)
+    assert [r.tables for r in got] == [r.tables for r in want]
+    assert [r.cdc for r in got] == [r.cdc for r in want]
+    assert list(got[0].tables) == ["stg_orders", "stg_lineitem"]
+    assert got[0].cdc["stg_orders"]["updated"] > 0  # v1's stale prices
+    _assert_same_store(spark, conc, ser)
+
+
+@pytest.mark.parametrize("failing", ["stg_lineitem", "stg_orders"])
+def test_failed_table_leaves_siblings_committed(
+        spark, sf_dir, tmp_path, monkeypatch, failing):
+    """One table's merge raising: its sibling tables and the other
+    entity still commit, only the failing entity's bookmark stays put,
+    and results keep config order."""
+    from pyspark.sql import functions as F
+
+    store = StagingStore(str(tmp_path / "stg"))
+    PipelineRunner(spark, _cfg(_orders(), _ent("customer")), store,
+                   sf_dir).initial_data_load()
+    cfg = _cfg(_orders("1998-01-01 00:00:00"), _ent("customer"))
+    real = StagingStore.merge
+
+    def merge(self, spark_, delta, table, pk):
+        if table == failing:
+            raise RuntimeError("merge exploded")
+        return real(self, spark_, delta, table, pk)
+
+    monkeypatch.setattr(StagingStore, "merge", merge)
+    runner = PipelineRunner(spark, cfg, store, sf_dir)
+    orders, customer = runner.refresh_data(incremental=True)
+    assert (orders.entity, customer.entity) == ("orders", "customer")
+    assert failing in orders.error and "merge exploded" in orders.error
+    assert cfg.entities[0].last_run == "1998-01-01 00:00:00"
+    assert customer.error is None and cfg.entities[1].last_run is not None
+    siblings = {"stg_orders", "stg_lineitem"} - {failing}
+    assert set(orders.tables) == siblings
+    assert set(customer.tables) == {"stg_customer"}
+    for t in ["stg_customer", *siblings, failing]:
+        stamped = store.read(spark, t).filter(
+            F.col("extractionid") == runner.extraction_id).count()
+        assert (stamped > 0) == (t != failing), t
+
+
+def test_refresh_jobs_inherit_callers_job_group(spark, sf_dir, tmp_path):
+    """Every job of a refresh, whichever worker thread runs it, carries
+    the job group set on the caller's thread."""
+    sc = spark.sparkContext
+    store = StagingStore(str(tmp_path / "stg"))
+    runner = PipelineRunner(spark, _cfg(_orders(), _ent("customer")), store, sf_dir)
+    group = "test-refresh-job-group"
+    sc.setJobGroup(group, "concurrent refresh")
+    try:
+        spark.range(1).collect()
+        runner.initial_data_load()
+        runner.refresh_data(incremental=True, cdc_audit=True)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) > 10
+    assert set(range(min(jobs), max(jobs) + 1)) == jobs
+
+
+def test_shared_table_entities_write_in_config_order(spark, sf_dir, tmp_path):
+    """Two entities that write one table (``lineitem`` itself, and
+    ``orders`` expanding it into ``stg_lineitem``) give the same store
+    as running the two one after the other: one writer per table, in
+    config order."""
+    ents = [_ent("lineitem"), _orders("1998-01-01 00:00:00")]
+    assert PipelineRunner._writer_chains(
+        _cfg(*ents, _ent("customer")).entities) == [[0, 1], [2]]
+    conc = StagingStore(str(tmp_path / "conc"))
+    ser = StagingStore(str(tmp_path / "ser"))
+    for incremental in (False, True):
+        got = PipelineRunner(spark, _cfg(*ents), conc, sf_dir).refresh_data(
+            incremental=incremental)
+        want = [r for e in ents for r in PipelineRunner(spark, _cfg(e), ser, sf_dir)
+                .refresh_data(incremental=incremental)]
+        assert all(r.error is None for r in got + want)
+        assert [r.tables for r in got] == [r.tables for r in want]
+    # the last writer of stg_lineitem is orders' flattened child
+    assert "o_orderkey" in conc.read(spark, "stg_lineitem").columns
+    _assert_same_store(spark, conc, ser)
