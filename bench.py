@@ -16,25 +16,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from priority_data_pipeline_azure_sql_db_spark import queries as _qmod  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.queries import QUERIES  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.session import get_spark  # noqa: E402
-
-
-def _resolve(name: str):
-    """Registry entry, else the module-level function of the same name —
-    registry-RETIRED queries (dedup_minhash_lsh, round 13) keep their
-    frozen CORE timing series through the importable function; a name
-    that is neither is a real error."""
-    return QUERIES.get(name) or getattr(_qmod, name)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Round-9 split (VERDICT r8 ask #8): the bench reports TWO totals so
 # round-over-round deltas stay like-for-like as coverage grows.
-# CORE is FROZEN — the 28 queries benched every round since r7; do not
-# add to it (new work goes to the annex; a core entry may only be
-# REMOVED if its operator is retired). ANNEX rotates: recent rounds'
+# CORE is FROZEN — the queries benched every round since r7 (28, then
+# 22 once the retired query functions were deleted); do not add to it
+# (new work goes to the annex; a core entry may only be REMOVED if its
+# operator is retired). ANNEX rotates: recent rounds'
 # representatives, replaced as rounds age out.
 CORE = [
     "pipeline_e2e_flagship",
@@ -48,22 +40,16 @@ CORE = [
     "events_sessionize",
     "events_tumbling_hourly",
     "dedup_exact_docs",
-    "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
     "ann_cosine_topk",
     "text_quality_score",
     # round-2 operators
-    "embedding_near_dup_pairs",
     "text_winnow_fingerprints",
     "sample_documents_hash",
-    # round-4/5: the capped variants ARE the production near-dup plans
-    # (uncapped twins remain registered for the exact oracle)
-    "dedup_jaccard_pairs_capped",
-    "dedup_winnow_pairs_capped",
-    # round-7: the RESIDENT twins — same answer, persisted fingerprint
-    # store built once at plan time (outside the timed region), so these
-    # report the steady-state serving cost while the one-shot entries
-    # above keep reporting the cold build+join cost
+    # round-7: the RESIDENT twins of the capped production near-dup
+    # plans — persisted fingerprint store built once at plan time
+    # (outside the timed region), so these report the steady-state
+    # serving cost
     "dedup_jaccard_pairs_indexed",
     "dedup_winnow_pairs_indexed",
     "embedding_near_dup_indexed",
@@ -72,13 +58,8 @@ CORE = [
     # stage against the standing index)
     "pack_materialized_sequences",
     "pipeline_curation_incremental",
-    # round-8: the (shard, bucket)-windowed batch schedule (froze into
-    # core with the r9 split: it was benched r8 and its operator is a
-    # steady-state training-pipeline stage)
-    "pack_length_bucket_batches",
     # round-5: correlated-subquery family representatives
     "q2_min_cost_supplier",
-    "q21_last_shipper",
 ]
 
 ANNEX = [
@@ -276,7 +257,7 @@ def main() -> None:
         # one failing entry must not discard the whole run's timings
         # (review finding): record the failure, keep benching
         try:
-            df = _resolve(name)(spark, SF_DIR)  # plan ONCE; execute hot below
+            df = QUERIES[name](spark, SF_DIR)  # plan ONCE; execute hot below
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"
             print(f"[bench] {name}: PLAN ERROR {errors[name]}", file=sys.stderr)
@@ -348,7 +329,9 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         # the round-over-round comparable number is core_total: CORE is
-        # frozen at 28 queries, while the annex rotates with new work
+        # frozen (22 queries since the retired ones were deleted, so
+        # core_total before and after that change is not comparable),
+        # while the annex rotates with new work
         "core_total": core_total,
         "annex_total": annex_total,
         # fixed-work pure-codegen probe (no I/O): host-speed control.

@@ -1,10 +1,10 @@
 """Persisted dedup fingerprint store: build once, serve many (round 7).
 
-The capped winnow/Jaccard pair queries pay their full fingerprint build
-(normalize → k-gram md5 → window mins → distinct, the dominant ~70% of
-wall time) on EVERY run — right for one-shot analytics, wrong for the
-production loop where the same corpus is re-queried (different caps /
-thresholds / deltas) many times. This module splits the two phases
+A one-shot capped winnow/Jaccard pair join pays its full fingerprint
+build (normalize → k-gram md5 → window mins → distinct, the dominant
+~70% of wall time) on EVERY run — right for one-shot analytics, wrong
+for the production loop where the same corpus is re-queried
+(different caps / thresholds / deltas) many times. This module splits the two phases
 exactly like the persisted IVF index (operators/ann_index.py):
 
 - :func:`build_dedup_index` computes the fingerprint relation once and
@@ -33,9 +33,10 @@ order, and the doc-frequency cap computes per file-cluster with minimal
 shuffle skew. Serving still shuffles on fp (plain parquet carries no
 bucketing metadata) but moves only (doc, fp) pairs, never text.
 
-Both serve paths are value-identical to their one-shot twins
-(dedup_winnow_pairs_capped / dedup_jaccard_pairs_capped share the same
-DuckDB oracle SQL), so the driver hash-checks the whole
+Both serve paths are value-identical to a one-shot capped pair join
+over the same canon corpus (dedup_winnow_pairs_indexed /
+dedup_jaccard_pairs_indexed are graded against the one-shot DuckDB
+oracle SQL), so the driver hash-checks the whole
 build→persist→read→join cycle.
 """
 
@@ -325,15 +326,10 @@ def append_to_dedup_index(spark: SparkSession, path: str,
     the dedup_append leg of tools/maintenance_probe.py measures this
     path's marginal cost vs standing-store size). At cluster scale the
     anti-join shuffles delta + docs-table rows only — compact ids,
-    never fingerprints or text. A store built before round 15 lacks
-    the base docs table; the first append derives it from the base
-    fingerprints' doc column ONCE and persists it (idempotent overwrite
-    of derived data — safe at any crash point), restoring O(docs)
-    membership for every later append. In that legacy-upgrade case a
-    zero-fingerprint document in the BASE build is unknowable and
-    re-appends once into a delta docs table, harmlessly (zero
-    fingerprint rows, zero pair impact); r15+ builds and compactions
-    track zero-fp docs exactly."""
+    never fingerprints or text. Builds and compactions track
+    zero-fingerprint docs exactly. A store built before round 15 has no
+    base docs table and must be rebuilt; its first append fails on the
+    missing path."""
     import json
 
     from .dedup import word_shingles
@@ -350,13 +346,7 @@ def append_to_dedup_index(spark: SparkSession, path: str,
         p = json.load(fh)
     id_col, text_col = p["id_col"], p["text_col"]
 
-    base_docs = os.path.join(path, DOCS_DIR)
-    if not os.path.exists(os.path.join(base_docs, "_SUCCESS")):
-        # pre-r15 store: one-time upgrade from the base fps relation
-        base_fps, _ = _store_state(path, FPS_DIR)
-        spark.read.parquet(base_fps).select(F.col("doc")).distinct() \
-            .write.mode("overwrite").parquet(base_docs)
-    present = spark.read.parquet(base_docs)
+    present = spark.read.parquet(os.path.join(path, DOCS_DIR))
     for n in _committed_deltas(path):
         d = os.path.join(path, f"{_DELTA_DOCS}{n}")
         if os.path.isdir(d):
@@ -445,16 +435,9 @@ def compact_dedup_index(spark: SparkSession, path: str) -> int:
             os.path.join(stage, SIZES_DIR)
         )
     # fold the membership tables too (round 15): merged docs = base docs
-    # (derived from base fps for a pre-r15 store) ∪ consumed delta docs,
-    # so appended zero-fingerprint docs STAY tracked across compactions
-    # and the post-compact membership read never falls back to an fps
-    # scan
-    base_docs = os.path.join(path, DOCS_DIR)
-    if os.path.exists(os.path.join(base_docs, "_SUCCESS")):
-        docs = spark.read.parquet(base_docs)
-    else:
-        base_fps, _ = _store_state(path, FPS_DIR)
-        docs = spark.read.parquet(base_fps).select(F.col("doc")).distinct()
+    # ∪ consumed delta docs, so appended zero-fingerprint docs STAY
+    # tracked across compactions
+    docs = spark.read.parquet(os.path.join(path, DOCS_DIR))
     for n in gens:
         d = os.path.join(path, f"{_DELTA_DOCS}{n}")
         if os.path.isdir(d):

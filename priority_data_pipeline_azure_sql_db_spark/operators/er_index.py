@@ -108,16 +108,6 @@ def _read_meta(path: str) -> dict:
         return json.load(fh)
 
 
-def _meta_passes(meta: dict) -> list[list[str]]:
-    """META back-compat (round-12 review): a store built before the
-    multi-pass change recorded ``block_cols`` — the one-pass spelling
-    IS the same store, so normalize instead of KeyError-ing a
-    checkpoint-restarted append against a standing store."""
-    if "block_passes" in meta:
-        return meta["block_passes"]
-    return [list(meta["block_cols"])]
-
-
 def _normalize_passes(block_cols, block_passes) -> list[list[str]]:
     """One canonical blocking spec (round 12 — VERDICT r11 ask #2):
     ``block_cols`` (the original AND-agreement single pass) normalizes
@@ -265,13 +255,7 @@ def ensure_er_index(base: DataFrame, path: str, **kwargs) -> str:
     try:
         with open(os.path.join(path, META_FILE)) as fh:
             have = json.load(fh)
-        # normalize a block_cols-era META to the block_passes form so a
-        # pre-upgrade store still serves under its (identical) params
-        if have is not None and "block_passes" not in have:
-            passes = _meta_passes(have)
-            have = {k: v for k, v in have.items() if k != "block_cols"}
-            have["block_passes"] = passes
-    except (OSError, ValueError, KeyError):
+    except (OSError, ValueError):
         have = None
     if have != want:
         raise ValueError(
@@ -322,7 +306,7 @@ def assign_from_index(
     clusters = read_er_clusters(spark, path)
     m = multi_pass_match_delta(
         base, delta, key_col=key_col, id_col=id_col,
-        block_keys=_pass_keys(_meta_passes(meta)),
+        block_keys=_pass_keys(meta["block_passes"]),
         max_edit=meta["max_edit"],
     )
     w = Window.partitionBy("delta_id").orderBy("edit_distance", "base_id")
@@ -410,7 +394,7 @@ def append_to_er_index(
     _roll_forward(path)
     meta = _read_meta(path)
     id_col, key_col = meta["id_col"], meta["key_col"]
-    passes, max_edit = _meta_passes(meta), meta["max_edit"]
+    passes, max_edit = meta["block_passes"], meta["max_edit"]
     n_buckets = meta["n_buckets"]
     base = spark.read.parquet(os.path.join(path, BASE_DIR))
     existing = base.select(F.col(id_col))

@@ -344,15 +344,15 @@ class StagingStore:
         whole or not at all. O(candidate partitions) instead of
         O(store) — the same pruning the MERGE's old-version probe
         uses. A key column the read partitions lack is added as typed
-        nulls (:meth:`_with_keys`)."""
+        nulls (:meth:`_with_keys`). With no candidate partition the
+        result is an empty frame of ``keys``' schema, and the table's
+        files are not opened at all."""
         self._recover(table)
         cand = self._prune_candidates(
             self._zone_map(table, pk), self._delta_profile(keys, pk))
         df = self._read_subs(spark, table, cand)
         if df is None:
-            # no candidate partition exists on disk: typed-empty via a
-            # zero-row slice of the full table (metadata-only read)
-            return self._with_keys(self.read(spark, table).limit(0), pk, keys)
+            return keys.limit(0)
         return self._with_keys(df.drop(PARTITION_COL), pk, keys)
 
     @staticmethod
@@ -867,11 +867,16 @@ class PipelineRunner:
         threads; results in ``items`` order. Each call inherits the
         caller's job group and local properties (a fresh copy per call:
         a shared copy would leak one thread's SQL execution id into
-        another's jobs)."""
+        another's jobs). With pyspark's pinned-thread mode off there is
+        nothing to inherit: pyspark hands back the session instead of a
+        wrapper, and ``fn`` runs as is."""
+        def inheriting(f):
+            wrap = inheritable_thread_target(self.spark)
+            return f if wrap is self.spark else wrap(f)
+
         n = min(len(items), self.spark.sparkContext.defaultParallelism)
         with ThreadPoolExecutor(max(n, 1)) as pool:
-            futures = [pool.submit(inheritable_thread_target(self.spark)(fn), x)
-                       for x in items]
+            futures = [pool.submit(inheriting(fn), x) for x in items]
             return [f.result() for f in futures]
 
     # -- orchestration (EP1/EP2) ---------------------------------------------

@@ -978,31 +978,6 @@ def q10_returned_items(spark, sf_dir):
     )
 
 
-# RETIRED from the registry in round 15 (pre-committed r15 exit #9 in
-# the __spark_entry__ rotation comment; leaves with fresh r14 driver
-# evidence): its two constituent shapes stay registered —
-# q6_revenue_forecast (lineitem date-band scan-agg, the judge-named P3
-# pair) and q19_discounted_revenue (broadcast part-join revenue
-# predicate). Function importable; decimal-bridge conditional-agg
-# machinery unchanged.
-def q14_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 shape: conditional aggregate over a broadcast part join."""
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-02-01").cast("timestamp"))
-    )
-    p = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .agg(
-            _dsum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0)))
-            .alias("promo_revenue"),
-            _dsum(rev).alias("total_revenue"),
-        )
-    )
-
-
 @query(
     "q18_large_orders",
     """
@@ -1391,33 +1366,10 @@ _NEAR_DUP_SQL = """
     """
 
 
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack; see
-# the __spark_entry__ rotation comment): its RESIDENT twin
-# embedding_near_dup_indexed shares _NEAR_DUP_SQL verbatim and hashes
-# identically — the same blocked-matmul ball-cover kernel runs at the
-# twin's index build, so the machinery stays driver-graded. Function
-# importable; kernel pytest coverage intact
-# (test_embedding_near_dup_matches_allpairs_and_prunes et al.).
-def embedding_near_dup_pairs(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs above a threshold.
-
-    train_iters=0 (raw seed centroids, no Lloyd pass): the ball-cover
-    prune is EXACT for arbitrary centroids — the result is bit-identical
-    to all-pairs either way (pytest-asserted) — and this query retrains
-    per run, so the refinement's extra full-corpus pass only buys
-    pruning quality it immediately throws away. A serving deployment
-    trains once into the persisted IVF index (operators/ann_index.py)
-    and amortizes refinement properly. Measured at sf0.1: 3.3s → 2.5s
-    per run."""
-    return S.embedding_near_dup(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.4, train_iters=0
-    )
-
-
 @query("embedding_near_dup_indexed", _NEAR_DUP_SQL)
 def embedding_near_dup_indexed(spark, sf_dir):
-    """The RESIDENT twin of embedding_near_dup_pairs (round 7 — the
-    same build-once/serve-many split as the dedup fingerprint store):
+    """The RESIDENT form of the one-shot embedding near-dup join
+    (round 7 — the same build-once/serve-many split as the dedup fingerprint store):
     the unit-sphere cell assignment is trained and persisted per
     (process, sf_dir) on first use (operators/ann_index.py
     build_near_dup_index); each run pays only the triangle-bound cell
@@ -1670,51 +1622,6 @@ def dedup_ngram_jaccard(spark, sf_dir):
                            k=5, threshold=0.2)
 
 
-# RETIRED from the registry in round 13 (P1, pre-committed in the
-# __spark_entry__ rotation comment; paired registration:
-# text_html_extract): the exact md5 twin dedup_minhash_lsh_md5 grades
-# the same shingle→minhash→band→bucket-join machinery end-to-end with a
-# full hash oracle, making this rows-only sibling redundant driver
-# surface. The function stays importable and pytest-covered.
-def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH candidate pairs (hash family is Spark xxhash64 — not
-    expressible in DuckDB; its md5 twin dedup_minhash_lsh_md5 is the
-    hash-graded registry entry since this one's round-13 retirement)."""
-    return D.minhash_dedup_candidates(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id"
-    ).orderBy("id_a", "id_b")
-
-
-# RETIRED from the registry in round 13 (P1 #2, per the published
-# policy; paired registration: pipeline_curation_html): the exact md5
-# twin dedup_simhash_md5 hash-grades the same bitwise-majority-vote
-# signature machinery. Function importable, pytest coverage intact.
-def dedup_simhash(spark, sf_dir):
-    """64-bit SimHash signatures per document (bitwise majority vote;
-    hash family is Spark xxhash64 — its md5 twin dedup_simhash_md5 is
-    the hash-graded registry entry since this one's r13 retirement)."""
-    return D.simhash(load_table(spark, sf_dir, "documents"), "text", "doc_id").orderBy("doc")
-
-
-# RETIRED from the registry in round 13 (P1 #3, per the published
-# policy; paired registration: streaming_html_ingest): the exact md5
-# twin dedup_simhash_pairs_md5 hash-grades the same pigeonhole
-# block-LSH + Hamming-refine retrieval. Function importable, pytest
-# coverage intact.
-def dedup_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup retrieval: pigeonhole block-LSH candidates +
-    exact bit_count(xor) <= 3 Hamming refine — recall 1.0 by
-    construction (any pair within distance d agrees on one of the d+1
-    signature blocks). Signature hash family is Spark xxhash64 (its md5
-    twin dedup_simhash_pairs_md5 is the hash-graded registry entry
-    since this one's r13 retirement); the retrieval math itself is
-    pytest-verified against brute-force Hamming
-    (tests/test_northstar.py)."""
-    return D.simhash_pairs(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id", max_hamming=3
-    ).orderBy("id_a", "id_b")
-
-
 # shared by the one-shot query and the persisted-index serve twin — the
 # store round-trip must be value-invisible, so both hash against the
 # same oracle
@@ -1750,8 +1657,6 @@ _JACCARD_CAPPED_SQL = """
     """
 
 
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack; see
-# the __spark_entry__ rotation comment): dedup_jaccard_pairs_indexed
 def _exact_canon(d):
     """The exact-dedup canon relation (text, doc_id = min id per
     identical text), FINGERPRINT-FIRST since round 19 (guide §2.3
@@ -1776,24 +1681,6 @@ def _exact_canon(d):
         )
         .select("text", "doc_id")
     )
-
-
-# shares _JACCARD_CAPPED_SQL verbatim and hashes identically — the
-# same canon→cap→inverted-index machinery runs at the twin's index
-# build, so it stays driver-graded; the uncapped definitional form
-# stays registered as dedup_ngram_jaccard. Function importable; pytest
-# coverage intact (test_northstar index-vs-direct parity).
-def dedup_jaccard_pairs_capped(spark, sf_dir):
-    """The PRODUCTION near-dup path: exact dedup first (removes the
-    mega-clusters whose members would otherwise exceed any doc-freq
-    cap), then Jaccard pairs with stop-shingles capped at doc_freq 50.
-    The cap bounds the inverted-index self-join fan-out — one viral
-    boilerplate shingle shared by m docs contributes m² candidates, so
-    uncapped it squares at corpus scale. The uncapped form stays
-    registered (dedup_ngram_jaccard) as the small-sf oracle twin."""
-    d = load_table(spark, sf_dir, "documents")
-    canon = _exact_canon(d)
-    return D.jaccard_pairs(canon, "text", "doc_id", k=5, threshold=0.2, max_doc_freq=50)
 
 
 _WINNOW_CAPPED_SQL = """
@@ -1823,24 +1710,6 @@ _WINNOW_CAPPED_SQL = """
     FROM fpk a JOIN fpk b ON a.fp = b.fp AND a.doc_id < b.doc_id
     GROUP BY 1, 2 HAVING COUNT(*) >= 25
     """
-
-
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack; see
-# the __spark_entry__ rotation comment): dedup_winnow_pairs_indexed
-# shares _WINNOW_CAPPED_SQL verbatim and hashes identically — the same
-# winnow→cap→inverted-index machinery runs at the twin's index build,
-# so it stays driver-graded. Function importable; pytest coverage
-# intact (test_northstar winnow_pairs_from_index parity).
-def dedup_winnow_pairs_capped(spark, sf_dir):
-    """Production winnowing near-dup: exact dedup → stop-print cap 50 →
-    inverted-index pair join (the composition the winnow_near_dup
-    docstring prescribes: dedup removes mega-clusters so the cap only
-    drops boilerplate prints, cutting the sf0.1 self-join ~15× while
-    keeping real pairs). Uncapped twin stays as dedup_winnow_pairs."""
-    d = load_table(spark, sf_dir, "documents")
-    canon = _exact_canon(d)
-    return X.winnow_near_dup(canon, "text", "doc_id", k=8, w=4, min_shared=25,
-                             max_doc_freq=50)
 
 
 def _dedup_index_path(sf_dir, kind):
@@ -1889,8 +1758,8 @@ def dedup_index_append_serve(spark, sf_dir):
 
 @query("dedup_winnow_pairs_indexed", _WINNOW_CAPPED_SQL)
 def dedup_winnow_pairs_indexed(spark, sf_dir):
-    """The RESIDENT (build-once/serve-many) form of
-    dedup_winnow_pairs_capped (VERDICT r6 ask #3): the winnowing
+    """The RESIDENT (build-once/serve-many) form of the capped
+    winnowing pair join (VERDICT r6 ask #3): the winnowing
     fingerprint table — the dominant ~70% of the one-shot query's wall
     — is persisted per (process, sf_dir) on first use
     (operators/dedup_index.py) and every later run pays only the
@@ -1910,7 +1779,7 @@ def dedup_winnow_pairs_indexed(spark, sf_dir):
 
 @query("dedup_jaccard_pairs_indexed", _JACCARD_CAPPED_SQL)
 def dedup_jaccard_pairs_indexed(spark, sf_dir):
-    """Resident twin of dedup_jaccard_pairs_capped: persisted
+    """Resident form of the capped Jaccard pair join: persisted
     (doc, shingle) store + persisted set sizes; runs pay only the
     capped join + Jaccard arithmetic. Hash-checked against the same
     oracle as the one-shot query."""
@@ -2770,70 +2639,6 @@ def ann_cosine_topk_ivf_full(spark, sf_dir):
     )
 
 
-# RETIRED from the registry in round 16 (P2, invariant-I3 slack — the
-# paired exit funding multimodal_g711_codec's registration; see the
-# __spark_entry__ rotation comment): multimodal_video_frames grades the
-# SAME sample_frames operator (every_nth/max_frames arithmetic, frame
-# fan-out, per-frame content) through REAL AVI-MJPEG containers with a
-# strictly richer hash oracle (demux + native JPEG decode of every kept
-# frame), and the stub-slice fallback source this probe exercised stays
-# pytest-covered (test_northstar sample_frames stub tests,
-# test_operators test_sample_frames_fanout). Function importable; the
-# frozen oracle text below documents the graded contract it retired
-# with.
-_FRAME_SAMPLE_SQL = """
-    WITH src AS (
-        SELECT doc_id, COALESCE(text, '') AS t
-        FROM documents WHERE doc_id < 200
-    ), meta AS (
-        SELECT doc_id, t, GREATEST(length(t) // 16, 1) AS n_chunks
-        FROM src
-    ), frames AS (
-        -- frame_index is the SOURCE frame (chunk) number, fi * 10 for
-        -- every_nth=10 — the sample ordinal lost temporal position
-        SELECT doc_id,
-               CAST(u.fi * 10 AS INT) AS frame_index,
-               substr(t, CAST(u.fi AS INT) * 160 + 1, 16) AS fs
-        FROM meta, LATERAL (
-            SELECT UNNEST(range(LEAST(
-                CAST((n_chunks + 9) // 10 AS BIGINT), 8))) AS fi
-        ) u
-    )
-    SELECT doc_id AS media_id, frame_index,
-           'stub-slice' AS source,
-           CAST(length(fs) AS BIGINT) AS n_bytes,
-           md5(fs) AS frame_md5
-    FROM frames
-    """
-
-
-def multimodal_frame_sample(spark, sf_dir):
-    """1:N frame sampling over binary media blobs via mapInPandas — the
-    output batch need not align 1:1 with the input batch, exactly how a
-    real av demuxer streams frames (real decode is PIL/av-gated; the
-    in-sandbox frame source slices the blob into fixed 16-byte fake
-    frames deterministically). Round 9: upgraded from rows-only to a
-    FULL HASH oracle — the graded projection is (media_id, frame_index,
-    byte length, md5 of the frame bytes), and because the fixture text
-    is pure ASCII (verified: zero non-ASCII rows), DuckDB's character
-    slicing replays the byte slicing exactly and md5(VARCHAR) equals
-    Spark's md5(BINARY) over the same utf-8 bytes. Every frame's
-    CONTENT is now value-checked, not just the fan-out row count
-    (the multimodal_real_codec upgrade pattern from r8)."""
-    from .operators.multimodal import documents_as_media, sample_frames
-
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    media = documents_as_media(d).withColumn("media_type", F.lit("video"))
-    frames = sample_frames(media, every_nth=10, max_frames=8)
-    return frames.select(
-        "media_id",
-        F.col("frame_index").cast("int").alias("frame_index"),
-        "source",
-        F.length("frame").cast("bigint").alias("n_bytes"),
-        F.md5("frame").alias("frame_md5"),
-    )
-
-
 @query(
     "multimodal_real_codec",
     """
@@ -3459,45 +3264,6 @@ def multimodal_jpeg12_payload(spark, sf_dir):
         "doc_id long, codec string, block long, sample long")
 
 
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack; see
-# the __spark_entry__ rotation comment): streaming_html_ingest grades
-# the same foreachBatch-MERGE-into-staging sink end to end (multi-batch
-# drain, zone-mapped MERGE, read-back hash) PLUS transform-on-ingest,
-# and the events-stream drain machinery stays graded by the four
-# streaming maintenance/dedup entries. Function importable; sink pytest
-# coverage intact (test_pipeline stream_merge_into_staging tests).
-def streaming_merge_staging(spark, sf_dir):
-    """Streaming INGEST integrity, value-checked end to end (round 7):
-    the events stream drains through the foreachBatch MERGE sink
-    (streaming/sink.py) into the batch pipeline's staging store, the
-    staging table is read BACK, and the read-back aggregates per event
-    type. The oracle computes the same rollup straight from the source
-    table — any event lost, duplicated, or mangled through
-    checkpoint/micro-batch/MERGE/swap flips the hash (the streaming
-    twin of export_training_shards' sink check). Deterministic
-    per-(process, sf_dir) store + checkpoint: a re-drain against the
-    same checkpoint is a no-op, so repeated driver/bench executions
-    stay idempotent."""
-    import os
-
-    from .pipeline import StagingStore
-    from .streaming.events import read_events_stream
-    from .streaming.sink import stream_merge_into_staging
-
-    base = _resident_path("stream_stg", sf_dir)
-    store = StagingStore(root=os.path.join(base, "stg"))
-    q = stream_merge_into_staging(
-        read_events_stream(spark, sf_dir), store, "events", ["event_id"],
-        os.path.join(base, "ckpt"),
-    )
-    _await_drain(q)
-    return store.read(spark, "events").groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.countDistinct("event_id").cast("bigint").alias("n_ids"),
-        _dsum(F.col("value")).alias("sum_value"),
-    )
-
-
 @query(
     "streaming_stateful_user_totals",
     """
@@ -3757,23 +3523,6 @@ def text_winnow_fingerprints(spark, sf_dir):
             F.max("fp").alias("max_fp"),
         )
     )
-
-
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack —
-# paired with the dedup_index_append_serve registration; see the
-# __spark_entry__ rotation comment): the uncapped winnow pair probe's
-# machinery stays driver-graded three ways — text_winnow_fingerprints
-# hash-checks the fingerprint selection, dedup_winnow_pairs_indexed the
-# capped pair join, dedup_index_append_serve the store growth path.
-# Function importable; pytest coverage intact (winnow parity tests).
-def dedup_winnow_pairs(spark, sf_dir):
-    """Near-dup pairs by shared winnowing fingerprints (inverted-index
-    join; >= 25 shared prints — below the corpus's boilerplate plateau the
-    pair set is noise, above it the 24 true near-dups are stable). Winnowing guarantees any shared run of
-    k+w-1 = 11 normalized chars shares a print, so true near-dups can't
-    be missed the way probabilistic LSH can miss them."""
-    d = load_table(spark, sf_dir, "documents")
-    return X.winnow_near_dup(d, k=8, w=4, min_shared=25)
 
 
 @query(
@@ -4419,56 +4168,6 @@ def q20_heavy_suppliers(spark, sf_dir):
     """)
 
 
-# RETIRED from the registry in round 15 (pre-committed r15 exit #8 in
-# the __spark_entry__ rotation comment; leaves with fresh r14 driver
-# evidence — the r12 dedup_minhash_lsh precedent): its twin
-# q21_last_shipper_preagg shares the oracle SQL verbatim and hashes
-# identically by construction, and the pre-agg IS the scale plan.
-# Function importable; the decorrelated EXISTS/NOT-EXISTS plan keeps
-# pytest parity coverage vs the preagg twin.
-def q21_last_shipper(spark, sf_dir):
-    """q21-shaped: per supplier, the finalized multi-supplier orders
-    where it shipped LAST — the EXISTS + NOT EXISTS correlated pair,
-    decorrelated by Catalyst to left-semi + left-anti against lineitem.
-
-    KEPT as the graded plan after measuring the r5-suggested pre-agg
-    rewrite (q21_last_shipper_preagg below): at sf0.1 on local[32] the
-    decorrelated plan runs ~0.85s steady vs ~1.6s for the pre-agg —
-    three cheap parallel scans + hash semi/anti joins beat one rollup +
-    two window passes + join-back at this suppliers-per-order (~4)
-    cardinality. Both are all-keyed-shuffle plans and both meet the
-    ≤1.5s target; the pre-agg shape wins only when per-order fan-in is
-    large enough that re-scanning lineitem dominates. Measured A/B in
-    ARCHITECTURE.md.
-
-    Round-18 optimization A/B, measured and REJECTED: a DataFrame
-    rewrite of the same join tree with the streamed l1 side adaptively
-    spread read 1.150 → 1.365 s isolated — the fused probe stage
-    (two broadcast hash probes + two joins + partial agg) is cheaper
-    per row than shipping 600k (orderkey, suppkey, shipdate) rows
-    through the spread exchange, and the two lineitem broadcast builds
-    dominate either way. Left in the decorrelated SQL form
-    deliberately (same q1-vs-q2 trade documented on q2)."""
-    _views(spark, sf_dir, "supplier", "lineitem", "orders")
-    return spark.sql("""
-        SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-        FROM supplier s
-        JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-        JOIN orders o ON o.o_orderkey = l1.l_orderkey
-        WHERE o.o_orderstatus = 'F'
-          AND EXISTS (
-              SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
-          )
-          AND NOT EXISTS (
-              SELECT 1 FROM lineitem l3
-              WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-                AND l3.l_shipdate > l1.l_shipdate
-          )
-        GROUP BY s.s_name
-    """)
-
-
 @query(
     "q21_last_shipper_preagg",
     """
@@ -4595,32 +4294,6 @@ def streaming_static_join(spark, sf_dir):
     )
     stream = read_events_stream(spark, sf_dir)
     return run_streaming_to_memory(stream_static_enrich(stream, dim), mode="complete")
-
-
-# RETIRED from the registry in round 15 (pre-committed r15 exit #10 in
-# the __spark_entry__ rotation comment; leaves with fresh r14 driver
-# evidence): pack_materialized_sequences replays the same shard/cumsum/
-# 512-token span math and checks it at FINER grain (per-sequence content
-# md5), and pack_training_sequences_bpe keeps the identical window plan
-# registered against the real tokenizer budget. Function importable;
-# pack_sequences machinery pytest-covered.
-def pack_training_sequences(spark, sf_dir):
-    """SHARDED concat-and-chunk sequence packing (the standard
-    pretraining layout at scale): documents hash into 8 deterministic
-    shards (doc_id % 8 — SQL-twin-able), each shard's token stream is
-    independently chunked into 512-token sequences via one window cumsum
-    partitioned BY SHARD. This is the 100 TB plan — no global
-    single-partition WindowExec; each shard costs at most one partial
-    boundary sequence. (The r5 global variant's driver hash mismatch was
-    the oracle's un-cast HUGEINT window outputs arriving in pandas as
-    float64 — every derived column now casts to BIGINT explicitly; see
-    ARCHITECTURE.md, oracle-comparator contract.)"""
-    from .operators.pack import pack_sequences
-
-    d = load_table(spark, sf_dir, "documents").withColumn(
-        "shard", (F.col("doc_id") % 8).cast("bigint")
-    )
-    return pack_sequences(d, budget=512, shard_col="shard")
 
 
 from .operators.text import bpe_oracle_sql_expr as _bpe_sql  # noqa: E402
@@ -4907,32 +4580,6 @@ def pipeline_curation_e2e(spark, sf_dir):
 # (bpe_oracle_sql_expr is imported above pack_training_sequences_bpe)
 
 
-# RETIRED from the registry in round 14 (P2, paired with the
-# sample_dsir_weights registration; see the __spark_entry__ rotation
-# comment): the 20-rule merge-chain semantics stay driver-graded by
-# text_bpe_tokens_arrow, whose DuckDB oracle replays the IDENTICAL
-# literal replace chain (the cross-engine check this entry provided),
-# and the Spark expression path keeps direct pytest parity against the
-# Arrow kernel (test_operators.py bpe expression==arrow assertion).
-# Function importable.
-def text_bpe_tokens(spark, sf_dir):
-    """REAL merge-table BPE token counting (VERDICT r5 ask): the GPT-style
-    pre-tokenizer followed by a 20-rule learned-style merge table applied
-    in priority order — what a token-budget pipeline actually bills by,
-    vs the pre-token upper bound of text_token_stats. The whole encode is
-    JVM string expressions (one spelling regexp + one literal replace per
-    rule, codegen'd, zero Python); the oracle replays the identical chain
-    in DuckDB, so the count is value-checked, not approximated. Bounds:
-    n_pretokens <= n_bpe_tokens <= character count — merges only fuse
-    spelled characters, never below one symbol per pre-token."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        X.bpe_token_count(F.lower(F.col("text"))).cast("bigint").alias("n_pretokens"),
-        X.bpe_token_count_merged(F.col("text")).alias("n_bpe_tokens"),
-    )
-
-
 @query(
     "text_bpe_tokens_arrow",
     f"""
@@ -5026,23 +4673,6 @@ def text_lm_quality_score(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % 5 != 0)
     return X.bigram_lm_score(d, train_df=train)
-
-
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack; see
-# the __spark_entry__ rotation comment): sample_epoch_shuffle_wide runs
-# the SAME operator at shard_width=2 — a strict refinement whose oracle
-# replays the whole permutation, so the width-1 probe added no graded
-# machinery. Function importable; pytest coverage intact
-# (test_epoch_shuffle_reproducible_and_complete).
-def sample_epoch_shuffle(spark, sf_dir):
-    """Reproducible epoch shuffle: md5(seed:id) sort key, 16-way shard
-    from its first hex digit, per-shard positions — shard-major
-    traversal is the epoch's global training order. Same seed →
-    bit-identical permutation (resumable training); new seed → fresh
-    independent order. Per-shard windows keep the plan free of any
-    global single-partition sort."""
-    d = load_table(spark, sf_dir, "documents")
-    return X.epoch_shuffle(d, seed="epoch-0")
 
 
 @query(
@@ -5317,31 +4947,6 @@ _LENGTH_BUCKET_SQL = """
     """
 
 
-# RETIRED from the registry in round 14 (P2 #1 of the published
-# ladder, pre-committed in the r12 rotation comment): its wide twin
-# pack_length_bucket_batches_wide hash-grades a strict superset of the
-# plan (shard_width=2 → 256 shards, same schedule math). Function
-# importable; pytest coverage intact (test_length_bucket_batches_*).
-def pack_length_bucket_batches(spark, sf_dir):
-    """Length-bucketed BATCH SCHEDULE (round 7, SHARDED round 8):
-    power-of-two length buckets (padding waste bounded at 2x), fixed
-    4,096-token batches of max_batch_tokens/padded_len docs each,
-    reproducible md5 order — the deterministic dynamic-batching layout
-    padded training/inference loaders consume. Round 8 keys the
-    schedule window on (shard, bucket) — buckets are log-many, so the
-    round-7 bucket-only window put corpus/~40 rows on one task at
-    scale (VERDICT r7); the shard is the md5 sort key's hex prefix,
-    exactly the epoch_shuffle discipline. The bucket is computed as
-    the exact BIT LENGTH of n_tokens-1 (bin() in both engines), never
-    float log2, which can ceil() differently across engines at exact
-    powers of two; the oracle replays the whole schedule, so batch
-    membership and within-batch positions are hash-checked."""
-    from .operators.pack import length_bucket_batches
-
-    d = load_table(spark, sf_dir, "documents")
-    return length_bucket_batches(d, max_batch_tokens=4096, seed="batch-0")
-
-
 @query("pack_length_bucket_batches_wide", _LENGTH_BUCKET_SQL.format(width=2))
 def pack_length_bucket_batches_wide(spark, sf_dir):
     """shard_width=2 twin of pack_length_bucket_batches (256 shards ×
@@ -5504,72 +5109,6 @@ def sample_source_budget(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     return X.source_token_budget(
         d, budgets={"src0": 300, "src1": 1200}, default_budget=800, seed="mix-0"
-    )
-
-
-# RETIRED from the registry in round 14 (P2, invariant-I3 slack; see
-# the __spark_entry__ rotation comment): the sixth of six curation
-# capstones — every stage it composes is individually hash-graded
-# (quality gate: filter_quality_quantile / pipeline_curation_e2e;
-# decontamination: dedup_contamination_check; exact dedup + shuffle +
-# budget: pipeline_curation_e2e, sample_epoch_shuffle_wide,
-# sample_source_budget) and the one-declarative-plan composition
-# property stays graded five ways (pipeline_curation_e2e, _v3, _html,
-# _funnel, _incremental). Function importable; stage pytest coverage
-# intact.
-def pipeline_curation_v2(spark, sf_dir):
-    """The round-6 curation capstone, one declarative plan end to end:
-    quality gate (token count + alpha ratio) → benchmark DECONTAMINATION
-    (drop training docs sharing >= 3 word 5-grams with the eval slice —
-    the GPT-3/PaLM rule, via the inverted-index join) → exact-dup
-    removal (min doc id per normalized fingerprint) → reproducible EPOCH
-    SHUFFLE → per-shard training budget. The rollup fingerprints each
-    shard's doc-id sequence IN EPOCH ORDER with a POSITION-KEYED
-    multiset hash: every (shard, pos, doc_id) row hashes to a 48-bit
-    integer and the shard tag is their exact sum mod 2^61-1. Two
-    sequences agree iff they place the same doc at every position, so
-    equality of tags ≡ equality of the training order the pipeline
-    would feed a dataloader — but unlike the round-6 sorted
-    collect_list → md5, the tag is a plain map-side-combinable SUM: no
-    shard-sized array ever materializes on any task (VERDICT r6 "what's
-    wrong #2"), and the plan stays hash-agg at any corpus size. Both
-    engines sum exactly (Spark decimal(38,0), DuckDB HUGEINT) before
-    the mod, so parallel accumulation order can't perturb the tag.
-    Every stage reuses an operator that is also individually
-    oracle-checked."""
-    d = load_table(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id", "text",
-        X.token_count(F.col("text")).cast("bigint").alias("n_tokens"),
-        (X.alpha_count(F.col("text"))
-         / F.greatest(F.length("text"), F.lit(1))).alias("alpha_ratio"),
-        X.fingerprint(F.col("text")).alias("fp"),
-    )
-    kept = scored.filter((F.col("n_tokens") >= 10) & (F.col("alpha_ratio") >= 0.5))
-    evalset = d.filter(F.col("doc_id") % 20 == 0)
-    train = kept.filter(F.col("doc_id") % 20 != 0)
-    contam = (
-        D.ngram_contamination(train, evalset, k=5)
-        .filter(F.col("n_shared") >= 3)
-        .select(F.col("train_id").alias("doc_id"))
-        .distinct()
-    )
-    clean = train.join(contam, "doc_id", "left_anti")
-    canon = clean.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    deduped = clean.join(canon, ["fp", "doc_id"], "left_semi")
-    sh = X.epoch_shuffle(deduped, seed="epoch-0")
-    joined = deduped.select("doc_id", "n_tokens").join(sh, "doc_id")
-    row_tag = _md5_tag48(F.concat_ws(
-        ":",
-        F.col("shard"),
-        F.col("pos_in_shard").cast("string"),
-        F.col("doc_id").cast("string"),
-    ))
-    return joined.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        (F.sum(row_tag) % F.lit(2305843009213693951))
-        .cast("bigint").alias("order_tag"),
     )
 
 
@@ -10074,8 +9613,8 @@ def dedup_minhash_lsh_md5(spark, sf_dir):
     full hash oracle: signature minima compare as lowercase-hex
     strings and a band's bucket key is the concatenation of its row
     minima, so DuckDB replays signature → banding → bucket join →
-    distinct pairs verbatim. The xxhash64 path (dedup_minhash_lsh)
-    stays the production default for speed; this twin pins the shared
+    distinct pairs verbatim. The xxhash64 path
+    (D.minhash_dedup_candidates) stays the production default for speed; this twin pins the shared
     pipeline's correctness end to end. Same one-shuffle-per-stage
     shape: shingle explode → per-doc MIN agg → band explode →
     bucket equi-join (fan-out bounded by collisions, never corpus²)."""
@@ -10084,31 +9623,6 @@ def dedup_minhash_lsh_md5(spark, sf_dir):
     return minhash_dedup_candidates_md5(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
     )
-
-
-# RETIRED from the registry in round 15 (P2, paired with the
-# pipeline_curation_dsir registration per the published one-in-one-out
-# policy): dedup_simhash_pairs_md5's oracle embeds _simhash_md5_oracle()
-# VERBATIM as its sig CTE and runs the same simhash_md5 operator, so
-# the vote/majority signature machinery stays driver-graded inside the
-# wider retrieval profile. The one honest surface shrink — a per-doc
-# signature is only pair-hash-visible when the doc lands in a block
-# collision — is covered by test_simhash_md5_signatures_match_duckdb,
-# which replays the identical oracle per doc at pytest time. Function
-# importable; xxhash64-family pytest coverage unchanged.
-def dedup_simhash_md5(spark, sf_dir):
-    """64-bit SimHash with the ENGINE-PORTABLE md5 token hash (round
-    10) — upgrades the SimHash vote/majority construction from the
-    rows-only check to a full hash oracle: token md5 → two 32-bit
-    halves → 64 per-bit ±1 vote sums in ONE doc-keyed hash-agg →
-    majority bits packed to a 16-hex signature, every step replayed by
-    an identical DuckDB builtin. The xxhash64 path (dedup_simhash)
-    stays the production signature; this twin proves the shared
-    bit-vote machinery. Hamming retrieval over these signatures is the
-    already-oracle-checked phash block-join pattern."""
-    from .operators.dedup import simhash_md5
-
-    return simhash_md5(load_table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 @query(

@@ -1,3 +1,3 @@
-"""Source connectors: parquet fixture loader, JDBC helpers, OData-style source."""
+"""Source connectors: the parquet fixture loader and the OData-style source."""
 
-from .parquet import load_table, register_views  # noqa: F401
+from .parquet import load_table  # noqa: F401

@@ -20,8 +20,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _log = logging.getLogger(__name__)
@@ -78,9 +76,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every fixture table as a temp view for the SQL surface."""
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

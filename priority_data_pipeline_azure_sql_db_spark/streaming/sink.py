@@ -496,23 +496,17 @@ def _read_hist_schema_empty(spark, store_path: str):
     return spark.createDataFrame([], schema)
 
 
-def _migrate_flat_hist(spark, store_path: str, cur: str, kb) -> None:
-    """One-shot upgrade of a pre-round-12 store (flat ``hist_<id>``
-    full-rewrite versioning, no ``_kb``) into the bucketed layout —
-    without this, the first fold after an engine upgrade would raise
-    UNRESOLVED_COLUMN '_kb' inside foreachBatch and wedge the stream
-    against its own checkpoint (round-12 review). Cost: one full
-    rewrite, the same price every old-layout fold used to pay."""
-    hist_root = os.path.join(store_path, "hist")
-    if os.path.normpath(cur) == os.path.normpath(hist_root):
-        return  # already bucketed
-    old_df = spark.read.parquet(cur)
-    _write_hist_schema(store_path, old_df)
-    write_partitioned(old_df.withColumn("_kb", kb), hist_root, ["_kb"],
-                      what="SCD2 history migration")
-    last, _ = _read_rollup_pointer(store_path)
-    _write_current(store_path, last, "hist")
-    shutil.rmtree(cur, ignore_errors=True)
+def _read_scd2_pointer(store_path: str) -> tuple[int, str | None]:
+    """The SCD2 store's ``CURRENT`` ledger. A store whose pointer names
+    anything but the bucketed ``hist`` dir predates round 12 (flat
+    ``hist_<id>`` versioning, no ``_kb``) and must be rebuilt."""
+    last, cur = _read_rollup_pointer(store_path)
+    if cur is not None and os.path.basename(cur) != "hist":
+        raise RuntimeError(
+            f"SCD2 store at {store_path} has the pre-bucketed history "
+            f"layout ({os.path.basename(cur)}); rebuild the store"
+        )
+    return last, cur
 
 
 def fold_scd2_batch(
@@ -579,7 +573,7 @@ def fold_scd2_batch(
     from ..operators.merge import scd2_apply_delta, scd2_history
 
     _hist_roll_forward(store_path)  # settle a crashed fold's commit first
-    last, cur = _read_rollup_pointer(store_path)
+    last, cur = _read_scd2_pointer(store_path)
     if batch_id <= last:
         return False  # replay of an already-folded batch
     if delta_log.isEmpty():
@@ -667,8 +661,6 @@ def fold_scd2_batch(
             reduce(lambda a, b: a.unionByName(b), parts)
             if parts else delta.limit(0)
         )
-        _migrate_flat_hist(spark, store_path, cur, kb)
-        cur = os.path.join(store_path, "hist")
         # bucket pruning on the HISTORY too: entities hash to the same
         # _kb in hist/ as in the log, so untouched buckets hold no
         # touched entities and are neither read nor rewritten — the
@@ -765,15 +757,14 @@ def read_scd2_store(spark, store_path: str) -> DataFrame:
     read_er_clusters: roll-forward renames are not safe under
     concurrent callers."""
     _hist_roll_forward(store_path)
-    _, cur = _read_rollup_pointer(store_path)
+    _, cur = _read_scd2_pointer(store_path)
     if cur is None:
         raise FileNotFoundError(
             f"SCD2 store at {store_path} has no applied batches yet"
         )
     if not os.path.isdir(cur) or not _has_data_files(cur):
         return _read_hist_schema_empty(spark, store_path)
-    df = spark.read.parquet(cur)
-    return df.drop("_kb") if "_kb" in df.columns else df
+    return spark.read.parquet(cur).drop("_kb")
 
 
 # ---------------------------------------------------------------------------

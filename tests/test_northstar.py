@@ -841,13 +841,12 @@ def test_dedup_index_append_equals_rebuild_and_crash_safe(spark, sf_dir, tmp_pat
 
 def test_dedup_index_docs_membership_table(spark, sf_dir, tmp_path):
     """Round-15 (VERDICT r14 ask #2): the append path's membership is
-    the compact base ``docs`` table, not an fps scan. (1) a pre-r15
-    store (no docs dir) upgrades on first append — the table is derived
-    from base fps once, persisted, and idempotence holds; (2) a
-    zero-fingerprint doc appended to an r15 store stays tracked ACROSS
-    a compaction (the r14 code documented one harmless re-append here;
-    r15 folds docs tables at compact so membership is exact); (3) the
-    build writes docs for fresh stores."""
+    the compact base ``docs`` table, not an fps scan. (3) the build
+    writes docs for fresh stores; (2) appends leave the base table
+    alone and stay idempotent, and a zero-fingerprint doc appended to
+    the store stays tracked ACROSS a compaction (the r14 code
+    documented one harmless re-append here; r15 folds docs tables at
+    compact so membership is exact)."""
     import os
 
     from pyspark.sql import functions as F
@@ -870,24 +869,20 @@ def test_dedup_index_docs_membership_table(spark, sf_dir, tmp_path):
                  spark.read.parquet(os.path.join(store, DOCS_DIR)).collect()}
     assert base_docs == {r.doc_id for r in canon.collect()}
 
-    # (1) pre-r15 store: drop docs, append must upgrade + stay idempotent
-    import shutil
-
-    shutil.rmtree(os.path.join(store, DOCS_DIR))
+    # (2) an append stays idempotent and leaves the base table alone
     delta = spark.createDataFrame(
         [(800001, "a genuinely new appended document with many words " * 3)],
         "doc_id bigint, text string",
     )
     assert append_to_dedup_index(spark, store, delta) == 1
-    assert os.path.exists(os.path.join(store, DOCS_DIR, "_SUCCESS"))
-    upgraded = {r.doc for r in
-                spark.read.parquet(os.path.join(store, DOCS_DIR)).collect()}
-    assert upgraded == base_docs  # base only; the delta lives in docs_delta_*
+    after = {r.doc for r in
+             spark.read.parquet(os.path.join(store, DOCS_DIR)).collect()}
+    assert after == base_docs  # base only; the delta lives in docs_delta_*
     assert append_to_dedup_index(spark, store, delta) == 0
-    # re-appending base docs is a no-op through the upgraded table too
+    # re-appending base docs is a no-op through the membership table
     assert append_to_dedup_index(spark, store, canon.limit(5)) == 0
 
-    # (2) zero-fingerprint doc: tracked exactly, including across compact
+    # zero-fingerprint doc: tracked exactly, including across compact
     zero_fp = spark.createDataFrame(
         [(800002, "xy")], "doc_id bigint, text string")
     assert append_to_dedup_index(spark, store, zero_fp) == 1

@@ -1458,3 +1458,43 @@ def test_shared_table_entities_write_in_config_order(spark, sf_dir, tmp_path):
     # the last writer of stg_lineitem is orders' flattened child
     assert "o_orderkey" in conc.read(spark, "stg_lineitem").columns
     _assert_same_store(spark, conc, ser)
+
+
+def test_refresh_runs_with_pinned_thread_mode_off(spark, sf_dir, tmp_path,
+                                                  monkeypatch):
+    """With pyspark's pinned-thread mode off, ``inheritable_thread_target``
+    returns the session it is given instead of a wrapper; the runner
+    must then run its workers unwrapped, not fail every load."""
+    from priority_data_pipeline_azure_sql_db_spark import pipeline
+    from priority_data_pipeline_azure_sql_db_spark.sources.parquet import load_table
+
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda f=None: f)
+    store = StagingStore(str(tmp_path / "stg"))
+    res = PipelineRunner(spark, _cfg(_ent("nation")), store, sf_dir) \
+        .initial_data_load()
+    assert [r.error for r in res] == [None]
+    assert store.read(spark, "stg_nation").count() == \
+        load_table(spark, sf_dir, "nation").count()
+
+
+def test_read_for_keys_without_candidates_skips_table_read(spark, tmp_path,
+                                                           monkeypatch):
+    """Keys above every partition's pk range: ``read_for_keys`` returns
+    an empty frame of the keys' schema without opening the table, and
+    the CDC audit tags every key ``inserted``."""
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import cdc_audit_delta
+
+    store = StagingStore(str(tmp_path / "stg"))
+    store.overwrite(_stamped(spark, [(d, "a", d) for d in range(1, 6)]), "t",
+                    pk=["pk"])
+    keys = _stamped(spark, [(1000, "new", 6), (1001, "new", 6)])
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("read_for_keys opened the whole table")
+
+    monkeypatch.setattr(StagingStore, "read", no_read)
+    got = store.read_for_keys(spark, "t", keys, ["pk"])
+    assert got.schema == keys.schema and got.count() == 0
+    audit = cdc_audit_delta(got, keys, ["pk"]).collect()
+    assert sorted((r.pk, r.change_type) for r in audit) == [
+        (1000, "inserted"), (1001, "inserted")]

@@ -302,46 +302,6 @@ def test_round6_operator_plan_shapes(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
 
-def test_curation_v2_order_tag_plan_and_semantics(spark, sf_dir):
-    """The curation capstone's per-shard order fingerprint must stay a
-    plain hash aggregate (VERDICT r6: the sorted collect_list → md5 tag
-    materialized a whole shard's id list in one task). Guards: (a) no
-    collect_list / ObjectHashAggregate anywhere in the graded plan;
-    (b) the position-keyed tag detects a single transposition — two
-    orders over the same doc set get different tags."""
-    # curation_v2 was retired from the registry in r14 (P2 ladder) but
-    # stays importable — this plan guard keeps covering it
-    from priority_data_pipeline_azure_sql_db_spark.queries import pipeline_curation_v2
-
-    df = pipeline_curation_v2(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan, plan
-    assert "ObjectHashAggregate" not in plan, plan
-
-    # transposition sensitivity of the tag formula itself
-    rows = spark.createDataFrame(
-        [("a", 0, 10), ("a", 1, 20)], "shard string, pos bigint, doc_id bigint"
-    )
-    swapped = spark.createDataFrame(
-        [("a", 0, 20), ("a", 1, 10)], "shard string, pos bigint, doc_id bigint"
-    )
-
-    def tag(t):
-        row_tag = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(
-                    ":", F.col("shard"),
-                    F.col("pos").cast("string"), F.col("doc_id").cast("string"),
-                )), 1, 12,
-            ), 16, 10,
-        ).cast("decimal(38,0)")
-        return t.groupBy("shard").agg(
-            (F.sum(row_tag) % F.lit(2305843009213693951)).cast("bigint").alias("tag")
-        ).collect()[0].tag
-
-    assert tag(rows) != tag(swapped)
-
-
 def test_epoch_shuffle_shard_width(spark):
     """shard_width is the 100-TB scale knob: width w → 16**w shards,
     wider widths REFINE the width-1 sharding without changing the
@@ -1226,14 +1186,13 @@ def test_scd2_hist_bucket_swap_crash_window(spark, tmp_path):
     assert base_state  # silence the unused-var lint; layout asserted above
 
 
-def test_scd2_flat_hist_layout_migration(spark, tmp_path):
-    """Round-12 review fix: a store created by the pre-bucketing layout
-    (flat hist_<id> full-rewrite versioning, CURRENT → hist_<id>, no
-    _kb column) must keep folding after the upgrade — the first new
-    fold migrates it into the bucketed layout once instead of raising
-    UNRESOLVED_COLUMN '_kb' against its own checkpoint forever."""
+def test_scd2_pre_bucketed_layout_fails_loudly(spark, tmp_path):
+    """A store in the pre-round-12 layout (flat hist_<id> versioning,
+    CURRENT → hist_<id>, no _kb column) is not upgraded: its first fold
+    or read raises instead of folding over a history it cannot see."""
     import os
 
+    import pytest as _pytest
     from pyspark.sql import functions as F
 
     from priority_data_pipeline_azure_sql_db_spark.operators.merge import scd2_history
@@ -1248,65 +1207,19 @@ def test_scd2_flat_hist_layout_migration(spark, tmp_path):
         ).withColumn("ts", F.col("ts").cast("timestamp"))
 
     store = str(tmp_path / "old_store")
-    first = [(1, "a", "2026-01-01 00:00:00", 10),
-             (2, "x", "2026-01-01 00:00:00", 20)]
-    # hand-build the OLD layout: flat history dir + old-style pointer +
-    # the batch-1 log slice in the (unchanged) hive-bucketed log form
-    hist = scd2_history(mk(first), ["user_id"], ["state"], "ts", ["seq"])
-    hist.write.mode("overwrite").parquet(os.path.join(store, "hist_1"))
-    kb = F.pmod(F.xxhash64("user_id"), F.lit(4)).cast("int")
-    mk(first).withColumn("_kb", kb).write.partitionBy("_kb") \
-        .mode("overwrite").parquet(os.path.join(store, "log", "batch_1"))
+    first = [(1, "a", "2026-01-01 00:00:00", 10)]
+    scd2_history(mk(first), ["user_id"], ["state"], "ts", ["seq"]) \
+        .write.parquet(os.path.join(store, "hist_1"))
     with open(os.path.join(store, "CURRENT"), "w") as fh:
         fh.write("1\nhist_1")
-
-    more = [(1, "b", "2026-02-01 00:00:00", 11)]
-    assert fold_scd2_batch(
-        spark, store, mk(more), 2, ["user_id"], ["state"], "ts", ["seq"],
-        n_log_buckets=4,
-    ) is True
-    canon = lambda df: sorted(  # noqa: E731
-        (r.user_id, r.state, str(r.valid_from), str(r.valid_to),
-         r.is_current) for r in df.collect()
-    )
-    assert canon(read_scd2_store(spark, store)) == canon(scd2_history(
-        mk(first + more), ["user_id"], ["state"], "ts", ["seq"]))
-    # migrated: bucketed hist/ is live, the flat version dir is gone
-    assert os.path.isdir(os.path.join(store, "hist"))
-    assert not os.path.exists(os.path.join(store, "hist_1"))
-
-
-def test_er_meta_block_cols_back_compat(spark, tmp_path):
-    """Round-12 review fix: an ER store whose META predates block_passes
-    (records block_cols) still serves, appends, and passes the ensure
-    parameter check under the identical one-pass spelling instead of
-    dying with KeyError on a checkpoint-restarted append."""
-    import json
-    import os
-
-    from priority_data_pipeline_azure_sql_db_spark.operators import er_index as EI
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "id bigint, name string, grp int")
-
-    base = mk([(1, "aaaa0001", 1), (2, "aaaa0002", 1), (5, "zzzz", 2)])
-    p = str(tmp_path / "store")
-    EI.build_er_index(base, p, key_col="name", id_col="id",
-                      block_cols=["grp"], max_edit=2, n_buckets=4)
-    # rewrite META to the PRE-round-12 shape
-    mpath = os.path.join(p, EI.META_FILE)
-    meta = json.load(open(mpath))
-    meta["block_cols"] = meta.pop("block_passes")[0]
-    json.dump(meta, open(mpath, "w"))
-
-    # ensure with the same params: accepted, not a mismatch error
-    EI.ensure_er_index(base, p, key_col="name", id_col="id",
-                       block_cols=["grp"], max_edit=2, n_buckets=4)
-    # serve and append read the normalized passes
-    got = {r.delta_id: r for r in EI.assign_from_index(
-        spark, p, mk([(100, "aaaa0003", 1)])).collect()}
-    assert got[100].matched is True and got[100].cluster_id == 1
-    assert EI.append_to_er_index(spark, p, mk([(20, "aaab0001", 1)])) == 1
+    with _pytest.raises(RuntimeError, match="pre-bucketed"):
+        read_scd2_store(spark, store)
+    with _pytest.raises(RuntimeError, match="pre-bucketed"):
+        fold_scd2_batch(
+            spark, store, mk([(1, "b", "2026-02-01 00:00:00", 11)]), 2,
+            ["user_id"], ["state"], "ts", ["seq"], n_log_buckets=4,
+        )
+    assert not os.path.exists(os.path.join(store, "hist"))
 
 
 def test_scd2_tombstone_boundary_independence(spark, tmp_path):
@@ -2699,6 +2612,39 @@ def test_query_registry_duplicate_guard():
         @query("pipeline_count_rows")
         def clash(spark, sf_dir):  # pragma: no cover
             return None
+
+
+def test_tool_query_name_lists_are_registered():
+    """bench.py and the tools look their hard-coded query names up as
+    ``QUERIES[name]``, so every listed name must be registered: a stale
+    one would only fail when someone runs the tool. The lists are read
+    with ``ast``, without importing the tools (they start Spark or
+    need DuckDB at import)."""
+    import ast
+    import os
+
+    from priority_data_pipeline_azure_sql_db_spark.queries import QUERIES
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    lists = {
+        "bench.py": {"CORE", "ANNEX"},
+        "tools/plan_audit.py": {"AUDIT", "PAYLOAD_SPREAD_BUDGET"},
+        "tools/scale_probe.py": {"PROBES", "CONTROL_SCALES"},
+    }
+    for rel, want in lists.items():
+        with open(os.path.join(root, rel)) as fh:
+            tree = ast.parse(fh.read())
+        found = {
+            node.targets[0].id: list(ast.literal_eval(node.value))
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            and isinstance(node.targets[0], ast.Name)
+            and node.targets[0].id in want
+        }
+        assert set(found) == want, rel
+        for var, names in found.items():
+            assert names, (rel, var)
+            assert [n for n in names if n not in QUERIES] == [], (rel, var)
 
 
 def test_resident_path_distinct_dirs_same_basename(tmp_path):

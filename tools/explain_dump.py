@@ -16,29 +16,24 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from priority_data_pipeline_azure_sql_db_spark import queries as _qmod  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.queries import QUERIES  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _resolve(name: str):
-    fn = QUERIES.get(name) or getattr(_qmod, name, None)
-    if fn is None:
-        raise SystemExit(f"unknown query: {name}")
-    return fn
-
-
 def main() -> None:
     if len(sys.argv) < 4:
         raise SystemExit(__doc__)
     outdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark(
         "explain_dump", extra_conf={"spark.sql.adaptive.enabled": "false"})
     for name in names:
-        df = _resolve(name)(spark, SF_DIR)
+        df = QUERIES[name](spark, SF_DIR)
         # _sql_formatted goes through the same queryExecution explain
         # path as df.explain("formatted") but returns the string
         text = df._sc._jvm.PythonSQLUtils.explainString(

@@ -29,18 +29,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from priority_data_pipeline_azure_sql_db_spark import queries as _qmod  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.queries import QUERIES  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _resolve(name: str):
-    """Registry entry, else the importable module function — registry-
-    RETIRED entries keep their frozen timing series here exactly like
-    bench.py and plan_audit.py (round-16 parity fix)."""
-    return QUERIES.get(name) or getattr(_qmod, name, None)
 
 
 def run_probe(spark) -> float:
@@ -62,7 +54,7 @@ def measure_one(spark, name: str) -> float:
     """bench.py's per-query loop verbatim (minus the first-headline
     special case — an isolated run has no session-cold first entry
     problem because the calibration probe already warmed the JVM)."""
-    df = _resolve(name)(spark, SF_DIR)
+    df = QUERIES[name](spark, SF_DIR)
     attempts: list[float] = []
     best = float("inf")
     since_improve = 0
@@ -88,7 +80,7 @@ def main() -> None:
     names = sys.argv[1:]
     if not names:
         raise SystemExit("usage: isolated_measure.py <query> [...]")
-    unknown = [n for n in names if _resolve(n) is None]
+    unknown = [n for n in names if n not in QUERIES]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark("isolated-measure",

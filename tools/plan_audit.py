@@ -15,14 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from priority_data_pipeline_azure_sql_db_spark import queries as _qmod  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.queries import QUERIES  # noqa: E402
-
-
-def _resolve(name):
-    # retired entries stay importable as module attributes (bench.py
-    # pattern) so the audit keeps covering their plans
-    return QUERIES.get(name) or getattr(_qmod, name)
 from priority_data_pipeline_azure_sql_db_spark.session import get_spark  # noqa: E402
 
 AUDIT = [
@@ -31,7 +24,6 @@ AUDIT = [
     "q3_shipping_priority",
     "pipeline_e2e_flagship",
     # dedup / curation
-    "dedup_jaccard_pairs_capped",
     "dedup_boilerplate_lines",
     "pipeline_curation_v3",
     # histogram-rank family
@@ -215,8 +207,8 @@ def main() -> None:
         "from exactly those benign bounded-domain windows, NOT from",
         "corpus-sized sorts. Measured per-query (round 11,",
         "marker-delimited stderr scan over the full HEADLINE list): the",
-        "only emitters are `embedding_near_dup_pairs` /",
-        "`embedding_near_dup_indexed` / `pipeline_curation_incremental`",
+        "only emitters are `embedding_near_dup_indexed` /",
+        "`pipeline_curation_incremental`",
         "(the <=16-row centroid seed window in `_train_centroids`, incl.",
         "plan-time index builds), `filter_quality_quantile` /",
         "`pipeline_curation_v3` (the <=4096-bucket histogram-CDF window of",
@@ -227,7 +219,7 @@ def main() -> None:
         "",
     ]
     for name in AUDIT:
-        df = _resolve(name)(spark, sf_dir)
+        df = QUERIES[name](spark, sf_dir)
         # execute THIS DataFrame's own queryExecution (a noop write or
         # count() would mint a fresh one and leave this plan unfinalized):
         # AQE only shows final stages + codegen spans after a run

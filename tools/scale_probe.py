@@ -38,15 +38,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-from priority_data_pipeline_azure_sql_db_spark import queries as _qmod  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.queries import QUERIES  # noqa: E402
 from priority_data_pipeline_azure_sql_db_spark.session import get_spark  # noqa: E402
-
-
-def _resolve(name: str):
-    """Registry entry, else the importable module function — registry-
-    RETIRED probes (dedup_minhash_lsh, r13) keep their scaling series."""
-    return QUERIES.get(name) or getattr(_qmod, name)
 
 SCALES = [1, 2, 4, 8]
 # the negative control runs further out: its quadratic pair term only
@@ -57,8 +50,6 @@ CONTROL_SCALES = {"dedup_ngram_jaccard": [1, 2, 4, 8, 16, 32]}
 PROBES = {
     "dedup_exact_docs": ["documents"],
     "dedup_fingerprint_docs": ["documents"],
-    "dedup_minhash_lsh": ["documents"],
-    "dedup_jaccard_pairs_capped": ["documents"],
     "text_bpe_tokens_arrow": ["documents"],
     "pack_greedy_sequences": ["documents"],
     "er_first_token_pairs": ["part"],
@@ -162,7 +153,7 @@ def main() -> None:
         scales = CONTROL_SCALES.get(name, SCALES)
         per_scale: dict[str, float] = {}
         for k in scales:
-            df = _resolve(name)(spark, dirs[k])
+            df = QUERIES[name](spark, dirs[k])
             best = math.inf
             for attempt in range(4):
                 spark.catalog.clearCache()
