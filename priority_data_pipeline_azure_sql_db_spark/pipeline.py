@@ -29,11 +29,14 @@ roll forward. A write that fails while staging leaves the live table and
 its stats untouched; a crash after the intent rolls forward on the next
 access (to_sql append had no such story).
 
-Store metadata costs no Spark job: row counts and the per-partition pk
-zone maps that let a MERGE open only candidate partitions are folded on
-the driver from the parquet footers of the files each write stages, and
-a delta's key profile for that pruning is one capped collect of its
-distinct pk tuples.
+Store metadata and store reads cost no Spark job: row counts, the
+per-partition pk zone maps that let a MERGE open only candidate
+partitions, and the table's Spark schema are folded on the driver from
+the parquet footers of the files each write stages (the schema is the
+staged frame's own), so every read names its schema instead of
+inferring it. An incremental load profiles its cached delta once — one
+capped collect of its distinct (pk, load date) tuples — and the CDC
+audit's read and the MERGE share that profile.
 """
 
 from __future__ import annotations
@@ -44,10 +47,12 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 
 from .catalog import primary_key
 from .config import EntityConfig, ExtractionConfig
@@ -59,7 +64,7 @@ from .operators.store_io import (
     write_partitioned,
 )
 from .operators.flatten import flatten_expand
-from .operators.merge import merge_upsert
+from .operators.merge import merge_upsert, snapshot_diff
 from .operators.normalize import (
     AUDIT_ID_COL,
     AUDIT_TS_COL,
@@ -75,6 +80,14 @@ SUBFORM_SUFFIX = "_subform"
 
 PARTITION_COL = "_load_date"
 _AUDIT_TS = AUDIT_TS_COL  # single source of truth: operators/normalize.py
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class DeltaProfile(NamedTuple):
+    """A delta's key profile (:meth:`StagingStore._delta_profile`)."""
+
+    cols: list  # per pk column: (col, value list | None, range | None, has-null)
+    subs: list[str] | None  # the delta's own partition subs; None: unstamped
 
 
 @dataclass
@@ -125,11 +138,15 @@ class StagingStore:
     # land above every standing range, updates hit recent partitions) is
     # O(delta), not O(store). Stats are exact, not sampled, and cost no
     # Spark job: every write folds them from the parquet footers of the
-    # files it just staged (_footer_zone_map), and a table without a
+    # files it just staged (_fold_footers), and a table without a
     # sidecar (or with one keyed to another pk) is folded from its live
-    # files' footers on first use (_zone_map). Row counts are the
+    # files' footers on first use (_layout). Row counts are the
     # footers' num_rows, so the merge's return value is an O(touched)
-    # sum instead of a store-wide count. Crash-safe: the post-write meta
+    # sum instead of a store-wide count. The sidecar also carries the
+    # table's Spark schema — the staged frame's ``df.schema``, already
+    # the union after a schema-evolving merge — and the footer fold
+    # unions the files' own Spark schemas, so reads name their schema
+    # and never pay an inference job. Crash-safe: the post-write meta
     # rides inside the intent marker, so _recover's roll-forward lands
     # the stats with the swap — stale stats would silently mis-prune
     # (the mirror of the SCD2 store's n_log_buckets guard).
@@ -168,18 +185,21 @@ class StagingStore:
             and not isinstance(v, bool) else None
 
     @classmethod
-    def _footer_zone_map(cls, root: str, pk: list[str] | None) -> dict:
-        """Exact per-sub zone map of the parquet files under ``root``,
-        folded on the driver from their footers (per-row-group
-        ``num_rows`` and per-column min/max/null_count — no Spark job):
-        {sub: {rows, min, max, null[, cols]}}, sub ``""`` for files at
-        the root; {sub: {rows}} without ``pk``. The map covers the FULL
-        composite key: pk[0]'s min/max/null sit in the entry itself,
-        and pk[1:] land under ``cols`` as independent per-column
-        ranges: a partition can hold key (a, b)
-        only if a fits pk[0]'s range AND b fits pk[1]'s — a superset of
-        the true candidates (conservative, never wrong) that still
-        prunes stores whose first key is uninformative ((tenant, seq)).
+    def _fold_footers(cls, root: str, pk: list[str] | None
+                      ) -> tuple[dict, StructType]:
+        """``(zone map, schema)`` of the parquet files under ``root``,
+        folded on the driver from their footers (no Spark job).
+
+        The zone map is exact per sub: per-row-group ``num_rows`` and
+        per-column min/max/null_count give {sub: {rows, min, max,
+        null[, cols]}}, sub ``""`` for files at the root; {sub: {rows}}
+        without ``pk``. The map covers the FULL composite key: pk[0]'s
+        min/max/null sit in the entry itself, and pk[1:] land under
+        ``cols`` as independent per-column ranges: a partition can hold
+        key (a, b) only if a fits pk[0]'s range AND b fits pk[1]'s — a
+        superset of the true candidates (conservative, never wrong) that
+        still prunes stores whose first key is uninformative ((tenant,
+        seq)).
 
         Every row-group bound passes through :meth:`_stat_val` and None
         absorbs: a missing bound (no statistics, a type pyarrow cannot
@@ -192,16 +212,26 @@ class StagingStore:
         Spark's min (NaN sorts last) while its NaN max already made the
         max unknown. A file without the pk column (written before a
         schema-evolving merge added it) holds only nulls in it, as a
-        ``mergeSchema`` read sees it."""
+        ``mergeSchema`` read sees it.
+
+        The schema is the union, in first-seen order, of the Spark
+        schemas Spark writes into every footer, plus PARTITION_COL as a
+        date when the files sit in partition subs: what a
+        ``mergeSchema`` read infers, without its job (the store keeps
+        one type per column)."""
+        import json
+
         import pyarrow.parquet as pq
 
         acc: dict = {}  # sub -> {"rows": n, "cols": {col: fold}}
+        schemas: dict = {}  # distinct footer schema JSON, first-seen order
         for dirpath, _, files in os.walk(root):
             sub = "" if dirpath == root else os.path.relpath(dirpath, root)
             for name in files:
                 if not name.endswith(".parquet") or name[0] in "._":
                     continue
                 md = pq.read_metadata(os.path.join(dirpath, name))
+                schemas.setdefault(md.metadata[_SPARK_SCHEMA_KEY])
                 part = acc.setdefault(sub, {"rows": 0, "cols": {
                     c: {"lo": [], "hi": [], "null": False} for c in pk or ()}})
                 part["rows"] += md.num_rows
@@ -244,19 +274,24 @@ class StagingStore:
                 st.update(stats[pk[0]])
                 if len(pk) > 1:
                     st["cols"] = {c: stats[c] for c in pk[1:]}
-        return out
+        fields = {f.name: f for raw in schemas
+                  for f in StructType.fromJson(json.loads(raw)).fields}
+        if any(sub.startswith(f"{PARTITION_COL}=") for sub in out):
+            fields.setdefault(PARTITION_COL, StructField(PARTITION_COL, DateType()))
+        return out, StructType(list(fields.values()))
 
-    def _zone_map(self, table: str, pk: list[str]) -> dict:
-        """The table's zone map for ``pk``: its sidecar, or — with no
-        sidecar, one keyed to another pk, or a composite-pk one written
-        before round 17 (entries without ``cols``) — the live files'
-        footer fold (a driver-side bootstrap, no Spark job)."""
+    def _layout(self, table: str, pk: list[str] | None = None
+                ) -> tuple[dict, StructType]:
+        """The live table's ``(zone map for pk, Spark schema)``: its
+        sidecar when there is one keyed to ``pk`` (any sidecar without
+        ``pk``), else the live files' footer fold (:meth:`_fold_footers`
+        — a driver-side bootstrap, no Spark job). A sidecar written
+        before sidecars recorded the schema counts as none."""
         meta = self._read_meta(table)
-        if meta is not None and meta.get("pk") == pk and (
-                len(pk) == 1
-                or all("cols" in st for st in meta["parts"].values())):
-            return meta["parts"]
-        return self._footer_zone_map(self.path(table), pk)
+        if meta is None or "schema" not in meta or (
+                pk is not None and meta["pk"] != pk):
+            return self._fold_footers(self.path(table), pk)
+        return meta["parts"], StructType.fromJson(meta["schema"])
 
     @staticmethod
     def _col_can_match(st: dict, svals, drange, dhasnull: bool) -> bool:
@@ -284,91 +319,102 @@ class StagingStore:
         """Partitions whose zone map can hold a delta key — candidate
         iff EVERY profiled pk column can match (round 17: composite
         keys prune on all columns). Conservative throughout: unknown
-        bounds pass, uncomparable types pass."""
-        prof_sorted = [
-            (c, sorted(dvals) if dvals is not None else None, drange, dn)
-            for (c, dvals, drange, dn) in profiles
-        ]
+        bounds pass, uncomparable types pass. ``profiles`` is
+        :meth:`_delta_profile`'s ``cols``, value lists sorted."""
         return [sub for sub, st in parts.items() if all(
             cls._col_can_match(st if j == 0 else st["cols"][c],
                                svals, drange, dhasnull)
-            for j, (c, svals, drange, dhasnull) in enumerate(prof_sorted))]
+            for j, (c, svals, drange, dhasnull) in enumerate(profiles))]
 
-    def _delta_profile(self, delta: DataFrame, pk: list[str]) -> list:
-        """Per-pk-column delta key profile for zone-map pruning:
-        [(col, value list | None, (min, max) | None, has-null), ...].
+    def _delta_profile(self, delta: DataFrame, pk: list[str]) -> DeltaProfile:
+        """The delta's key profile for zone-map pruning: per pk column
+        (col, value list | None, (min, max) | None, has-null), and the
+        partition subs the delta itself writes (None when it carries no
+        audit timestamp).
 
-        One action collects the delta's distinct pk tuples, capped at
-        CAP+1; each column's value list and has-null flag are built on
-        the driver. A delta with at most CAP distinct tuples (the
-        incremental norm) is thereby profiled completely in that one
-        action, whatever the pk width. Only a delta with more than CAP
-        tuples pays a second action, one ``agg`` of per-column
-        min/max/has-null, and prunes on ranges instead. The cap counts
-        TUPLES, so a composite key falls back to ranges while a single
-        column may still have few values — fewer partitions pruned,
-        never a wrong prune.
+        One action collects the delta's distinct (pk..., PARTITION_COL)
+        tuples, capped at CAP+1; each column's value list and has-null
+        flag, and the subs, are built on the driver. A delta with at
+        most CAP distinct tuples (the incremental norm) is thereby
+        profiled completely in that one action, whatever the pk width.
+        Only a delta with more than CAP tuples pays a second action, one
+        ``agg`` of per-column min/max/has-null and the set of load
+        dates, and prunes on ranges instead. The cap counts TUPLES, so a
+        composite key falls back to ranges while a single column may
+        still have few values — fewer partitions pruned, never a wrong
+        prune.
 
-        Value lists drop nulls (the has-null flag carries them) and NaN
-        floats (they break bisect ordering; any partition holding NaN
-        has a None bound and stays a candidate). A range is None when a
-        bound is driver-uncomparable (:meth:`_stat_val`): every
-        partition then stays a candidate on that column."""
+        Value lists are sorted and drop nulls (the has-null flag carries
+        them) and NaN floats (they break bisect ordering; any partition
+        holding NaN has a None bound and stays a candidate). A range is
+        None when a bound is driver-uncomparable (:meth:`_stat_val`):
+        every partition then stays a candidate on that column."""
         cap = self._DELTA_VALS_CAP
-        keys = delta.select(*pk).distinct().limit(cap + 1).collect()
-        if len(keys) <= cap:
-            cols = [[r[i] for r in keys] for i in range(len(pk))]
-            return [(c, [v for v in vals if v is not None and v == v],
-                     None, None in vals) for c, vals in zip(pk, cols)]
+        part = self._with_partition(delta)
+        src, dates = (delta, []) if part is None else (part, [PARTITION_COL])
+        rows = src.select(*pk, *dates).distinct().limit(cap + 1).collect()
+        if len(rows) <= cap:
+            cols = [[r[i] for r in rows] for i in range(len(pk))]
+            return DeltaProfile(
+                [(c, sorted(v for v in vals if v is not None and v == v),
+                  None, None in vals) for c, vals in zip(pk, cols)],
+                sorted({self._part_sub(r[-1]) for r in rows}) if dates else None)
         aggs = []
         for i, c in enumerate(pk):
             aggs += [F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}"),
                      F.max(F.col(c).isNull()).alias(f"_null{i}")]
-        st = delta.agg(*aggs).collect()[0]
+        if dates:  # a struct keeps the null date collect_set would drop
+            aggs.append(F.collect_set(F.struct(PARTITION_COL)).alias("_subs"))
+        st = src.agg(*aggs).collect()[0]
         out = []
         for i, c in enumerate(pk):
             lo, hi = self._stat_val(st[f"_lo{i}"]), self._stat_val(st[f"_hi{i}"])
             drange = (lo, hi) if lo is not None and hi is not None else None
             out.append((c, None, drange, bool(st[f"_null{i}"])))
-        return out
+        return DeltaProfile(out, sorted(
+            {self._part_sub(r[0]) for r in st["_subs"]}) if dates else None)
 
     def read_for_keys(self, spark: SparkSession, table: str,
-                      keys: DataFrame, pk: list[str]) -> DataFrame:
+                      keys: DataFrame, pk: list[str], *,
+                      profile: DeltaProfile | None = None) -> DataFrame:
         """Read ONLY the partitions whose pk zone maps can hold a key of
         ``keys`` — exact for any consumer that only needs rows matching
         those keys (the CDC audit's standing-side restriction): a
         non-candidate partition provably contains none of them. The
-        zone maps come from :meth:`_zone_map` — the sidecar, or the live
+        zone maps come from :meth:`_layout` — the sidecar, or the live
         footers when there is none or its pk differs — so every table
         prunes; an unpartitioned table is the one sub ``""``, read
         whole or not at all. O(candidate partitions) instead of
         O(store) — the same pruning the MERGE's old-version probe
-        uses. A key column the read partitions lack is added as typed
-        nulls (:meth:`_with_keys`). With no candidate partition the
-        result is an empty frame of ``keys``' schema, and the table's
-        files are not opened at all."""
+        uses. ``profile`` is ``keys``' :meth:`_delta_profile`, computed
+        here when not given. A key column the table lacks reads as
+        typed nulls (:meth:`_with_keys`). With no candidate
+        partition the result is an empty frame of ``keys``' schema, and
+        the table's files are not opened at all. Starts no Spark job
+        when ``profile`` is given."""
         self._recover(table)
-        cand = self._prune_candidates(
-            self._zone_map(table, pk), self._delta_profile(keys, pk))
-        df = self._read_subs(spark, table, cand)
-        if df is None:
-            return keys.limit(0)
-        return self._with_keys(df.drop(PARTITION_COL), pk, keys)
+        parts, schema = self._layout(table, pk)
+        profile = profile or self._delta_profile(keys, pk)
+        df = self._read_subs(spark, table,
+                             self._prune_candidates(parts, profile.cols),
+                             self._with_keys(schema, pk, keys))
+        return keys.limit(0) if df is None else df.drop(PARTITION_COL)
 
     @staticmethod
-    def _with_keys(df: DataFrame, pk: list[str], like: DataFrame) -> DataFrame:
-        """``df`` with each pk column it lacks added as a null of
-        ``like``'s type. Partitions written before a schema-evolving
-        merge added a key column hold only nulls in it; a null key
-        never matches, so their rows stay and the delta's are new."""
-        for c in pk:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(like.schema[c].dataType))
-        return df
+    def _with_keys(schema: StructType, pk: list[str],
+                   like: DataFrame) -> StructType:
+        """``schema`` plus each pk column it lacks, typed as in ``like``:
+        a read that names the column gets nulls. A table whose files
+        all predate the schema-evolving merge that added a key column
+        holds only nulls in it; a null key never matches, so its rows
+        stay and the delta's are new."""
+        return StructType(schema.fields + [
+            like.schema[c] for c in pk if c not in schema.names])
 
-    def _read_subs(self, spark: SparkSession, table: str,
-                   subs: list[str]) -> DataFrame | None:
-        """Direct-path read of named partition sub-dirs — partition
+    def _read_subs(self, spark: SparkSession, table: str, subs: list[str],
+                   schema: StructType) -> DataFrame | None:
+        """Direct-path read of named partition sub-dirs with the table's
+        ``schema`` (:meth:`_layout`; no inference job) — partition
         discovery lists ONLY these dirs, never the whole table (the
         same O(n_partitions) listing term the SCD2/ER stores shed).
         Returns None when no named sub exists on disk."""
@@ -377,10 +423,7 @@ class StagingStore:
                 if os.path.isdir(os.path.join(root, s))]
         if not dirs:
             return None
-        return (
-            spark.read.option("basePath", root)
-            .option("mergeSchema", "true").parquet(*dirs)
-        )
+        return spark.read.schema(schema).option("basePath", root).parquet(*dirs)
 
     @staticmethod
     def _with_partition(df: DataFrame) -> DataFrame | None:
@@ -395,11 +438,12 @@ class StagingStore:
         # must never see the mid-swap state (partition deleted, its
         # replacement still in tmp)
         self._recover(table)
-        # mergeSchema: after a schema-evolving merge, touched partitions
-        # carry new columns older partitions lack — the union schema is
-        # the table's real shape (plain reads sample one file's footer)
-        df = spark.read.option("mergeSchema", "true").parquet(self.path(table))
-        return df.drop(PARTITION_COL) if PARTITION_COL in df.columns else df
+        # the table's union schema (sidecar or footers, :meth:`_layout`):
+        # after a schema-evolving merge older partitions lack the new
+        # columns and read them as nulls, as a mergeSchema read would,
+        # without its inference job
+        return spark.read.schema(self._layout(table)[1]) \
+            .parquet(self.path(table)).drop(PARTITION_COL)
 
     def overwrite(self, df: DataFrame, table: str,
                   pk: list[str] | None = None) -> int:
@@ -416,24 +460,29 @@ class StagingStore:
         self._recover(table)
         part = self._with_partition(df)
         zm = self._stage(df if part is None else part, table, pk)
-        meta = {"pk": pk, "parts": zm} if pk and part is not None and zm else None
+        meta = ({"pk": pk, "parts": zm, "schema": part.schema.jsonValue()}
+                if pk and part is not None and zm else None)
         self._commit(table, [""], meta)
         return sum(st["rows"] for st in zm.values())
 
-    def merge(self, spark: SparkSession, delta: DataFrame, table: str, pk: list[str]) -> int:
+    def merge(self, spark: SparkSession, delta: DataFrame, table: str,
+              pk: list[str], *, profile: DeltaProfile | None = None) -> int:
         """MERGE-upsert delta into the staging table (O13 incremental path,
         dedup fix), rewriting only touched partitions.
 
         Touched = partitions the delta writes into ∪ partitions still
-        holding an old version of a delta PK (found with a column-pruned
-        PK semi-join — a cheap scan, not a rewrite — in the same collect
-        as the delta's own partition values; a key column older
-        partitions lack probes as nulls, :meth:`_with_keys`). The merged
-        touched partitions are staged and committed together, so
-        readers never see a half-written partition; untouched
-        partitions' files are never opened, let alone rewritten. The
-        ``collect`` returns partition VALUES (load dates) — partition
-        metadata, not data.
+        holding an old version of a delta PK. The first come from the
+        delta's key profile (``profile``, :meth:`_delta_profile`,
+        computed here when not given). The second are found with a
+        column-pruned PK semi-join — a cheap scan, not a rewrite — over
+        the zone-map candidates the delta does not write into anyway (a
+        key column the table lacks probes as nulls,
+        :meth:`_with_keys`); when every candidate is one of the delta's
+        own partitions, no probe runs. The merged touched partitions are
+        staged and committed together, so readers never see a
+        half-written partition; untouched partitions' files are never
+        opened, let alone rewritten. The probe's ``collect`` returns
+        partition VALUES (load dates) — partition metadata, not data.
 
         MERGE SEMANTICS — GROUP-replace, not row-replace (round-11
         review, resolved the other way after its blanket-PK-dedup
@@ -457,8 +506,7 @@ class StagingStore:
             e.startswith(f"{PARTITION_COL}=")
             for e in os.listdir(self.path(table))
         )
-        dpart = self._with_partition(delta)
-        if not partitioned or dpart is None:
+        if not partitioned or self._with_partition(delta) is None:
             # whole-table form: the merged table is the staged
             # replacement of sub "" (schema evolution: align to the union)
             target, delta = align_schemas(self.read(spark, table), delta)
@@ -466,32 +514,37 @@ class StagingStore:
             self._commit(table, [""], None)  # whole-table path drops stats
             return sum(st["rows"] for st in zm.values())
 
-        parts = self._zone_map(table, pk)
-        probe = self._read_subs(spark, table, self._prune_candidates(
-            parts, self._delta_profile(delta, pk)))
-        touched = dpart.select(PARTITION_COL)
+        parts, schema = self._layout(table, pk)
+        profile = profile or self._delta_profile(delta, pk)
+        # the delta's own partitions are rewritten whatever they hold
+        # (zone maps are conservative, so skipping their probe is exact)
+        subs = set(profile.subs)
+        probe = self._read_subs(spark, table, [
+            s for s in self._prune_candidates(parts, profile.cols)
+            if s not in subs], self._with_keys(schema, pk, delta))
         if probe is not None:
-            # cast: partition inference may type an all-null column as
-            # string; the delta side is always a date
-            touched = self._with_keys(probe, pk, delta) \
-                .join(dpart.select(*pk).distinct(), on=pk, how="left_semi") \
-                .select(F.col(PARTITION_COL).cast("date")).unionByName(touched)
-        subs = [self._part_sub(r[0]) for r in touched.distinct().collect()]
+            subs.update(self._part_sub(r[0]) for r in probe
+                        .join(delta.select(*pk), on=pk, how="left_semi")
+                        .select(PARTITION_COL).distinct().collect())
+        subs = sorted(subs)
         # merge target: direct-path read of ONLY the touched partitions
         # (subs absent on disk hold nothing to merge against)
-        target_df = self._read_subs(spark, table, subs)
-        target = (delta.limit(0) if target_df is None
-                  else target_df.drop(PARTITION_COL))
+        target = self._read_subs(spark, table, subs, schema)
         # schema evolution: widen both sides to the column union (new
-        # source fields survive; dropped fields read back as nulls)
-        target, delta = align_schemas(target, delta)
+        # source fields survive; dropped fields read back as nulls). The
+        # target carries the whole table's schema even when no touched
+        # sub exists yet, so the merged schema never narrows the table's.
+        target, delta = align_schemas((
+            spark.createDataFrame([], schema) if target is None else target
+        ).drop(PARTITION_COL), delta)
+        merged = self._with_partition(merge_upsert(target, delta, pk))
         # the touched partitions' zone maps come from the footers just
         # staged (O(touched)); untouched entries carry over. An empty
         # merged frame stages nothing: the touched entries drop out.
         new_parts = {s: st for s, st in parts.items() if s not in subs}
-        new_parts.update(self._stage(
-            self._with_partition(merge_upsert(target, delta, pk)), table, pk))
-        self._commit(table, subs, {"pk": pk, "parts": new_parts})
+        new_parts.update(self._stage(merged, table, pk))
+        self._commit(table, subs, {"pk": pk, "parts": new_parts,
+                                   "schema": merged.schema.jsonValue()})
         # O(touched) total: per-partition row counts summed from the
         # sidecar instead of a store-wide count per merge
         return sum(st["rows"] for st in new_parts.values())
@@ -501,7 +554,7 @@ class StagingStore:
         """Write ``df`` — the complete replacement of every sub it holds
         — under ``<table>.__tmp__``, hive-partitioned when it carries
         PARTITION_COL. Returns the staged files' zone map
-        (:meth:`_footer_zone_map` over ``pk``), read from the footers
+        (:meth:`_fold_footers` over ``pk``), read from the footers
         the write just produced: its ``rows`` sum is the row count, with
         no second Spark job and no read-back. A zero-row partitioned
         write leaves no tmp dir and returns {} (every sub it covers is
@@ -515,7 +568,7 @@ class StagingStore:
                               cluster=cluster)
         else:
             df.write.mode("overwrite").parquet(tmp)
-        return self._footer_zone_map(tmp, pk)
+        return self._fold_footers(tmp, pk)[0]
 
     def _commit(self, table: str, subs: list[str], meta: dict | None) -> None:
         """Commit the staged ``subs``. ``meta`` (the post-write stats
@@ -577,17 +630,14 @@ class StagingStore:
         self._recover(table)
         final = self.path(table)
         subs = [p for p in os.listdir(final)
-                if p.startswith(f"{PARTITION_COL}=")]
-        if subs:
-            over = [s for s in subs
-                    if n_files(os.path.join(final, s)) > max_files_per_partition]
-        else:  # unpartitioned form
-            over = [""] if n_files(final) > max_files_per_partition else []
+                if p.startswith(f"{PARTITION_COL}=")] or [""]  # "": unpartitioned
+        over = [s for s in subs
+                if n_files(os.path.join(final, s)) > max_files_per_partition]
         if not over:
             return 0
-        staged = (self._read_subs(spark, table, over) if subs else
-                  self.read(spark, table).coalesce(max_files_per_partition))
-        self._stage(staged, table, cluster=True)
+        staged = self._read_subs(spark, table, over, self._layout(table)[1])
+        self._stage(staged.coalesce(max_files_per_partition) if over == [""]
+                    else staged, table, cluster=True)
         self._commit(table, over, self._read_meta(table))
         return len(over)
 
@@ -626,14 +676,11 @@ def cdc_audit_delta(
     merge path itself already aligns to the union, so the audit now
     sees exactly what the merge changes).
     """
-    from .operators.merge import snapshot_diff
-    from .operators.normalize import align_schemas
-
     compare = sorted(
         (set(target.columns) | set(delta.columns))
         - set(pk) - set(exclude_cols)
     )
-    old = target.join(delta.select(*pk).distinct(), pk, "left_semi")
+    old = target.join(delta.select(*pk), pk, "left_semi")
     old, delta = align_schemas(old, delta)
     return snapshot_diff(old, delta, pk, compare)
 
@@ -825,13 +872,15 @@ class PipelineRunner:
                     key = None
                 return self.store.overwrite(df, table, pk=key), None, None, None
             # the delta plan (scan → watermark filter → flatten → audit
-            # columns) feeds read_for_keys's _delta_profile, the audit
-            # write, merge's own _delta_profile, its touched-partition
-            # collect and its stage write — cache it once instead of
-            # re-running the full extract per action
+            # columns) feeds the one key profile below (shared by
+            # read_for_keys and merge), the audit write, merge's
+            # touched-partition probe (when it has candidates beyond the
+            # delta's own partitions) and its stage write — cache it
+            # once instead of re-running the full extract per action
             df = df.cache()
             try:
                 key = _key()
+                profile = self.store._delta_profile(df, key)
                 if cdc_audit:
                     try:
                         # zone-map-pruned standing side (round 13): the
@@ -841,7 +890,7 @@ class PipelineRunner:
                         # the merge's old-version probe
                         audit = cdc_audit_delta(
                             self.store.read_for_keys(
-                                self.spark, table, df, key),
+                                self.spark, table, df, key, profile=profile),
                             df, key,
                         )
                         # change-type tallies observed on the audit's
@@ -856,7 +905,8 @@ class PipelineRunner:
                         cdc = {t: n for t, n in tally.get.items() if n}
                     except Exception as exc:  # advisory: never block the load
                         cdc_err = f"{type(exc).__name__}: {exc}"
-                return self.store.merge(self.spark, df, table, key), cdc, cdc_err, None
+                return self.store.merge(self.spark, df, table, key,
+                                        profile=profile), cdc, cdc_err, None
             finally:
                 df.unpersist()
         except Exception as exc:

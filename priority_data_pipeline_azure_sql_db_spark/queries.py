@@ -24,7 +24,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import schema_for
 from .operators import dedup as D
 from .operators import similarity as S
 from .operators import text as X

@@ -309,10 +309,8 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     cannot touch — every partition holds the same tenant range
     (uninformative pk[0]) while seq (pk[1]) is partition-aligned — so
     the measured win is direct: a composite sidecar reads 1 of 3
-    partitions where first-key-only pruning reads all 3. A legacy
-    (pre-round-17) sidecar without ``cols`` is refolded from the live
-    footers, so it prunes on every column too, and the composite
-    checks stay conservative on every column."""
+    partitions where first-key-only pruning reads all 3, and the
+    composite checks stay conservative on every column."""
     import json
 
     from pyspark.sql import functions as F
@@ -357,21 +355,8 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     assert {(r.tenant, r.seq) for r in
             got.join(keys, on=pk, how="left_semi").collect()} == {(2, 150)}
 
-    # legacy (pre-round-17) sidecar — "cols" absent: treated as
-    # missing, so the zone map is refolded from the live footers and
-    # prunes on every column again
-    legacy = {"pk": pk, "parts": {
-        s: {k: v for k, v in st.items() if k != "cols"}
-        for s, st in meta["parts"].items()}}
-    store._write_meta("t", legacy)
-    got_legacy = store.read_for_keys(spark, "t", keys, pk)
-    legacy_parts = {f.split("_load_date=")[1].split("/")[0]
-                    for f in got_legacy.inputFiles()}
-    assert legacy_parts == {"2026-01-02"}, legacy_parts
-
-    # restore composite stats; a second-column UPDATE must still find
-    # its old version through the pruned probe (merge correctness)
-    store._write_meta("t", meta)
+    # a second-column UPDATE must still find its old version through
+    # the pruned probe (merge correctness)
     assert store.merge(
         spark, batch([(2, 150, "UPDATED")], 2), "t", pk) == 36
     got = {(r.tenant, r.seq): r.v for r in store.read(spark, "t").collect()}
@@ -387,15 +372,18 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
 
 def test_delta_profile_single_action_and_semantics(
         spark, tmp_path, monkeypatch):
-    """``_delta_profile`` collects the delta's distinct pk tuples once,
-    capped at CAP+1, and builds each column's profile on the driver. At
-    most CAP tuples: ONE action whatever the pk width, complete value
-    lists (nulls and NaN out) and has-null flags. More than CAP tuples:
-    exactly two actions (that collect, then one agg) and the range
-    fallback, with None ranges for driver-uncomparable types (NaN
-    maxima, timestamps)."""
+    """``_delta_profile`` collects the delta's distinct pk tuples once
+    (with their load date when the delta is stamped), capped at CAP+1,
+    and builds each column's profile and the delta's own partition subs
+    on the driver. At most CAP tuples: ONE action whatever the pk
+    width, complete value lists (nulls and NaN out) and has-null flags.
+    More than CAP tuples: exactly two actions (that collect, then one
+    agg) and the range fallback, with None ranges for
+    driver-uncomparable types (NaN maxima, timestamps)."""
     import math
     from datetime import datetime
+
+    from pyspark.sql import functions as F
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
 
@@ -425,7 +413,8 @@ def test_delta_profile_single_action_and_semantics(
         monkeypatch.setattr(StagingStore, "_DELTA_VALS_CAP", cap)
         calls.clear()
         prof = store._delta_profile(delta, cols)
-        return len(calls), {c: (dv, dr, dn) for c, dv, dr, dn in prof}
+        assert prof.subs is None  # no audit timestamp: no partitions
+        return len(calls), {c: (dv, dr, dn) for c, dv, dr, dn in prof.cols}
 
     # at the cap: one action for a 1-column and for a 4-column pk
     assert profile(5, ["a"])[0] == 1
@@ -451,6 +440,18 @@ def test_delta_profile_single_action_and_semantics(
     assert prof["b"] == (None, (10, 50), False)
     assert prof["c"] == (None, None, False)  # max is NaN: no range
     assert prof["d"] == (None, None, False)  # timestamp: no range
+
+    # a stamped delta: the same actions also yield the partition subs
+    # it writes, a null stamp landing in the default partition
+    stamped = delta.withColumn("extractiontimestamputc", F.when(
+        F.col("b") != 30, F.col("d")))
+    for cap, actions in ((5, 1), (4, 2)):
+        monkeypatch.setattr(StagingStore, "_DELTA_VALS_CAP", cap)
+        calls.clear()
+        prof = store._delta_profile(stamped, pk)
+        assert len(calls) == actions
+        assert prof.subs == ["_load_date=2026-01-01",
+                             "_load_date=__HIVE_DEFAULT_PARTITION__"]
 
 
 def test_merge_group_replace_semantics(spark, tmp_path):
@@ -706,15 +707,33 @@ def test_child_key_explicit_map_and_ambiguity(spark):
 def test_merge_schema_evolution(spark, tmp_path):
     """A source adding a field mid-stream: the merge widens the stored
     table, old rows read back with nulls in the new column, and a delta
-    MISSING a stored column leaves old values intact."""
-    from pyspark.sql import functions as F
+    MISSING a stored column leaves old values intact. Store reads name
+    the table's schema (the sidecar's, or the union of the footers'
+    when there is no sidecar) and must see exactly what a
+    ``mergeSchema`` read sees: rows, columns and types."""
+    import os
 
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import write_json
     from priority_data_pipeline_azure_sql_db_spark.pipeline import (
+        PARTITION_COL,
         StagingStore,
         cdc_audit_delta,
     )
 
     store = StagingStore(str(tmp_path / "stg"))
+
+    def same_as_merge_schema(table):
+        got = store.read(spark, table)
+        want = spark.read.option("mergeSchema", "true") \
+            .parquet(store.path(table)).drop(PARTITION_COL)
+        assert sorted(got.dtypes) == sorted(want.dtypes), table
+        want = want.select(*got.columns)
+        assert got.count() == want.count(), table
+        assert got.exceptAll(want).count() == 0, table
+
     v1 = spark.createDataFrame(
         [(1, "a", "2024-01-01 00:00:00"), (2, "b", "2024-01-01 00:00:00")],
         "id bigint, val string, extractiontimestamputc string",
@@ -739,6 +758,58 @@ def test_merge_schema_evolution(spark, tmp_path):
     got = {r.id: (r.val, r.extra) for r in store.read(spark, "stg_t").collect()}
     assert got[3] == ("c3", None)
     assert got[2] == ("b2", "fresh")
+
+    # a delta missing "extra" whose own partition is new and whose key no
+    # partition can hold (nothing on disk to merge against), then one
+    # that rewrites the day-2 partition: the sidecar keeps the union
+    # schema, so day 2's stored "extra" survives both
+    v4 = spark.createDataFrame(
+        [(4, "d", "2024-01-04 00:00:00")],
+        "id bigint, val string, extractiontimestamputc string",
+    ).withColumn("extractiontimestamputc", F.col("extractiontimestamputc").cast("timestamp"))
+    store.merge(spark, v4, "stg_t", ["id"])
+    same_as_merge_schema("stg_t")
+    store.merge(spark, v4.withColumn("id", F.lit(5).cast("bigint"))
+                .withColumn("extractiontimestamputc",
+                            F.lit("2024-01-02 00:00:00").cast("timestamp")),
+                "stg_t", ["id"])
+    same_as_merge_schema("stg_t")
+    got = {r.id: (r.val, r.extra) for r in store.read(spark, "stg_t").collect()}
+    assert got == {1: ("a", None), 2: ("b2", "fresh"), 3: ("c3", None),
+                   4: ("d", None), 5: ("d", None)}
+
+    # the sidecar records the union schema (the day-1 partition predates
+    # "extra"); without the sidecar the footers' schemas give the same
+    meta = store._read_meta("stg_t")
+    assert meta["schema"]["fields"][-1]["name"] == PARTITION_COL
+    assert {f["name"] for f in meta["schema"]["fields"]} == {
+        "id", "val", "extra", "extractiontimestamputc", PARTITION_COL}
+    same_as_merge_schema("stg_t")
+    # a sidecar that records no schema (written before sidecars carried
+    # one) counts as none: every read folds the footers instead
+    write_json(store._meta_path("stg_t"),
+               {k: v for k, v in meta.items() if k != "schema"})
+    assert store._layout("stg_t", ["id"]) == store._fold_footers(
+        store.path("stg_t"), ["id"])
+    same_as_merge_schema("stg_t")
+    # id 4 falls in day 2's range [2, 5] and in day 4's
+    assert {r.id for r in store.read_for_keys(spark, "stg_t", v4, ["id"])
+            .collect()} == {2, 4, 5}
+    os.remove(store._meta_path("stg_t"))
+    same_as_merge_schema("stg_t")
+    assert store._layout("stg_t")[1] == StructType.fromJson(meta["schema"])
+
+    # an unpartitioned table (no sidecar ever) evolved by the
+    # whole-table merge
+    plain = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, val string")
+    store.overwrite(plain, "plain")
+    same_as_merge_schema("plain")
+    store.merge(spark, spark.createDataFrame(
+        [(2, "b2", 7)], "id bigint, val string, n int"), "plain", ["id"])
+    assert store._read_meta("plain") is None
+    same_as_merge_schema("plain")
+    assert {r.id: r.n for r in store.read(spark, "plain").collect()} == {
+        1: None, 2: 7}
 
     # a merge key that takes in the evolved column: the sidecar is keyed
     # to another pk, so the zone maps are folded from the live footers,
@@ -1395,10 +1466,10 @@ def test_failed_table_leaves_siblings_committed(
     cfg = _cfg(_orders("1998-01-01 00:00:00"), _ent("customer"))
     real = StagingStore.merge
 
-    def merge(self, spark_, delta, table, pk):
+    def merge(self, spark_, delta, table, pk, **kw):
         if table == failing:
             raise RuntimeError("merge exploded")
-        return real(self, spark_, delta, table, pk)
+        return real(self, spark_, delta, table, pk, **kw)
 
     monkeypatch.setattr(StagingStore, "merge", merge)
     runner = PipelineRunner(spark, cfg, store, sf_dir)
@@ -1498,3 +1569,61 @@ def test_read_for_keys_without_candidates_skips_table_read(spark, tmp_path,
     audit = cdc_audit_delta(got, keys, ["pk"]).collect()
     assert sorted((r.pk, r.change_type) for r in audit) == [
         (1000, "inserted"), (1001, "inserted")]
+
+
+def test_refresh_profiles_each_delta_once_and_reads_start_no_job(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """One incremental refresh with the CDC audit profiles each cached
+    delta once (the audit's read and the merge share the profile), and
+    the store's reads start no Spark job: ``read_for_keys``,
+    ``_read_subs`` and ``read`` take the schema from the sidecar or the
+    footers instead of inferring it. Each call runs under a job group
+    of its own; no job may land in one."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = StagingStore(str(tmp_path / "stg"))
+    PipelineRunner(spark, _cfg(_orders(), _ent("nation")), store,
+                   sf_dir).initial_data_load()
+
+    profiled = []
+    real_profile = StagingStore._delta_profile
+
+    def profile(self, delta, pk):
+        profiled.append(pk)
+        return real_profile(self, delta, pk)
+
+    monkeypatch.setattr(StagingStore, "_delta_profile", profile)
+    groups = {}
+
+    def own_group(name):
+        real = getattr(StagingStore, name)
+
+        def wrapper(self, *args, **kwargs):
+            group = f"{name}-{uuid.uuid4().hex}"
+            groups[group] = name
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            try:
+                return real(self, *args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", outer)
+
+        monkeypatch.setattr(StagingStore, name, wrapper)
+
+    for name in ("read_for_keys", "_read_subs", "read"):
+        own_group(name)
+    results = PipelineRunner(
+        spark, _cfg(_orders("1998-01-01 00:00:00"), _ent("nation")), store,
+        sf_dir).refresh_data(incremental=True, cdc_audit=True)
+    assert all(r.error is None and r.cdc_error is None for r in results)
+    assert sorted(map(tuple, profiled)) == [
+        ("n_nationkey",), ("o_orderkey",), ("o_orderkey", "l_linenumber")]
+    # sidecar-backed tables and the sidecar-less __cdc feeds
+    for t in _store_tables(store):
+        store.read(spark, t)
+    assert set(groups.values()) == {"read_for_keys", "_read_subs", "read"}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    started = {g: n for g, n in groups.items()
+               if sc.statusTracker().getJobIdsForGroup(g)}
+    assert not started, started
