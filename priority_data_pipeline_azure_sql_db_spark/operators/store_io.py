@@ -16,9 +16,12 @@ store, the SCD2 history and dedup-index compaction all use it:
    writers roll a leftover marker forward first, so a crash after the
    marker completes on the next touch.
 
-Small files (intent markers, stats sidecars, ``CURRENT`` pointers,
-schema sidecars) go through :func:`write_atomic`: tmp file plus
-``os.replace``, never a torn file.
+Small files (intent markers, ``CURRENT`` pointers, the ER and SCD2
+stores' parameter ``META`` files, the SCD2 history's
+``HIST_SCHEMA.json``) go through :func:`write_atomic`: tmp file plus
+``os.replace``, never a torn file. The staging store keeps no such
+file: its zone maps, row counts and schema are read from its parquet
+footers.
 
 :func:`write_partitioned` exists because writing ZERO rows through
 ``partitionBy(...)`` produces a directory holding ``_SUCCESS`` but no
@@ -71,7 +74,7 @@ def write_atomic(path: str, text: str | None) -> None:
     """Replace the file ``path`` with ``text`` atomically: write a
     sibling ``.part`` file, then ``os.replace`` it over ``path``, so a
     reader sees the old content or the new, never a torn file. ``None``
-    removes ``path``. Every store pointer, sidecar and intent marker
+    removes ``path``. Every store pointer, META file and intent marker
     is written through here."""
     if text is None:
         try:

@@ -25,16 +25,18 @@ staging schema). A real deployment swaps ``StagingStore`` for
 overwrite, both MERGE forms, compaction — commits through the one
 ``operators.store_io`` commit: stage the complete replacement under
 ``<table>.__tmp__``, write the intent marker ``<table>.__intent__.json``,
-roll forward. A write that fails while staging leaves the live table and
-its stats untouched; a crash after the intent rolls forward on the next
-access (to_sql append had no such story).
+roll forward. A write that fails while staging leaves the live table
+untouched; a crash after the intent rolls forward on the next access
+(to_sql append had no such story).
 
 Store metadata and store reads cost no Spark job: row counts, the
 per-partition pk zone maps that let a MERGE open only candidate
 partitions, and the table's Spark schema are folded on the driver from
-the parquet footers of the files each write stages (the schema is the
-staged frame's own), so every read names its schema instead of
-inferring it. An incremental load profiles its cached delta once — one
+the parquet footers of the table's live files — the one source, with
+no copy beside the table to keep in step — so every read names its
+schema instead of inferring it. (Older versions also kept a
+``<table>.__meta__.json`` sidecar; one left behind is ignored and needs
+no rebuild.) An incremental load profiles its cached delta once — one
 capped collect of its distinct (pk, load date) tuples — and the CDC
 audit's read and the MERGE share that profile.
 """
@@ -56,13 +58,7 @@ from pyspark.sql.types import DateType, StructField, StructType
 
 from .catalog import primary_key
 from .config import EntityConfig, ExtractionConfig
-from .operators.store_io import (
-    load_json,
-    roll_forward,
-    write_intent,
-    write_json,
-    write_partitioned,
-)
+from .operators.store_io import roll_forward, write_intent, write_partitioned
 from .operators.flatten import flatten_expand
 from .operators.merge import merge_upsert, snapshot_diff
 from .operators.normalize import (
@@ -109,12 +105,22 @@ class StagingStore:
     :meth:`_commit`), through ``store_io``'s one commit: the complete
     replacement of some subs — touched partition dirs, or ``""`` for
     the whole table — is written under the sibling ``<table>.__tmp__``
-    (its row count and zone maps read from the footers of the files
-    just written), then the intent marker ``<table>.__intent__.json``
-    carries the subs and the post-write stats sidecar, and
-    :meth:`_recover` rolls it forward; its extra step sets the sidecar.
-    Before the marker nothing live has changed; after it, the next read
-    or write finishes the commit.
+    (its row count read from the footers of the files just written),
+    then the intent marker ``<table>.__intent__.json`` names the subs,
+    and :meth:`_recover` rolls it forward. Before the marker nothing
+    live has changed; after it, the next read or write finishes the
+    commit.
+
+    Zone maps, row counts and the Spark schema have one source: the
+    footers of the table's live files, folded on the driver by
+    :meth:`_fold_footers` at each use. The exact per-partition pk
+    min/max let the MERGE's old-version probe and the CDC audit's read
+    open only partitions whose range can hold a delta key — O(delta)
+    for the production shape (monotonic ids: inserts land above every
+    standing range, updates hit recent partitions), not O(store). The
+    footers change only with the files, so the stats cannot drift from
+    the data or outlive a crashed commit. A ``<table>.__meta__.json``
+    left by an older version, which kept a copy there, is ignored.
     """
 
     root: str
@@ -128,40 +134,8 @@ class StagingStore:
     def _tmp_path(self, table: str) -> str:
         return self.path(table) + ".__tmp__"
 
-    # -- partition-stats sidecar (round 13, VERDICT r12 ask #2) ----------
-    # Per-partition pk min/max + row counts in `<table>.__meta__.json`:
-    # the delta-PK semi-join that finds partitions holding an old version
-    # of a delta key was the staging store's one store-wide read (the
-    # maintenance probe's steepest marginal, +0.141 s/x) — with exact
-    # zone maps it scans only partitions whose pk RANGE can contain a
-    # delta key, which for the production shape (monotonic ids: inserts
-    # land above every standing range, updates hit recent partitions) is
-    # O(delta), not O(store). Stats are exact, not sampled, and cost no
-    # Spark job: every write folds them from the parquet footers of the
-    # files it just staged (_fold_footers), and a table without a
-    # sidecar (or with one keyed to another pk) is folded from its live
-    # files' footers on first use (_layout). Row counts are the
-    # footers' num_rows, so the merge's return value is an O(touched)
-    # sum instead of a store-wide count. The sidecar also carries the
-    # table's Spark schema — the staged frame's ``df.schema``, already
-    # the union after a schema-evolving merge — and the footer fold
-    # unions the files' own Spark schemas, so reads name their schema
-    # and never pay an inference job. Crash-safe: the post-write meta
-    # rides inside the intent marker, so _recover's roll-forward lands
-    # the stats with the swap — stale stats would silently mis-prune
-    # (the mirror of the SCD2 store's n_log_buckets guard).
-
     _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
     _DELTA_VALS_CAP = 50_000  # distinct delta pk tuples; above: ranges
-
-    def _meta_path(self, table: str) -> str:
-        return self.path(table) + ".__meta__.json"
-
-    def _read_meta(self, table: str) -> dict | None:
-        return load_json(self._meta_path(table))
-
-    def _write_meta(self, table: str, meta: dict | None) -> None:
-        write_json(self._meta_path(table), meta)
 
     @classmethod
     def _part_sub(cls, v) -> str:
@@ -214,8 +188,9 @@ class StagingStore:
         schema-evolving merge added it) holds only nulls in it, as a
         ``mergeSchema`` read sees it.
 
-        The schema is the union, in first-seen order, of the Spark
-        schemas Spark writes into every footer, plus PARTITION_COL as a
+        The schema is the union, in first-seen order over the sorted
+        paths (older partitions first), of the Spark schemas Spark
+        writes into every footer, plus PARTITION_COL as a
         date when the files sit in partition subs: what a
         ``mergeSchema`` read infers, without its job (the store keeps
         one type per column)."""
@@ -225,9 +200,10 @@ class StagingStore:
 
         acc: dict = {}  # sub -> {"rows": n, "cols": {col: fold}}
         schemas: dict = {}  # distinct footer schema JSON, first-seen order
-        for dirpath, _, files in os.walk(root):
+        for dirpath, dirs, files in os.walk(root):
+            dirs.sort()  # sorted walk: a stable union column order
             sub = "" if dirpath == root else os.path.relpath(dirpath, root)
-            for name in files:
+            for name in sorted(files):
                 if not name.endswith(".parquet") or name[0] in "._":
                     continue
                 md = pq.read_metadata(os.path.join(dirpath, name))
@@ -279,19 +255,6 @@ class StagingStore:
         if any(sub.startswith(f"{PARTITION_COL}=") for sub in out):
             fields.setdefault(PARTITION_COL, StructField(PARTITION_COL, DateType()))
         return out, StructType(list(fields.values()))
-
-    def _layout(self, table: str, pk: list[str] | None = None
-                ) -> tuple[dict, StructType]:
-        """The live table's ``(zone map for pk, Spark schema)``: its
-        sidecar when there is one keyed to ``pk`` (any sidecar without
-        ``pk``), else the live files' footer fold (:meth:`_fold_footers`
-        — a driver-side bootstrap, no Spark job). A sidecar written
-        before sidecars recorded the schema counts as none."""
-        meta = self._read_meta(table)
-        if meta is None or "schema" not in meta or (
-                pk is not None and meta["pk"] != pk):
-            return self._fold_footers(self.path(table), pk)
-        return meta["parts"], StructType.fromJson(meta["schema"])
 
     @staticmethod
     def _col_can_match(st: dict, svals, drange, dhasnull: bool) -> bool:
@@ -376,25 +339,23 @@ class StagingStore:
 
     def read_for_keys(self, spark: SparkSession, table: str,
                       keys: DataFrame, pk: list[str], *,
-                      profile: DeltaProfile | None = None) -> DataFrame:
+                      profile: DeltaProfile) -> DataFrame:
         """Read ONLY the partitions whose pk zone maps can hold a key of
         ``keys`` — exact for any consumer that only needs rows matching
         those keys (the CDC audit's standing-side restriction): a
         non-candidate partition provably contains none of them. The
-        zone maps come from :meth:`_layout` — the sidecar, or the live
-        footers when there is none or its pk differs — so every table
-        prunes; an unpartitioned table is the one sub ``""``, read
-        whole or not at all. O(candidate partitions) instead of
-        O(store) — the same pruning the MERGE's old-version probe
-        uses. ``profile`` is ``keys``' :meth:`_delta_profile`, computed
-        here when not given. A key column the table lacks reads as
-        typed nulls (:meth:`_with_keys`). With no candidate
-        partition the result is an empty frame of ``keys``' schema, and
-        the table's files are not opened at all. Starts no Spark job
-        when ``profile`` is given."""
+        zone maps are the live footers' fold (:meth:`_fold_footers`),
+        so every table prunes; an unpartitioned table is the one sub
+        ``""``, read whole or not at all. O(candidate partitions)
+        instead of O(store) — the same pruning the MERGE's old-version
+        probe uses. ``profile`` is ``keys``' :meth:`_delta_profile`,
+        which the caller shares with the MERGE. A key column the table
+        lacks reads as typed nulls (:meth:`_with_keys`). With no
+        candidate partition the result is an empty frame of ``keys``'
+        schema, and the table's files are not opened at all. Starts no
+        Spark job."""
         self._recover(table)
-        parts, schema = self._layout(table, pk)
-        profile = profile or self._delta_profile(keys, pk)
+        parts, schema = self._fold_footers(self.path(table), pk)
         df = self._read_subs(spark, table,
                              self._prune_candidates(parts, profile.cols),
                              self._with_keys(schema, pk, keys))
@@ -414,7 +375,7 @@ class StagingStore:
     def _read_subs(self, spark: SparkSession, table: str, subs: list[str],
                    schema: StructType) -> DataFrame | None:
         """Direct-path read of named partition sub-dirs with the table's
-        ``schema`` (:meth:`_layout`; no inference job) — partition
+        ``schema`` (:meth:`_fold_footers`; no inference job) — partition
         discovery lists ONLY these dirs, never the whole table (the
         same O(n_partitions) listing term the SCD2/ER stores shed).
         Returns None when no named sub exists on disk."""
@@ -438,32 +399,32 @@ class StagingStore:
         # must never see the mid-swap state (partition deleted, its
         # replacement still in tmp)
         self._recover(table)
-        # the table's union schema (sidecar or footers, :meth:`_layout`):
-        # after a schema-evolving merge older partitions lack the new
-        # columns and read them as nulls, as a mergeSchema read would,
-        # without its inference job
-        return spark.read.schema(self._layout(table)[1]) \
-            .parquet(self.path(table)).drop(PARTITION_COL)
+        # the footers' union schema (:meth:`_fold_footers`): after a
+        # schema-evolving merge older partitions lack the new columns
+        # and read them as nulls, as a mergeSchema read would, without
+        # its inference job
+        path = self.path(table)
+        return spark.read.schema(self._fold_footers(path, None)[1]) \
+            .parquet(path).drop(PARTITION_COL)
 
     def overwrite(self, df: DataFrame, table: str,
                   pk: list[str] | None = None) -> int:
         """Full replace, staged and committed like every other write: a
-        source that fails mid-write leaves the old table and sidecar in
-        place. With ``pk`` given, a partitioned table's stats sidecar is
-        the staged files' footer zone map (no Spark job), so the FIRST
-        incremental merge already prunes; without it, the first merge
-        folds the live footers instead. Returns the staged footers' row
-        count. A zero-row audit-stamped replace removes the table
-        (``exists()`` False is the staging "empty" signal): a
-        partitioned dir with no parquet files would wedge every later
-        read with UNABLE_TO_INFER_SCHEMA."""
+        source that fails mid-write leaves the old table in place.
+        Returns the staged footers' row count. A zero-row audit-stamped
+        replace removes the table (``exists()`` False is the staging
+        "empty" signal): a partitioned dir with no parquet files would
+        wedge every later read with UNABLE_TO_INFER_SCHEMA.
+
+        ``pk`` is accepted and unused: the zone maps of any key are
+        folded from the live footers when a merge or read needs them.
+        It stays for callers that still pass it (the benchmark's OData
+        workload)."""
         self._recover(table)
         part = self._with_partition(df)
-        zm = self._stage(df if part is None else part, table, pk)
-        meta = ({"pk": pk, "parts": zm, "schema": part.schema.jsonValue()}
-                if pk and part is not None and zm else None)
-        self._commit(table, [""], meta)
-        return sum(st["rows"] for st in zm.values())
+        rows = self._stage(df if part is None else part, table)
+        self._commit(table, [""])
+        return rows
 
     def merge(self, spark: SparkSession, delta: DataFrame, table: str,
               pk: list[str], *, profile: DeltaProfile | None = None) -> int:
@@ -501,7 +462,7 @@ class StagingStore:
         """
         self._recover(table)
         if not self.exists(table):
-            return self.overwrite(delta, table, pk=pk)
+            return self.overwrite(delta, table)
         partitioned = any(
             e.startswith(f"{PARTITION_COL}=")
             for e in os.listdir(self.path(table))
@@ -510,11 +471,11 @@ class StagingStore:
             # whole-table form: the merged table is the staged
             # replacement of sub "" (schema evolution: align to the union)
             target, delta = align_schemas(self.read(spark, table), delta)
-            zm = self._stage(merge_upsert(target, delta, pk), table)
-            self._commit(table, [""], None)  # whole-table path drops stats
-            return sum(st["rows"] for st in zm.values())
+            rows = self._stage(merge_upsert(target, delta, pk), table)
+            self._commit(table, [""])
+            return rows
 
-        parts, schema = self._layout(table, pk)
+        parts, schema = self._fold_footers(self.path(table), pk)
         profile = profile or self._delta_profile(delta, pk)
         # the delta's own partitions are rewritten whatever they hold
         # (zone maps are conservative, so skipping their probe is exact)
@@ -537,28 +498,22 @@ class StagingStore:
         target, delta = align_schemas((
             spark.createDataFrame([], schema) if target is None else target
         ).drop(PARTITION_COL), delta)
-        merged = self._with_partition(merge_upsert(target, delta, pk))
-        # the touched partitions' zone maps come from the footers just
-        # staged (O(touched)); untouched entries carry over. An empty
-        # merged frame stages nothing: the touched entries drop out.
-        new_parts = {s: st for s, st in parts.items() if s not in subs}
-        new_parts.update(self._stage(merged, table, pk))
-        self._commit(table, subs, {"pk": pk, "parts": new_parts,
-                                   "schema": merged.schema.jsonValue()})
-        # O(touched) total: per-partition row counts summed from the
-        # sidecar instead of a store-wide count per merge
-        return sum(st["rows"] for st in new_parts.values())
+        staged = self._stage(
+            self._with_partition(merge_upsert(target, delta, pk)), table)
+        self._commit(table, subs)
+        # the table's row count without a store-wide count: the live
+        # footers' rows of the untouched partitions plus the staged rows
+        return sum(st["rows"] for s, st in parts.items()
+                   if s not in subs) + staged
 
-    def _stage(self, df: DataFrame, table: str, pk: list[str] | None = None,
-               cluster: bool = False) -> dict:
+    def _stage(self, df: DataFrame, table: str, cluster: bool = False) -> int:
         """Write ``df`` — the complete replacement of every sub it holds
         — under ``<table>.__tmp__``, hive-partitioned when it carries
-        PARTITION_COL. Returns the staged files' zone map
-        (:meth:`_fold_footers` over ``pk``), read from the footers
-        the write just produced: its ``rows`` sum is the row count, with
-        no second Spark job and no read-back. A zero-row partitioned
-        write leaves no tmp dir and returns {} (every sub it covers is
-        then emptied)."""
+        PARTITION_COL. Returns the row count, summed from the footers
+        the write just produced (:meth:`_fold_footers`): no second
+        Spark job and no read-back. A zero-row partitioned write leaves
+        no tmp dir and returns 0 (every sub it covers is then
+        emptied)."""
         tmp = self._tmp_path(table)
         # an earlier failed stage's debris must not ride along (a
         # dynamic-partition-overwrite session would keep its subs)
@@ -568,14 +523,12 @@ class StagingStore:
                               cluster=cluster)
         else:
             df.write.mode("overwrite").parquet(tmp)
-        return self._fold_footers(tmp, pk)[0]
+        zm = self._fold_footers(tmp, None)[0]
+        return sum(st["rows"] for st in zm.values())
 
-    def _commit(self, table: str, subs: list[str], meta: dict | None) -> None:
-        """Commit the staged ``subs``. ``meta`` (the post-write stats
-        sidecar, or None to drop it) rides in the intent, so the stats
-        land WITH the swap and can never mis-prune a later merge."""
-        write_intent(self._intent_path(table), self._tmp_path(table), subs,
-                     meta=meta)
+    def _commit(self, table: str, subs: list[str]) -> None:
+        """Commit the staged ``subs``: write the intent, roll forward."""
+        write_intent(self._intent_path(table), self._tmp_path(table), subs)
         self._recover(table)
 
     def _intent_path(self, table: str) -> str:
@@ -584,18 +537,16 @@ class StagingStore:
 
     def _recover(self, table: str) -> None:
         """The table's one roll-forward entry (called before every read
-        and write, and by :meth:`_commit`): finish a pending commit,
-        then set the sidecar from the intent. No intent marker → nothing
-        live changed: a leftover tmp is an unfinished (or in-flight)
-        stage that the next write replaces, never read and never
-        deleted here."""
+        and write, and by :meth:`_commit`): finish a pending commit. No
+        intent marker → nothing live changed: a leftover tmp is an
+        unfinished (or in-flight) stage that the next write replaces,
+        never read and never deleted here."""
         roll_forward(self._intent_path(table), self.path(table),
-                     self._tmp_path(table),
-                     lambda intent: self._write_meta(table, intent.get("meta")))
+                     self._tmp_path(table))
 
     def drop_all(self) -> int:
         """O17: drop every staging table; returns how many tables (the
-        root's table dirs — not sidecars, intents or staged copies)."""
+        root's table dirs — not intents or staged copies)."""
         if not os.path.isdir(self.root):
             return 0
         n = sum(1 for e in os.listdir(self.root)
@@ -620,9 +571,9 @@ class StagingStore:
         for the unpartitioned form, then committed through the same
         stage-and-swap as every write — crash-safe, and readers never
         see a half state or a staged copy (tmp is a sibling of the
-        table dir). The stats sidecar carries over unchanged.
-        Partitions within budget are never opened. Returns partitions
-        rewritten — 0 means the pass was a no-op (idempotent)."""
+        table dir). Partitions within budget are never opened. Returns
+        partitions rewritten — 0 means the pass was a no-op
+        (idempotent)."""
 
         def n_files(d: str) -> int:
             return sum(1 for f in os.listdir(d) if f.startswith("part-"))
@@ -635,10 +586,11 @@ class StagingStore:
                 if n_files(os.path.join(final, s)) > max_files_per_partition]
         if not over:
             return 0
-        staged = self._read_subs(spark, table, over, self._layout(table)[1])
+        staged = self._read_subs(spark, table, over,
+                                 self._fold_footers(final, None)[1])
         self._stage(staged.coalesce(max_files_per_partition) if over == [""]
                     else staged, table, cluster=True)
-        self._commit(table, over, self._read_meta(table))
+        self._commit(table, over)
         return len(over)
 
 
@@ -851,26 +803,12 @@ class PipelineRunner:
         """One output table's load: ``(rows, cdc tally, cdc error, error)``.
         Never raises, so a failing table cannot stop its siblings."""
         src = table.removeprefix("stg_")
-
-        def _key() -> list[str]:
-            if src == ent.entity_id.lower():
-                return primary_key(src)
-            return primary_key(ent.entity_id) + [  # sub-form child
-                k for k in primary_key(src) if k in df.columns
-            ]
-
         cdc = cdc_err = None
         try:
             if not (incremental and self.store.exists(table)):
-                # pk at full-load time seeds the partition-stats sidecar,
-                # so the FIRST incremental merge already prunes. An
-                # uncataloged entity (no PK registered) still full-loads —
-                # its first merge folds the live footers instead.
-                try:
-                    key = _key()
-                except KeyError:
-                    key = None
-                return self.store.overwrite(df, table, pk=key), None, None, None
+                # a full load needs no key: an uncataloged entity (no PK
+                # registered) full-loads too
+                return self.store.overwrite(df, table), None, None, None
             # the delta plan (scan → watermark filter → flatten → audit
             # columns) feeds the one key profile below (shared by
             # read_for_keys and merge), the audit write, merge's
@@ -879,7 +817,11 @@ class PipelineRunner:
             # once instead of re-running the full extract per action
             df = df.cache()
             try:
-                key = _key()
+                if src == ent.entity_id.lower():
+                    key = primary_key(src)
+                else:  # sub-form child
+                    key = primary_key(ent.entity_id) + [
+                        k for k in primary_key(src) if k in df.columns]
                 profile = self.store._delta_profile(df, key)
                 if cdc_audit:
                     try:

@@ -32,6 +32,7 @@ compaction commits with one directory rename.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -39,6 +40,7 @@ from pyspark.sql import DataFrame
 
 from ..operators.store_io import (
     _has_data_files,
+    load_json,
     roll_forward,
     write_atomic,
     write_intent,
@@ -261,13 +263,6 @@ def _commit_hist_buckets(store_path: str, staged, touched: list,
 
 
 _SCD2_META = "SCD2_META.json"
-# Minimum distinct observed _kb ids before the inverse (undercount)
-# pre-sidecar check HARD-fails: below it, "built with m" and "built
-# with n but hashed low" are indistinguishable from layout (round-16
-# ADVICE fix — sparse-but-correct stores warn instead of raising).
-# Capped at m itself: a fully-occupied smaller modulus is the
-# strongest layout evidence a small store can ever produce.
-_SCD2_INVERSE_MIN_DISTINCT = 8
 
 
 def _check_scd2_meta(store_path: str, n_log_buckets: int) -> None:
@@ -276,51 +271,15 @@ def _check_scd2_meta(store_path: str, n_log_buckets: int) -> None:
     fold hashes with the SAME n_log_buckets the store was built with —
     a mismatched caller would silently mis-prune (touched entities
     surviving as stale duplicates in old buckets while the rebuilt copy
-    lands in a new one). Persisted in a sidecar at bootstrap and
-    validated on every later fold, the same guard the ER store's META
-    gives its params. A store predating the sidecar adopts the first
-    post-upgrade caller's value — CROSS-CHECKED against the observed
-    bucket layout first (round-14 ADVICE fix): a wrong first caller
-    would otherwise permanently pin the very mis-pruning value the
-    guard exists to prevent. Any existing ``_kb=`` index under hist/ or
-    log/ must be < the adopted count (bucket ids are hash % n, so an
-    index >= n is impossible under the true count).
-
-    The cross-check is two-directional since round 15 (ADVICE): the
-    inverse error — a store built with FEWER buckets than the first
-    caller claims (built with 2, caller passes 4: every observed _kb
-    fits the larger modulus too) — is rejected when the observed ids
-    all fit a smaller power-of-two modulus that DIVIDES the claimed
-    count (``h % 2`` and ``h % 4`` disagree on half of all hashes, so
-    adopting 4 over a %2 layout mis-prunes exactly like the forward
-    case). Residual gap, documented: the heuristic cannot distinguish
-    "built with m" from "built with n but every entity hashed below m
-    by chance" — vanishingly unlikely past a handful of entities
-    (P = (m/n)^entities) but possible for a near-empty pre-sidecar
-    store. Since round 16 (ADVICE fix) the raise is gated on
-    min(_SCD2_INVERSE_MIN_DISTINCT, m) distinct observed ids: a
-    sparser layout WARNS, adopts the caller's value for the current
-    fold only, and refuses to write the sidecar — the ambiguity
-    self-resolves as the store grows (an id >= m clears it; full
-    occupancy of the smaller modulus converts it to the raise), and a
-    hand-written sidecar asserts the count at any time — writing the
-    sidecar at BUILD time remains the loud recommendation. Since round
-    17 (ADVICE) every ambiguous adoption is also logged via ``logging``
-    and appended to a non-authoritative ``.ambiguous.jsonl`` marker
-    next to the sidecar; a later ambiguous fold claiming a DIFFERENT
-    count than a recorded adoption raises (conflicting folds mean at
-    least one mis-bucketed), and the first unambiguous sidecar write
-    clears the marker. Non-power-of-two or
-    non-dividing undercounts are NOT caught — the ambiguity there is
-    unresolvable from layout alone and both moduli disagree on ids the
-    store has simply never touched."""
-    import json as _json
-    import re as _re
-
+    lands in a new one). The first fold writes the count to
+    ``SCD2_META.json`` before any slice lands, and every later fold
+    validates it, the same guard the ER store's META gives its params.
+    A store with ``_kb=`` buckets under hist/ or log/ but no meta
+    predates that file; its count cannot be read off its layout, so it
+    must be rebuilt."""
     path = os.path.join(store_path, _SCD2_META)
-    if os.path.exists(path):
-        with open(path) as fh:
-            meta = _json.load(fh)
+    meta = load_json(path)
+    if meta is not None:
         if meta.get("n_log_buckets") != n_log_buckets:
             raise ValueError(
                 f"SCD2 store at {store_path} was built with "
@@ -329,134 +288,13 @@ def _check_scd2_meta(store_path: str, n_log_buckets: int) -> None:
                 "and strand stale history. Pass the store's value."
             )
         return
-    kb = _re.compile(r"^_kb=(\d+)$")
-    all_seen: list[int] = []
-    for sub in ("hist", "log"):
-        root = os.path.join(store_path, sub)
-        if not os.path.isdir(root):
-            continue
-        seen = [int(m.group(1)) for d in os.listdir(root)
-                for m in [kb.match(d)] if m]
-        bad = [b for b in seen if b >= n_log_buckets]
-        if bad:
-            raise ValueError(
-                f"SCD2 store at {store_path} has no meta sidecar but "
-                f"its {sub}/ layout contains _kb={max(bad)} — "
-                f"inconsistent with adopting n_log_buckets="
-                f"{n_log_buckets}. Pass the count the store was "
-                "actually built with."
-            )
-        all_seen.extend(seen)
-    if all_seen:
-        # inverse direction (round 15): the smallest power-of-two
-        # modulus every observed id fits under
-        m = 1
-        while m <= max(all_seen):
-            m *= 2
-        distinct = len(set(all_seen))
-        if m < n_log_buckets and n_log_buckets % m == 0 \
-                and distinct < min(_SCD2_INVERSE_MIN_DISTINCT, m):
-            # round-16 ADVICE fix: a legitimately-built sparse store
-            # whose few entities all hash below a dividing modulus
-            # would otherwise hard-fail its first adoption (the
-            # documented (m/n)^entities residual). Too few distinct
-            # ids to tell "built with m" from "built with n, hashed
-            # low" — adopt the caller's value for THIS fold but refuse
-            # to pin it in the sidecar: the ambiguity self-resolves as
-            # the store grows (an id >= m ends it; full occupancy of
-            # the smaller modulus triggers the raise below).
-            #
-            # round-17 ADVICE hardening: each ambiguous adoption is
-            # RECORDED in a non-authoritative marker (jsonl sidecar —
-            # never read as the bucket count), and adoptions under
-            # CONFLICTING n values hard-fail: two different callers
-            # folding different counts into the same sparse store
-            # means at least one fold mis-bucketed, which the warning
-            # alone let batch jobs sail past. The marker is removed by
-            # the first unambiguous sidecar write below (the pinned
-            # count supersedes the history). Also logs through the
-            # logging module — batch jobs routinely swallow
-            # warnings.warn but ship log handlers.
-            import logging
-            import warnings
-
-            marker = path + ".ambiguous.jsonl"
-            prior_adoptions: set[int] = set()
-            if os.path.exists(marker):
-                # round-18 ADVICE fix: the marker is appended without
-                # atomicity, so a crash mid-append can leave a torn
-                # last line. The marker is documented non-authoritative
-                # — a malformed line must not fail every subsequent
-                # fold with an opaque JSONDecodeError; skip it with a
-                # logged warning instead (losing one adoption record
-                # only weakens the conflict check, never corrupts the
-                # store).
-                with open(marker) as fh:
-                    for ln in fh:
-                        if not ln.strip():
-                            continue
-                        try:
-                            prior_adoptions.add(_json.loads(ln)["adopted"])
-                        except (ValueError, KeyError, TypeError):
-                            logging.getLogger(__name__).warning(
-                                "skipping malformed line in %s (torn "
-                                "append from a crashed fold?): %r",
-                                marker, ln[:200],
-                            )
-            conflicting = sorted(prior_adoptions - {n_log_buckets})
-            if conflicting:
-                raise ValueError(
-                    f"SCD2 store at {store_path} has no meta sidecar "
-                    f"and was previously folded under ambiguous "
-                    f"n_log_buckets={conflicting} (recorded in "
-                    f"{marker}); this fold claims {n_log_buckets}. "
-                    f"At least one of those folds mis-bucketed "
-                    f"history. Determine the true count, write "
-                    f'{{"n_log_buckets": <true count>}} to {path}, '
-                    f"and rebuild the store's bucket layout."
-                )
-            msg = (
-                f"SCD2 store at {store_path} has no meta sidecar and "
-                f"only {distinct} distinct _kb index(es), all below "
-                f"the dividing power-of-two modulus {m} — adopting "
-                f"n_log_buckets={n_log_buckets} for this fold WITHOUT "
-                f"writing the sidecar (layout too sparse to rule out "
-                f"a store built with {m} buckets). Write "
-                f'{{"n_log_buckets": <true count>}} to {path} to '
-                f"assert the count and silence this."
-            )
-            warnings.warn(msg, stacklevel=2)
-            logging.getLogger(__name__).warning(msg)
-            with open(marker, "a") as fh:
-                fh.write(_json.dumps({
-                    "adopted": n_log_buckets,
-                    "distinct_kb": distinct,
-                    "max_kb": max(all_seen),
-                    "dividing_modulus": m,
-                }) + "\n")
-            return
-        if m < n_log_buckets and n_log_buckets % m == 0:
-            raise ValueError(
-                f"SCD2 store at {store_path} has no meta sidecar and "
-                f"every observed _kb index (max {max(all_seen)}) fits "
-                f"the smaller power-of-two modulus {m}, which divides "
-                f"the claimed n_log_buckets={n_log_buckets} — this "
-                f"layout is consistent with a store BUILT with {m} "
-                f"buckets, and adopting {n_log_buckets} over it would "
-                f"mis-prune half of all entity hashes. Pass {m} if "
-                f"that is the store's true count; if the store really "
-                f"was built with {n_log_buckets} and its entities "
-                f"merely hash low, assert it by writing "
-                f'{{"n_log_buckets": {n_log_buckets}}} to '
-                f"{path} by hand."
-            )
+    if glob.glob(os.path.join(store_path, "hist", "_kb=*")) or glob.glob(
+            os.path.join(store_path, "log", "*", "_kb=*")):
+        raise ValueError(
+            f"SCD2 store at {store_path} has _kb= buckets but no "
+            f"{_SCD2_META}, so its bucket count is unknown; rebuild the store"
+        )
     write_json(path, {"n_log_buckets": n_log_buckets})
-    # a pinned sidecar supersedes any ambiguous-adoption history
-    # (round-17 marker): reaching here means the layout cross-checks
-    # cleared the count unambiguously
-    marker = path + ".ambiguous.jsonl"
-    if os.path.exists(marker):
-        os.remove(marker)
 
 
 def _read_touched_buckets(spark, root: str, touched, key: str = "_kb"):

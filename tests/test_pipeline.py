@@ -198,15 +198,15 @@ def test_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
 def test_merge_partition_stats_prune_and_crash_safety(spark, tmp_path):
     """Round 13 (VERDICT r12 ask #2): the merge's old-version probe
-    prunes with exact per-partition pk zone maps from the sidecar —
-    pure-insert deltas above every standing range scan ZERO old
-    partitions — and the post-merge stats ride in the intent so a
-    crash mid-swap can never leave zone maps that mis-prune."""
-    import json
+    prunes with exact per-partition pk zone maps folded from the live
+    footers — pure-insert deltas above every standing range scan ZERO
+    old partitions. The footers change only with the files, so a crash
+    mid-swap (``test_commit_crash_rolls_forward``) cannot leave zone
+    maps that mis-prune."""
+    import os
 
     from pyspark.sql import functions as F
 
-    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import write_json
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
 
     def batch(rows, day):
@@ -218,13 +218,14 @@ def test_merge_partition_stats_prune_and_crash_safety(spark, tmp_path):
         )
 
     store = StagingStore(root=str(tmp_path / "stg"))
-    # pk seeds the sidecar at overwrite: first merge already prunes
-    n = store.overwrite(batch([(1, "a"), (2, "b")], 1), "t", pk=["pk"])
+
+    def zone_map(table):
+        return StagingStore._fold_footers(store.path(table), ["pk"])[0]
+
+    n = store.overwrite(batch([(1, "a"), (2, "b")], 1), "t")
     assert n == 2
-    meta = json.load(open(store._meta_path("t")))
-    assert meta["pk"] == ["pk"]
     sub1 = "_load_date=2026-01-01"
-    assert meta["parts"][sub1] == {
+    assert zone_map("t")[sub1] == {
         "rows": 2, "min": 1, "max": 2, "null": False}
 
     # driver-side pruning unit: inserts above every range prune all;
@@ -248,32 +249,24 @@ def test_merge_partition_stats_prune_and_crash_safety(spark, tmp_path):
     assert prune(parts, prof(None, None, False)) == ["a", "b", "c"]  # none
 
     # pure-insert merge: day-1 zone map [1,2] excludes pk=3 → day-1
-    # never touched; counts come from the sidecar, not a full count
+    # never touched; counts come from the footers, not a full count
+    day1 = sorted(os.listdir(os.path.join(store.path("t"), sub1)))
     assert store.merge(spark, batch([(3, "c")], 2), "t", ["pk"]) == 3
-    meta = json.load(open(store._meta_path("t")))
-    assert meta["parts"][sub1]["rows"] == 2  # untouched entry carried
-    assert meta["parts"]["_load_date=2026-01-02"] == {
+    assert sorted(os.listdir(os.path.join(store.path("t"), sub1))) == day1
+    zm = zone_map("t")
+    assert zm[sub1]["rows"] == 2
+    assert zm["_load_date=2026-01-02"] == {
         "rows": 1, "min": 3, "max": 3, "null": False}
 
     # update inside day-1's range: found via the pruned probe, old row
     # removed, day-1's zone map recomputed from the rewritten bytes
     assert store.merge(spark, batch([(2, "b2")], 3), "t", ["pk"]) == 3
-    meta = json.load(open(store._meta_path("t")))
-    assert meta["parts"][sub1] == {
+    assert zone_map("t")[sub1] == {
         "rows": 1, "min": 1, "max": 1, "null": False}
     got = {(r.pk, r.v) for r in store.read(spark, "t").collect()}
     assert got == {(1, "a"), (2, "b2"), (3, "c")}
 
-    # crash window: intent written (with meta), swap not applied, stats
-    # sidecar deliberately corrupted — recovery lands swap AND stats
-    stale = {"pk": ["pk"], "parts": {}}
-    store._write_meta("t", stale)
-    intent = {"kind": "parts", "data": [], "empty": [], "meta": meta}
-    write_json(store._intent_path("t"), intent)
-    store._recover("t")
-    assert json.load(open(store._meta_path("t"))) == meta
-
-    # stats never lie after recovery: next merge still correct
+    # a later update in day 1 still finds its old version
     assert store.merge(spark, batch([(1, "a2")], 4), "t", ["pk"]) == 3
     got = {(r.pk, r.v) for r in store.read(spark, "t").collect()}
     assert got == {(1, "a2"), (2, "b2"), (3, "c")}
@@ -295,12 +288,38 @@ def test_merge_partition_stats_prune_and_crash_safety(spark, tmp_path):
         )
 
     nan = float("nan")
-    store.overwrite(fbatch([(1.0, "a"), (nan, "n1")], 1), "tf", pk=["pk"])
-    meta_f = json.load(open(store._meta_path("tf")))
-    assert meta_f["parts"]["_load_date=2026-01-01"]["max"] is None  # NaN
+    store.overwrite(fbatch([(1.0, "a"), (nan, "n1")], 1), "tf")
+    assert zone_map("tf")["_load_date=2026-01-01"]["max"] is None  # NaN
     store.merge(spark, fbatch([(nan, "n2")], 2), "tf", ["pk"])
     vals = sorted(r.v for r in store.read(spark, "tf").collect())
     assert vals == ["a", "n2"], "NaN old version must be found and replaced"
+
+
+def test_stale_meta_file_is_ignored(spark, tmp_path):
+    """A ``<table>.__meta__.json`` left by a version that kept a stats
+    copy there is not read: a stale one whose zone maps hold no
+    partition must not prune day 1, so an update to a day-1 key
+    replaces its old row instead of adding a duplicate."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
+
+    def batch(rows, day):
+        return spark.createDataFrame(rows, "pk bigint, v string").withColumn(
+            "extractiontimestamputc",
+            F.lit(f"2026-01-0{day} 12:00:00").cast("timestamp"))
+
+    store = StagingStore(root=str(tmp_path / "stg"))
+    day1 = batch([(1, "a"), (2, "b")], 1)
+    store.overwrite(day1, "t")
+    with open(store.path("t") + ".__meta__.json", "w") as fh:
+        json.dump({"pk": ["pk"], "parts": {},
+                   "schema": store._with_partition(day1).schema.jsonValue()}, fh)
+    assert store.merge(spark, batch([(2, "b2")], 2), "t", ["pk"]) == 2
+    assert sorted((r.pk, r.v) for r in store.read(spark, "t").collect()) == [
+        (1, "a"), (2, "b2")]
 
 
 def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
@@ -308,11 +327,9 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     composite key. The fixture is the shape first-key-only pruning
     cannot touch — every partition holds the same tenant range
     (uninformative pk[0]) while seq (pk[1]) is partition-aligned — so
-    the measured win is direct: a composite sidecar reads 1 of 3
+    the measured win is direct: composite zone maps read 1 of 3
     partitions where first-key-only pruning reads all 3, and the
     composite checks stay conservative on every column."""
-    import json
-
     from pyspark.sql import functions as F
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
@@ -333,21 +350,21 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
             for t in (1, 2, 3, 4) for i in (0, 50, 99)]
         for d in (1, 2, 3)
     }
-    store.overwrite(batch(day_rows[1], 1), "t", pk=pk)
+    store.overwrite(batch(day_rows[1], 1), "t")
     store.merge(spark, batch(day_rows[2], 2), "t", pk)
     store.merge(spark, batch(day_rows[3], 3), "t", pk)
 
-    meta = json.load(open(store._meta_path("t")))
-    assert meta["pk"] == pk
+    parts = StagingStore._fold_footers(store.path("t"), pk)[0]
     sub2 = "_load_date=2026-01-02"
-    assert meta["parts"][sub2]["min"] == 1  # pk[0] legacy fields
-    assert meta["parts"][sub2]["cols"]["seq"] == {
+    assert parts[sub2]["min"] == 1  # pk[0]'s stats sit in the entry
+    assert parts[sub2]["cols"]["seq"] == {
         "min": 100, "max": 199, "null": False}
 
     # a key whose tenant fits EVERY partition but whose seq fits only
     # day 2: composite pruning must read exactly one partition
     keys = spark.createDataFrame([(2, 150)], "tenant bigint, seq bigint")
-    got = store.read_for_keys(spark, "t", keys, pk)
+    got = store.read_for_keys(spark, "t", keys, pk,
+                              profile=store._delta_profile(keys, pk))
     read_parts = {f.split("_load_date=")[1].split("/")[0]
                   for f in got.inputFiles()}
     assert read_parts == {"2026-01-02"}, read_parts
@@ -366,7 +383,8 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     # delta key cannot be range-pruned on seq anywhere seq has no nulls,
     # but tenant still prunes; no partition with a matching range is lost
     nkeys = spark.createDataFrame([(99, None)], "tenant bigint, seq bigint")
-    got_n = store.read_for_keys(spark, "t", nkeys, pk)
+    got_n = store.read_for_keys(spark, "t", nkeys, pk,
+                                profile=store._delta_profile(nkeys, pk))
     assert got_n.count() == 0  # tenant 99 outside every range → all pruned
 
 
@@ -666,7 +684,7 @@ def test_reset_data_platform(spark, sf_dir, tmp_path):
     runner.initial_data_load()
     assert store.exists("stg_nation")
     out = runner.reset_data_platform()
-    # the table dir only: not its stats sidecar
+    # the table dir only: not its intent or staged copy
     assert out["tablesDropped"] == 1
     assert store.exists("stg_nation")
     assert all(r.error is None for r in out["load"])
@@ -708,15 +726,11 @@ def test_merge_schema_evolution(spark, tmp_path):
     """A source adding a field mid-stream: the merge widens the stored
     table, old rows read back with nulls in the new column, and a delta
     MISSING a stored column leaves old values intact. Store reads name
-    the table's schema (the sidecar's, or the union of the footers'
-    when there is no sidecar) and must see exactly what a
-    ``mergeSchema`` read sees: rows, columns and types."""
-    import os
-
+    the table's schema (the union of the live footers') and must see
+    exactly what a ``mergeSchema`` read sees: rows, columns and
+    types."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    from priority_data_pipeline_azure_sql_db_spark.operators.store_io import write_json
     from priority_data_pipeline_azure_sql_db_spark.pipeline import (
         PARTITION_COL,
         StagingStore,
@@ -761,8 +775,8 @@ def test_merge_schema_evolution(spark, tmp_path):
 
     # a delta missing "extra" whose own partition is new and whose key no
     # partition can hold (nothing on disk to merge against), then one
-    # that rewrites the day-2 partition: the sidecar keeps the union
-    # schema, so day 2's stored "extra" survives both
+    # that rewrites the day-2 partition: the merge target carries the
+    # union schema, so day 2's stored "extra" survives both
     v4 = spark.createDataFrame(
         [(4, "d", "2024-01-04 00:00:00")],
         "id bigint, val string, extractiontimestamputc string",
@@ -778,43 +792,30 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert got == {1: ("a", None), 2: ("b2", "fresh"), 3: ("c3", None),
                    4: ("d", None), 5: ("d", None)}
 
-    # the sidecar records the union schema (the day-1 partition predates
-    # "extra"); without the sidecar the footers' schemas give the same
-    meta = store._read_meta("stg_t")
-    assert meta["schema"]["fields"][-1]["name"] == PARTITION_COL
-    assert {f["name"] for f in meta["schema"]["fields"]} == {
+    # the footer fold unions the schemas (the day-1 partition predates
+    # "extra") and adds the partition column last
+    schema = StagingStore._fold_footers(store.path("stg_t"), ["id"])[1]
+    assert schema.names[-1] == PARTITION_COL
+    assert set(schema.names) == {
         "id", "val", "extra", "extractiontimestamputc", PARTITION_COL}
-    same_as_merge_schema("stg_t")
-    # a sidecar that records no schema (written before sidecars carried
-    # one) counts as none: every read folds the footers instead
-    write_json(store._meta_path("stg_t"),
-               {k: v for k, v in meta.items() if k != "schema"})
-    assert store._layout("stg_t", ["id"]) == store._fold_footers(
-        store.path("stg_t"), ["id"])
-    same_as_merge_schema("stg_t")
     # id 4 falls in day 2's range [2, 5] and in day 4's
-    assert {r.id for r in store.read_for_keys(spark, "stg_t", v4, ["id"])
-            .collect()} == {2, 4, 5}
-    os.remove(store._meta_path("stg_t"))
-    same_as_merge_schema("stg_t")
-    assert store._layout("stg_t")[1] == StructType.fromJson(meta["schema"])
+    assert {r.id for r in store.read_for_keys(
+        spark, "stg_t", v4, ["id"], profile=store._delta_profile(v4, ["id"]))
+        .collect()} == {2, 4, 5}
 
-    # an unpartitioned table (no sidecar ever) evolved by the
-    # whole-table merge
+    # an unpartitioned table evolved by the whole-table merge
     plain = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, val string")
     store.overwrite(plain, "plain")
     same_as_merge_schema("plain")
     store.merge(spark, spark.createDataFrame(
         [(2, "b2", 7)], "id bigint, val string, n int"), "plain", ["id"])
-    assert store._read_meta("plain") is None
     same_as_merge_schema("plain")
     assert {r.id: r.n for r in store.read(spark, "plain").collect()} == {
         1: None, 2: 7}
 
-    # a merge key that takes in the evolved column: the sidecar is keyed
-    # to another pk, so the zone maps are folded from the live footers,
-    # where the day-1 file (written before the column existed) reads it
-    # as null
+    # a merge key that takes in the evolved column: the zone maps are
+    # folded from the live footers for that key, where the day-1 file
+    # (written before the column existed) reads it as null
     def rows(data, schema):
         return spark.createDataFrame(data, schema).withColumn(
             "extractiontimestamputc",
@@ -823,7 +824,7 @@ def test_merge_schema_evolution(spark, tmp_path):
     store.overwrite(rows(
         [(1, "a", "2024-01-01 00:00:00"), (2, "b", "2024-01-02 00:00:00")],
         "id bigint, val string, extractiontimestamputc string"),
-        "stg_k", pk=["id"])
+        "stg_k")
     new = "id bigint, val string, extra string, extractiontimestamputc string"
     store.merge(spark, rows([(2, "b2", "fresh", "2024-01-03 00:00:00")], new),
                 "stg_k", ["id"])
@@ -840,11 +841,12 @@ def test_merge_schema_evolution(spark, tmp_path):
     store.overwrite(rows(
         [(1, "a", "2024-01-01 00:00:00"), (2, "b", "2024-01-01 00:00:00")],
         "id bigint, val string, extractiontimestamputc string"),
-        "stg_e", pk=["id"])
+        "stg_e")
     delta = rows([(2, "b2", "fresh", "2024-01-02 00:00:00")], new)
     key = ["id", "extra"]
-    audit = cdc_audit_delta(
-        store.read_for_keys(spark, "stg_e", delta, key), delta, key)
+    audit = cdc_audit_delta(store.read_for_keys(
+        spark, "stg_e", delta, key, profile=store._delta_profile(delta, key)),
+        delta, key)
     assert {(r.id, r.change_type) for r in audit.collect()} == {
         (2, "inserted")}
     assert store.merge(spark, delta, "stg_e", key) == 3
@@ -972,18 +974,18 @@ def _stamped(spark, rows, stamped=True):
 def test_failed_overwrite_keeps_old_table(spark, tmp_path, stamped):
     """A source that fails in the middle of an overwrite (say, an HTTP
     error during the extract; here a raising UDF) leaves the old rows
-    readable and the old stats sidecar in place: the replacement is
-    staged, never delete-then-write. A later overwrite still lands."""
+    readable and its zone maps (the live footers' fold) unchanged: the
+    replacement is staged, never delete-then-write. A later overwrite
+    still lands."""
     from pyspark.sql import functions as F
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
 
     store = StagingStore(str(tmp_path / "stg"))
-    pk = ["pk"] if stamped else None
     old = [(i, f"old{i}", 1 + i % 2) for i in range(20)]
-    store.overwrite(_stamped(spark, old, stamped), "t", pk=pk)
-    meta = store._read_meta("t")
-    assert (meta is not None) == stamped
+    store.overwrite(_stamped(spark, old, stamped), "t")
+    zm = StagingStore._fold_footers(store.path("t"), ["pk"])
+    assert len(zm[0]) == (2 if stamped else 1)
 
     @F.udf("string")
     def source_fails_at_row_15(pk):
@@ -995,13 +997,12 @@ def test_failed_overwrite_keeps_old_table(spark, tmp_path, stamped):
         F.col("id").alias("pk"), source_fails_at_row_15("id").alias("v"),
         (1 + F.col("id") % 2).cast("int").alias("day")), stamped)
     with pytest.raises(Exception, match="source failed mid-write"):
-        store.overwrite(new, "t", pk=pk)
+        store.overwrite(new, "t")
     got = sorted((r.pk, r.v) for r in store.read(spark, "t").collect())
     assert got == [(pk_, v) for pk_, v, _ in old]
-    assert store._read_meta("t") == meta
+    assert StagingStore._fold_footers(store.path("t"), ["pk"]) == zm
 
-    assert store.overwrite(_stamped(spark, [(1, "x", 2)], stamped), "t",
-                           pk=pk) == 1
+    assert store.overwrite(_stamped(spark, [(1, "x", 2)], stamped), "t") == 1
     assert [(r.pk, r.v) for r in store.read(spark, "t").collect()] == [(1, "x")]
 
 
@@ -1011,10 +1012,10 @@ def test_commit_crash_rolls_forward(spark, tmp_path, monkeypatch, writer):
     """Every StagingStore writer commits through one stage-and-swap. A
     crash inside that commit after the intent and the first rename out
     of ``<table>.__tmp__`` leaves a half-swapped table; the next read
-    rolls it forward to the new content, each row exactly once, with
-    the new stats sidecar. The staged copy is a sibling of the table
-    dir, so partition discovery never sees it (no bogus partition
-    value, no duplicated rows)."""
+    rolls it forward to the new content, each row exactly once, and
+    the live footers' row counts are the new table's. The staged copy
+    is a sibling of the table dir, so partition discovery never sees it
+    (no bogus partition value, no duplicated rows)."""
     import os
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import (
@@ -1025,13 +1026,12 @@ def test_commit_crash_rolls_forward(spark, tmp_path, monkeypatch, writer):
     store = StagingStore(str(tmp_path / "stg"))
     stamped = writer != "merge_whole_table"
     old = [(i, f"old{i}", 1 + i % 2) for i in range(12)]
-    store.overwrite(_stamped(spark, old, stamped).repartition(3), "t",
-                    pk=["pk"])
+    store.overwrite(_stamped(spark, old, stamped).repartition(3), "t")
     if writer == "overwrite":
         new = [(i, f"new{i}", 1 + i % 2) for i in range(5, 15)]
         want = {(pk, v) for pk, v, _ in new}
         op = lambda: store.overwrite(  # noqa: E731
-            _stamped(spark, new, stamped), "t", pk=["pk"])
+            _stamped(spark, new, stamped), "t")
     elif writer == "compact":
         want = {(pk, v) for pk, v, _ in old}
         op = lambda: store.compact(spark, "t", 1)  # noqa: E731
@@ -1063,16 +1063,15 @@ def test_commit_crash_rolls_forward(spark, tmp_path, monkeypatch, writer):
     assert len(rows) == len(set(rows)) and set(rows) == want
     assert not os.path.exists(store._intent_path("t"))
     assert not os.path.exists(store._tmp_path("t"))
-    meta = store._read_meta("t")
-    if stamped:
-        assert sum(st["rows"] for st in meta["parts"].values()) == len(want)
-        if writer == "compact":
-            root = store.path("t")
-            assert all(
-                sum(f.startswith("part-") for f in os.listdir(os.path.join(root, p))) == 1
-                for p in os.listdir(root) if p.startswith(f"{PARTITION_COL}="))
-    else:
-        assert meta is None  # the whole-table merge drops the stats
+    parts = StagingStore._fold_footers(store.path("t"), ["pk"])[0]
+    assert sum(st["rows"] for st in parts.values()) == len(want)
+    # a partitioned table holds load-date subs, the whole-table form ""
+    assert ("" in parts) == (not stamped)
+    if writer == "compact":
+        root = store.path("t")
+        assert all(
+            sum(f.startswith("part-") for f in os.listdir(os.path.join(root, p))) == 1
+            for p in os.listdir(root) if p.startswith(f"{PARTITION_COL}="))
 
 
 def _cdc_v1_source(spark, sf_dir, out_dir):
@@ -1556,15 +1555,15 @@ def test_read_for_keys_without_candidates_skips_table_read(spark, tmp_path,
     from priority_data_pipeline_azure_sql_db_spark.pipeline import cdc_audit_delta
 
     store = StagingStore(str(tmp_path / "stg"))
-    store.overwrite(_stamped(spark, [(d, "a", d) for d in range(1, 6)]), "t",
-                    pk=["pk"])
+    store.overwrite(_stamped(spark, [(d, "a", d) for d in range(1, 6)]), "t")
     keys = _stamped(spark, [(1000, "new", 6), (1001, "new", 6)])
 
     def no_read(*args, **kwargs):
         raise AssertionError("read_for_keys opened the whole table")
 
     monkeypatch.setattr(StagingStore, "read", no_read)
-    got = store.read_for_keys(spark, "t", keys, ["pk"])
+    got = store.read_for_keys(spark, "t", keys, ["pk"],
+                              profile=store._delta_profile(keys, ["pk"]))
     assert got.schema == keys.schema and got.count() == 0
     audit = cdc_audit_delta(got, keys, ["pk"]).collect()
     assert sorted((r.pk, r.change_type) for r in audit) == [
@@ -1576,8 +1575,8 @@ def test_refresh_profiles_each_delta_once_and_reads_start_no_job(
     """One incremental refresh with the CDC audit profiles each cached
     delta once (the audit's read and the merge share the profile), and
     the store's reads start no Spark job: ``read_for_keys``,
-    ``_read_subs`` and ``read`` take the schema from the sidecar or the
-    footers instead of inferring it. Each call runs under a job group
+    ``_read_subs`` and ``read`` take the schema from the live footers
+    instead of inferring it. Each call runs under a job group
     of its own; no job may land in one."""
     import uuid
 
@@ -1619,7 +1618,7 @@ def test_refresh_profiles_each_delta_once_and_reads_start_no_job(
     assert all(r.error is None and r.cdc_error is None for r in results)
     assert sorted(map(tuple, profiled)) == [
         ("n_nationkey",), ("o_orderkey",), ("o_orderkey", "l_linenumber")]
-    # sidecar-backed tables and the sidecar-less __cdc feeds
+    # the partitioned tables and the unpartitioned __cdc feeds
     for t in _store_tables(store):
         store.read(spark, t)
     assert set(groups.values()) == {"read_for_keys", "_read_subs", "read"}

@@ -813,7 +813,7 @@ def test_staging_merge_zone_map_property(spark, seq, tmp_path_factory):
     (a partition holding an old key version skipped by its min/max)
     surfaces as a stale duplicate or a lost row here. Also asserts the
     returned count matches the reference's row count at every step
-    (the sidecar row accounting never drifts)."""
+    (the footer row accounting never drifts)."""
     from pyspark.sql import functions as F2
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
@@ -833,7 +833,7 @@ def test_staging_merge_zone_map_property(spark, seq, tmp_path_factory):
             F2.col("extractiontimestamputc").cast("timestamp"),
         )
         if first:
-            n = store.overwrite(df, "t", pk=["pk"])
+            n = store.overwrite(df, "t")
             ref = {}
             first = False
         else:
@@ -885,7 +885,7 @@ def test_staging_merge_composite_zone_map_property(
     FULL tuple — a wrong prune on EITHER column (a partition holding an
     old key version skipped by its per-column ranges) surfaces as a
     stale duplicate or lost row, and the returned count must match the
-    reference at every step (sidecar row accounting under composite
+    reference at every step (footer row accounting under composite
     stats)."""
     from pyspark.sql import functions as F2
 
@@ -907,7 +907,7 @@ def test_staging_merge_composite_zone_map_property(
             F2.col("extractiontimestamputc").cast("timestamp"),
         )
         if first:
-            n = store.overwrite(df, "t", pk=pk)
+            n = store.overwrite(df, "t")
             ref = {}
             first = False
         else:
@@ -949,13 +949,13 @@ footer_rows = st.lists(
        width=st.integers(min_value=1, max_value=3))
 def test_stage_footer_zone_map_property(
         spark, rows, order, width, tmp_path_factory):
-    """``_stage`` folds the zone map of what it wrote from the parquet
-    footers. On random partitioned frames spread over several files per
-    partition (pk values that are null or NaN, non-ASCII strings,
-    composite keys of mixed types, null load dates landing in the
-    ``__HIVE_DEFAULT_PARTITION__`` sub) it must equal Spark's own
-    per-partition min/max/has-null mapped through ``_stat_val``, with
-    exact row counts."""
+    """The zone map folded from a table's live parquet footers
+    (``_fold_footers``). On random partitioned frames spread over
+    several files per partition (pk values that are null or NaN,
+    non-ASCII strings, composite keys of mixed types, null load dates
+    landing in the ``__HIVE_DEFAULT_PARTITION__`` sub) it must equal
+    Spark's own per-partition min/max/has-null mapped through
+    ``_stat_val``, with exact row counts."""
     from pyspark.sql import functions as F2
 
     from priority_data_pipeline_azure_sql_db_spark.pipeline import (
@@ -971,8 +971,10 @@ def test_stage_footer_zone_map_property(
         "ki bigint, kf double, ks string, extractiontimestamputc string",
     ).withColumn("extractiontimestamputc",
                  F2.col("extractiontimestamputc").cast("timestamp"))
-    part = store._with_partition(df.repartition(3))
-    got = store._stage(part, "t", pk)
+    df = df.repartition(3)
+    store.overwrite(df, "t")
+    got = StagingStore._fold_footers(store.path("t"), pk)[0]
+    part = store._with_partition(df)
 
     aggs = [F2.count(F2.lit(1)).alias("_n")]
     for c in pk:

@@ -2098,24 +2098,6 @@ def test_scd2_store_guards_bucket_count_and_lost_log(spark, tmp_path):
         spark, store, mk([(1, "b", "2026-01-02 00:00:00", 2)]), 2, *args,
         n_log_buckets=4,
     ) is True
-    # (1b) pre-sidecar adoption cross-check (round-14 ADVICE fix): a
-    # store without SCD2_META must NOT adopt a first caller whose count
-    # contradicts the observed _kb= layout — hist/ holds _kb ids up to
-    # 3 here, so adopting n_log_buckets=2 would pin mis-pruning
-    os.remove(os.path.join(store, "SCD2_META.json"))
-    # ensure the layout evidence exists under hist/ (a _kb index >= 2)
-    os.makedirs(os.path.join(store, "hist", "_kb=3"), exist_ok=True)
-    with pytest.raises(ValueError, match="inconsistent with adopting"):
-        fold_scd2_batch(
-            spark, store, mk([(1, "z", "2026-01-04 00:00:00", 9)]), 9,
-            *args, n_log_buckets=2,
-        )
-    # a layout-consistent adoption still bootstraps the sidecar
-    assert fold_scd2_batch(
-        spark, store, mk([(1, "c", "2026-01-03 00:00:00", 3)]), 3, *args,
-        n_log_buckets=4,
-    ) is True
-    assert os.path.exists(os.path.join(store, "SCD2_META.json"))
     # (2) external log loss: CURRENT present, slices gone → loud, and
     # the standing history is left untouched
     shutil.rmtree(os.path.join(store, "log"))
@@ -2127,13 +2109,11 @@ def test_scd2_store_guards_bucket_count_and_lost_log(spark, tmp_path):
     assert os.path.isdir(os.path.join(store, "hist"))
 
 
-def test_scd2_presidecar_adoption_rejects_undercount_layout(spark, tmp_path):
-    """Round-15 ADVICE fix: the pre-sidecar adoption cross-check is now
-    two-directional. A store built with 2 buckets whose sidecar is lost
-    must NOT adopt a first caller claiming 4 (all observed _kb fit the
-    larger modulus too, but h%2 and h%4 disagree on half of all hashes
-    — the exact mis-pruning the guard exists for). Re-adopting the true
-    smaller count still works and re-bootstraps the sidecar."""
+def test_scd2_store_without_meta_fails_loudly(spark, tmp_path):
+    """A store holding _kb= buckets but no SCD2_META.json predates the
+    meta file (every fold writes it before its first slice): its bucket
+    count cannot be checked, so a fold raises and asks for a rebuild
+    instead of adopting the caller's count, and writes no meta."""
     import os
 
     import pytest
@@ -2148,243 +2128,21 @@ def test_scd2_presidecar_adoption_rejects_undercount_layout(spark, tmp_path):
             rows, "user_id bigint, state string, ts string, seq bigint",
         ).withColumn("ts", F.col("ts").cast("timestamp"))
 
-    store = str(tmp_path / "store2")
+    store = str(tmp_path / "store")
     args = (["user_id"], ["state"], "ts", ["seq"])
-    # enough entities to populate both %2 buckets
-    batch = [(i, "a", "2026-01-01 00:00:00", 1) for i in range(1, 9)]
+    meta = os.path.join(store, "SCD2_META.json")
     assert fold_scd2_batch(
-        spark, store, mk(batch), 1, *args, n_log_buckets=2,
+        spark, store, mk([(1, "a", "2026-01-01 00:00:00", 1)]), 1, *args,
+        n_log_buckets=4,
     ) is True
-    os.remove(os.path.join(store, "SCD2_META.json"))
-    with pytest.raises(ValueError, match="BUILT with 2"):
+    os.remove(meta)
+    with pytest.raises(ValueError, match="rebuild the store"):
         fold_scd2_batch(
             spark, store, mk([(1, "b", "2026-01-02 00:00:00", 2)]), 2,
             *args, n_log_buckets=4,
         )
-    # the true count re-adopts and re-bootstraps the sidecar
-    assert fold_scd2_batch(
-        spark, store, mk([(1, "b", "2026-01-02 00:00:00", 2)]), 2,
-        *args, n_log_buckets=2,
-    ) is True
-    assert os.path.exists(os.path.join(store, "SCD2_META.json"))
-
-
-def test_scd2_presidecar_sparse_store_warns_not_raises(spark, tmp_path):
-    """Round-16 ADVICE fix: the inverse (undercount) pre-sidecar check
-    is gated on min(_SCD2_INVERSE_MIN_DISTINCT, m) distinct observed
-    _kb ids. A legitimately-built n=4 store whose ONE entity happens to
-    hash below the dividing modulus 2 must not hard-fail its first
-    post-sidecar-loss fold: it WARNS, folds with the caller's value,
-    and refuses to pin the ambiguous count in the sidecar (so a later,
-    better-populated fold can still resolve it)."""
-    import os
-    import warnings
-
-    from pyspark.sql import functions as F
-
-    from priority_data_pipeline_azure_sql_db_spark.streaming.sink import (
-        fold_scd2_batch,
-        read_scd2_store,
-    )
-
-    # pick a user_id whose pmod(xxhash64, 4) bucket is 0 or 1 — i.e.
-    # it also fits the smaller dividing modulus 2 (the ambiguous case)
-    ids = spark.range(1, 64).select(
-        "id", F.pmod(F.xxhash64(F.col("id")), F.lit(4)).alias("kb"),
-    ).where(F.col("kb") < 2).limit(1).collect()
-    uid = int(ids[0]["id"])
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "user_id bigint, state string, ts string, seq bigint",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    store = str(tmp_path / "sparse_store")
-    args = (["user_id"], ["state"], "ts", ["seq"])
-    assert fold_scd2_batch(
-        spark, store, mk([(uid, "a", "2026-01-01 00:00:00", 1)]), 1,
-        *args, n_log_buckets=4,
-    ) is True
-    os.remove(os.path.join(store, "SCD2_META.json"))
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        assert fold_scd2_batch(
-            spark, store, mk([(uid, "b", "2026-01-02 00:00:00", 2)]), 2,
-            *args, n_log_buckets=4,
-        ) is True
-    assert any("too sparse" in str(w.message) for w in caught), \
-        [str(w.message) for w in caught]
-    # the ambiguous count is NOT pinned — no sidecar until resolved
-    assert not os.path.exists(os.path.join(store, "SCD2_META.json"))
-    hist = read_scd2_store(spark, store)
-    states = sorted(r.state for r in hist.collect())
-    assert states == ["a", "b"], "the warned fold must still land"
-
-
-def test_scd2_ambiguous_adoption_marker_and_conflict(
-        spark, tmp_path, caplog):
-    """Round-17 ADVICE hardening: each ambiguous pre-sidecar adoption
-    is recorded in a non-authoritative ``.ambiguous.jsonl`` marker and
-    emitted through ``logging`` (batch jobs swallow warnings.warn); a
-    later ambiguous fold under a CONFLICTING count raises (two
-    different counts folded into the same sparse store means at least
-    one mis-bucketed); the first unambiguous sidecar write clears the
-    marker."""
-    import json
-    import logging
-    import os
-    import warnings
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from priority_data_pipeline_azure_sql_db_spark.streaming.sink import (
-        fold_scd2_batch,
-    )
-
-    # one id hashing below the dividing modulus 2 (ambiguous under
-    # n=4 and n=8), one hashing into {2,3} (resolves the layout at n=4)
-    rows = spark.range(1, 256).select(
-        "id", F.pmod(F.xxhash64(F.col("id")), F.lit(4)).alias("kb"),
-    ).collect()
-    uid_low = int(next(r["id"] for r in rows if r["kb"] < 2))
-    uid_high = int(next(r["id"] for r in rows if r["kb"] >= 2))
-
-    def mk(recs):
-        return spark.createDataFrame(
-            recs, "user_id bigint, state string, ts string, seq bigint",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    store = str(tmp_path / "marker_store")
-    meta = os.path.join(store, "SCD2_META.json")
-    marker = meta + ".ambiguous.jsonl"
-    args = (["user_id"], ["state"], "ts", ["seq"])
-    assert fold_scd2_batch(
-        spark, store, mk([(uid_low, "a", "2026-01-01 00:00:00", 1)]), 1,
-        *args, n_log_buckets=4,
-    ) is True
-    os.remove(meta)
-
-    # ambiguous fold #1: warns, logs, records adopted=4 in the marker
-    with warnings.catch_warnings(record=True) as caught, \
-            caplog.at_level(logging.WARNING):
-        warnings.simplefilter("always")
-        assert fold_scd2_batch(
-            spark, store, mk([(uid_low, "b", "2026-01-02 00:00:00", 2)]),
-            2, *args, n_log_buckets=4,
-        ) is True
-    assert any("too sparse" in str(w.message) for w in caught)
-    assert any("too sparse" in r.getMessage() for r in caplog.records), \
-        "ambiguous adoption must also go through logging"
-    with open(marker) as fh:
-        recorded = [json.loads(ln) for ln in fh if ln.strip()]
-    assert [r["adopted"] for r in recorded] == [4]
     assert not os.path.exists(meta)
-
-    # ambiguous fold under a CONFLICTING count: hard fail
-    with pytest.raises(ValueError, match="ambiguous"):
-        fold_scd2_batch(
-            spark, store, mk([(uid_low, "c", "2026-01-03 00:00:00", 3)]),
-            3, *args, n_log_buckets=8,
-        )
-
-    # same-count ambiguous re-fold still allowed (appends, no raise)
-    with warnings.catch_warnings(record=True):
-        warnings.simplefilter("always")
-        assert fold_scd2_batch(
-            spark, store, mk([(uid_low, "c", "2026-01-03 00:00:00", 3)]),
-            3, *args, n_log_buckets=4,
-        ) is True
-    with open(marker) as fh:
-        assert len([ln for ln in fh if ln.strip()]) == 2
-
-    # fold an id landing in _kb>=2 (the meta check runs BEFORE the
-    # fold's rows land, so THIS fold is still ambiguous — 3rd marker
-    # line — but the layout it leaves behind is unambiguous at n=4)
-    with warnings.catch_warnings(record=True):
-        warnings.simplefilter("always")
-        assert fold_scd2_batch(
-            spark, store, mk([(uid_high, "x", "2026-01-04 00:00:00", 4)]),
-            4, *args, n_log_buckets=4,
-        ) is True
-    assert not os.path.exists(meta)
-    # ... and the NEXT fold sees _kb>=2, clears the ambiguity, writes
-    # the sidecar, and removes the marker
-    assert fold_scd2_batch(
-        spark, store, mk([(uid_high, "y", "2026-01-05 00:00:00", 5)]), 5,
-        *args, n_log_buckets=4,
-    ) is True
-    assert os.path.exists(meta)
-    assert not os.path.exists(marker)
-
-
-def test_scd2_ambiguous_marker_tolerates_torn_line(
-        spark, tmp_path, caplog):
-    """Round-18 ADVICE fix: the ``.ambiguous.jsonl`` marker is appended
-    without atomicity, so a crash mid-append can leave a torn last
-    line. Reading the non-authoritative marker must skip that line with
-    a logged warning — not fail every subsequent fold with an opaque
-    JSONDecodeError — while the intact lines keep driving the
-    conflicting-count raise."""
-    import logging
-    import os
-    import warnings
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from priority_data_pipeline_azure_sql_db_spark.streaming.sink import (
-        fold_scd2_batch,
-    )
-
-    rows = spark.range(1, 256).select(
-        "id", F.pmod(F.xxhash64(F.col("id")), F.lit(4)).alias("kb"),
-    ).collect()
-    uid_low = int(next(r["id"] for r in rows if r["kb"] < 2))
-
-    def mk(recs):
-        return spark.createDataFrame(
-            recs, "user_id bigint, state string, ts string, seq bigint",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    store = str(tmp_path / "torn_marker_store")
-    meta = os.path.join(store, "SCD2_META.json")
-    marker = meta + ".ambiguous.jsonl"
-    args = (["user_id"], ["state"], "ts", ["seq"])
-    assert fold_scd2_batch(
-        spark, store, mk([(uid_low, "a", "2026-01-01 00:00:00", 1)]), 1,
-        *args, n_log_buckets=4,
-    ) is True
-    os.remove(meta)
-    with warnings.catch_warnings(record=True):
-        warnings.simplefilter("always")
-        assert fold_scd2_batch(
-            spark, store, mk([(uid_low, "b", "2026-01-02 00:00:00", 2)]),
-            2, *args, n_log_buckets=4,
-        ) is True
-    # simulate a crash mid-append: a torn (truncated, unparseable)
-    # trailing record
-    with open(marker, "a") as fh:
-        fh.write('{"adopted": 8, "distinct_')
-
-    # same-count ambiguous re-fold: must NOT raise JSONDecodeError;
-    # the torn line is skipped with a logged warning
-    with warnings.catch_warnings(record=True), \
-            caplog.at_level(logging.WARNING):
-        warnings.simplefilter("always")
-        assert fold_scd2_batch(
-            spark, store, mk([(uid_low, "c", "2026-01-03 00:00:00", 3)]),
-            3, *args, n_log_buckets=4,
-        ) is True
-    assert any("malformed" in r.getMessage() for r in caplog.records), \
-        "the skipped torn line must be logged"
-
-    # the intact recorded adoption (4) still drives the conflict raise
-    with pytest.raises(ValueError, match="ambiguous"):
-        fold_scd2_batch(
-            spark, store, mk([(uid_low, "d", "2026-01-04 00:00:00", 4)]),
-            4, *args, n_log_buckets=8,
-        )
+    assert not os.path.exists(os.path.join(store, "log", "batch_2"))
 
 
 def test_ann_index_empty_build_fails_loud(spark, tmp_path):

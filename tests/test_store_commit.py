@@ -36,7 +36,7 @@ def _staging(spark, root):
 
     def setup():
         store.overwrite(_stamped(spark, [(i, f"old{i}", 1 + i % 2)
-                                         for i in range(12)]), "t", pk=["pk"])
+                                         for i in range(12)]), "t")
 
     def write():
         # updates in both standing partitions, an insert into a third
@@ -46,9 +46,10 @@ def _staging(spark, root):
     def touch():
         return sorted((r.pk, r.v) for r in store.read(spark, "t").collect())
 
-    def extra():  # the sidecar set from the intent
+    def extra():  # the zone maps folded from the live footers
+        parts = StagingStore._fold_footers(store.path("t"), ["pk"])[0]
         return {sub: (st["rows"], st["min"], st["max"])
-                for sub, st in store._read_meta("t")["parts"].items()}
+                for sub, st in parts.items()}
 
     return dict(setup=setup, write=write, touch=touch, extra=extra,
                 expect={"_load_date=2026-01-01": (5, 0, 10),

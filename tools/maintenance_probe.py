@@ -297,15 +297,14 @@ def main() -> None:
     # ---- staging MERGE: fixed 100-row delta touching ONE partition --
     per = {}
     for k in SCALES:
-        # _v2: round-13 layout — pk at seed time builds the partition-
-        # stats sidecar, so every timed merge runs the zone-map-pruned
-        # old-version probe (the production steady state)
+        # _v2: round-13 layout — every timed merge runs the
+        # zone-map-pruned old-version probe (the production steady
+        # state), its zone maps folded from the live parquet footers
         wh = os.path.join(root, f"staging_v2_x{k}")
         stg = StagingStore(wh)
         if not stg.exists("events"):
             stg.overwrite(
-                spark.read.parquet(f"{dirs[k]}/staging.parquet"), "events",
-                pk=["event_id"])
+                spark.read.parquet(f"{dirs[k]}/staging.parquet"), "events")
         best = math.inf
         for a in range(ATTEMPTS):
             delta = spark.createDataFrame(
